@@ -1,27 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // v2 committer: task-side renames instead of a sequential job-commit
-      // rename per partition dir — the table-scenario gates write dozens
-      // of small partition dirs per commit and the v1 job commit is pure
-      // driver-side latency there
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.create(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/parquet-footer paths so the first timed query
     // measures the operator, not session startup. The shuffle+scan warm
     // queries absorb the whole-stage-codegen/exchange/vectorized-reader
-    // first-use costs (~1 s combined; see tools/Q24Probe findings — the
+    // first-use costs (~1 s combined; the Q24Probe findings,
+    // `git show d6f4c32:src/main/scala/graft/tools/Q24Probe.scala` — the
     // q24 "band breach" was exactly this cold cost landing on whichever
     // small query ran first).
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -39,8 +27,10 @@ object Bench {
     // measured 540.7 s vs 644.6 s suite-total across runs and ±2× per
     // gate — cold-JIT + oversubscribed-vCPU jitter, not regressions. The
     // warm min is the number regression triage should read (the Q244Probe
-    // finding, generalized); the cold number stays the headline so
-    // cross-round comparisons keep one convention.
+    // finding, generalized: `git show
+    // d6f4c32:src/main/scala/graft/tools/Q244Probe.scala`); the cold
+    // number stays the headline so cross-round comparisons keep one
+    // convention.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .map(_.toInt).getOrElse(1).max(1)
     var errors = List.empty[(String, String)]

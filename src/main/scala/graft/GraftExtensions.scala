@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * (or `withExtensions(new GraftExtensions)` while building the session).
   * Sessions built this way — including pure-SQL ones (Thrift server,
   * `spark.sql(...)` notebooks) — see `graft_xxhash64_0`, the e9 vector
   * kernels, the PQ kernels, the sketch aggregates, etc. without any

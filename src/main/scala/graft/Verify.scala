@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -10,6 +9,9 @@ import java.nio.file.{Files, Paths}
   * means more queries get a recorded correctness row). Batches are
   * awaited before `clearCache`/`cleanupQueryTmp` so one query's persisted
   * frames and temp roots are never yanked from under a concurrent one.
+  * Each batch runs on [[Overlap.inParallel]]; a query's failure is caught
+  * and reported inside its own task, so one failing query never cancels
+  * its batch.
   */
 object Verify {
 
@@ -33,36 +35,17 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // optional 3rd arg: comma-separated query-name filter (dev iteration)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    // With the DuckDB compare down to ~41 s (MATERIALIZED CTEs), the
-    // Spark dump dominates the driver's time-boxed sweep — default to
-    // wider cores/batches when the env doesn't pin them (measured green
-    // at 16/6 on the 128 GiB container; env overrides still win).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "6").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // pinned globally so UpsertTable's set-and-restore of the same
-      // value is a no-op — a concurrent batch must never observe the
-      // static overwrite semantics mid-flight
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // v2 committer — see Bench.scala: cuts the sequential job-commit
-      // renames the multi-partition-dir table scenarios pay per commit
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Batch size: the helper overlaps at most 4 actions, so a batch of 4
+    // keeps every slot busy until the batch's slowest query.
+    val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt.max(1)
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .grouped(par).foreach { batch =>
-        val fs = batch.map { case (name, fn) =>
-          scala.concurrent.Future {
+        Overlap.inParallel(spark)(batch.map { case (name, fn) =>
+          () => {
             // One compact JSON progress line per dump, flushed as it
             // lands: a time-boxed/killed driver sweep still leaves
             // parseable per-query evidence in its log (rounds 10–11
@@ -81,13 +64,10 @@ object Verify {
               println(s"""{"q":"$name","ok":false,"error":"$m"}""")
             }
           }
-        }
-        fs.foreach(f => scala.concurrent.Await.ready(f,
-          scala.concurrent.duration.Duration.Inf))
+        }: _*)
         spark.catalog.clearCache()   // drop per-query persisted frames
         SparkEntry.cleanupQueryTmp() // reclaim per-query upsert/bucket roots
       }
-    pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

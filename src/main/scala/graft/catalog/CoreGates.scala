@@ -725,8 +725,8 @@ object CoreGates extends GateFamily {
 
     // The interval-tree operator in its HOME regime: 20 000 overlapping
     // ranges, where BroadcastNestedLoopJoin multiplies the fact scan by
-    // m — tools/IntervalAb measures 0.5 s (tree) vs 11.9 s (BNLJ) warm
-    // at sf0.1, ~20×; q307/q318 showed tiny-m constants favoring BNLJ,
+    // m — the IntervalAb probe measured 0.5 s (tree) vs 11.9 s (BNLJ)
+    // warm at sf0.1, ~20× (`git show d6f4c32:src/main/scala/graft/tools/IntervalAb.scala`); q307/q318 showed tiny-m constants favoring BNLJ,
     // this is the other side of that crossover. Probe cost is
     // O(log 20000 + ~2 matches) per fact; output re-aggregates per
     // range.

@@ -29,26 +29,6 @@ object GateSupport {
 
   private[graft] def cents(c: Column): Column = ContentMetrics.cents(c)
 
-  /** Run INDEPENDENT driver actions on overlapped threads (guide §2.6):
-    * Spark schedules concurrent jobs FIFO, so the later job's tasks
-    * back-fill executors freed by the earlier job's tail instead of
-    * waiting out the whole job. Only for actions with no ordering
-    * between them (e.g. the q217 fact/dim commits to two separate
-    * tables). Rethrows the first failure after all tasks settle. */
-  private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
-    if (tasks.lengthCompare(1) <= 0) { tasks.foreach(_.apply()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(tasks.length, 4))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(
-        tasks.map(t => scala.concurrent.Future(t()))),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
-    ()
-  }
-
   /** Shared record-linkage fixture (q343/q346/q347): customers vs a
     * deterministically perturbed copy — typo'd names (every 11th),
     * shifted balances (±1800 cents by key), corrupted segments (every
@@ -333,15 +313,17 @@ object GateSupport {
   /** Materialize-once q50/q209 upsert-table scenario over orders: c1 full
     * load, c2 price-update + k%13 delete, compaction, c3 resurrect slice —
     * built ONCE per data dir and read by both gates ([[btSupplierDuelsAndRatings]]
-    * pattern). The r15 UpsertProbe decomposition showed the 4-job write
-    * path (c1 1.29 + c2 1.63 + compact 1.65 + c3 1.52 = 6.1 s warm at
-    * sf0.1) was 75%+ of BOTH gates' walls while every read tail is
-    * sub-second — and q209 was rebuilding the exact table q50 had already
-    * built. A production lakehouse writes its table once and runs
-    * snapshot + time-travel reads off the same commit log; mirroring that
-    * retires one full redundant build per bench/verify session without
-    * touching either gate's semantics (commit seqs are deterministic:
-    * c1→1, c2→2, c3→3). Returns (table, s2, s3). */
+    * pattern). The r15 UpsertProbe decomposition
+    * (`git show d6f4c32:src/main/scala/graft/tools/UpsertProbe.scala`)
+    * showed the 4-job write path (c1 1.29 + c2 1.63 + compact 1.65 + c3
+    * 1.52 = 6.1 s warm at sf0.1) was 75%+ of BOTH gates' walls while
+    * every read tail is sub-second — and q209 was rebuilding the exact
+    * table q50 had already built. A production lakehouse writes its
+    * table once and runs snapshot + time-travel reads off the same
+    * commit log; mirroring that retires one full redundant build per
+    * bench/verify session without touching either gate's semantics
+    * (commit seqs are deterministic: c1→1, c2→2, c3→3). Returns
+    * (table, s2, s3). */
   private[graft] val upsertScenarioPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def ordersUpsertScenario(s: SparkSession,
       dir: String): (graft.sinks.UpsertTable, Long, Long) = {

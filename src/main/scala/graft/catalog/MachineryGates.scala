@@ -110,10 +110,10 @@ object MachineryGates extends GateFamily {
           col("price_cents")),
         s"$root/_ckpt")
       // fact and dim are separate tables with no ordering between their
-      // commits — overlap each round's two write jobs (r16, guide §2.6)
-      inParallel(() => { fact.upsert(f1); () }, () => { dim.upsert(d1); () })
+      // commits — overlap each round's two write jobs (r16)
+      Overlap.inParallel(s)(() => { fact.upsert(f1); () }, () => { dim.upsert(d1); () })
       djt.refresh(s)
-      inParallel(() => { fact.upsert(f2); () }, () => { dim.upsert(d2); () })
+      Overlap.inParallel(s)(() => { fact.upsert(f2); () }, () => { dim.upsert(d2); () })
       djt.refresh(s)
       view.snapshot(s).select("k", "cust", "segment", "price_cents")
     }),

@@ -12,13 +12,7 @@ import graft.sources.FakeLogGenerator
   */
 object JobRunner {
   def main(args: Array[String]): Unit = {
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    implicit val spark: SparkSession = graft.GraftSession.create()
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 

@@ -132,7 +132,12 @@ object StreamingJobs {
     * Commands carry the packed feature id in the key tail.
     *
     * Input contract: platformId, logUserId, userId, contentId, osFamily,
-    * agentFamily, metric (packed AggMetric long), tsMs. */
+    * agentFamily, metric (packed AggMetric long), tsMs.
+    *
+    * Stays on the `flatMapGroupsWithState` SlidingCounter by measurement:
+    * moved onto `SlidingCounterTws`, it about doubled the `features_live`
+    * benchmark's feature lag on a 4-core box (p50 2.6–3.2 s → 5.5 s,
+    * p95 3.5–4.4 s → 7.9 s). */
   def counterFamilies(events: DataFrame, client: Sinks.CommandClient,
       checkpointDir: String, emitMs: Long = 15 * 60 * 1000L,
       windowsMs: Seq[Long] = Seq(3600000L, 86400000L))(
@@ -355,7 +360,11 @@ object StreamingJobs {
   /** Counter job last-seen families: per (user, content) last timestamp +
     * rolling 90d count as HSET commands, with TTL-decrement re-emission
     * (the reference's LastTimeAndCount wiring,
-    * CounterJob.java:799-885). */
+    * CounterJob.java:799-885).
+    *
+    * Stays on `flatMapGroupsWithState` with [[counterFamilies]]: with
+    * both counter jobs on `transformWithState` the `features_live` lag
+    * was 5.7 s p50 / 7.9–8.3 s p95, about 2× the FMGWS pair. */
   def counterLastSeen(events: DataFrame, client: Sinks.CommandClient,
       checkpointDir: String, ttlDays: Int = 90)(
       implicit spark: SparkSession): StreamingQuery = {

@@ -586,7 +586,8 @@ object Graph {
     // variant, which itself beat the pre-r16 per-round sort-merge shape.
     // Explicit partition count: AQE would coalesce a bare keyed
     // repartition of a cache-sized frame to 1-2 partitions and
-    // serialize every downstream scan (the UpsertWriteProbe finding).
+    // serialize every downstream scan (the UpsertWriteProbe finding,
+    // `git show d6f4c32:src/main/scala/graft/tools/UpsertWriteProbe.scala`).
     val eByDst = e0.repartition(par, col("dst")).persist(mem)
     val eBySrc = eByDst.repartition(par, col("src")).persist(mem)
     var h = eBySrc.select(col("src").as("id")).distinct()

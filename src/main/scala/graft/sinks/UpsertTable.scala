@@ -181,7 +181,13 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
     * sees commit k+1 without commit k (the same prefix-visibility
     * sequential upserts give), and a failure publishes nothing. Batch
     * only commits with no read between them (the r16 maintenance-family
-    * optimization; guide §2.6 overlap-independent-jobs). */
+    * optimization).
+    *
+    * Failure: [[graft.Overlap.inParallel]] cancels the other writes and
+    * waits them out, then the call's temp dirs are deleted and `_seq`
+    * stays put. The temp dirs carry a per-call nonce, so a retry (which
+    * reissues the same seqs) never writes into, or publishes, a dir a
+    * cancelled write of an earlier call may still touch. */
   def upsertAll(dfs: Seq[DataFrame]): Seq[Long] = {
     if (dfs.isEmpty) return Nil
     val spark = dfs.head.sparkSession
@@ -197,6 +203,8 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
       writeSmallFile(spark, schemaPath, dfs.head
         .withColumn(CommitCol, lit(seqs.head).cast(LongType)).schema.json)
     dfs.foreach(validateSchema(spark, _))
+    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    def tmpDir(seq: Long) = new Path(f"$deltaPath/.tmp_c$seq%09d_$nonce")
     def writeTmp(df: DataFrame, seq: Long): Unit = {
       val stamped = df.withColumn(CommitCol, lit(seq).cast(LongType))
       // one output file per touched partition dir (maxRecordsPerFile
@@ -204,7 +212,8 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
       // files. The partition count is EXPLICIT (defaultParallelism):
       // a bare repartition(cols) lets AQE coalesce the commit's write
       // onto 1-2 tasks and the per-dir file writes serialize (measured
-      // 2.2 vs 0.6 s on a 1M-row 30-dir commit, r16 UpsertWriteProbe);
+      // 2.2 vs 0.6 s on a 1M-row 30-dir commit, r16 UpsertWriteProbe,
+      // `git show d6f4c32:src/main/scala/graft/tools/UpsertWriteProbe.scala`);
       // hashing on the partition cols alone still keeps each dir's rows
       // in exactly one task, so the one-file-per-dir contract holds.
       val sized =
@@ -215,24 +224,17 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
       val w = sized.write.mode("overwrite")
         .option("maxRecordsPerFile", maxRecordsPerFile)
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(f"$deltaPath/.tmp_c$seq%09d")
-    }
-    if (dfs.lengthCompare(1) == 0) writeTmp(dfs.head, seqs.head)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(dfs.length, 4))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(dfs.zip(seqs).map { case (df, seq) =>
-          scala.concurrent.Future(writeTmp(df, seq))
-        }), scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+        .parquet(tmpDir(seq).toString)
     }
     val f = fs(spark)
+    try graft.Overlap.inParallel(spark)(dfs.zip(seqs).map { case (df, seq) =>
+      () => writeTmp(df, seq) }: _*)
+    catch { case e: Throwable =>
+      seqs.foreach(seq => f.delete(tmpDir(seq), true))
+      throw e
+    }
     seqs.foreach { seq =>
-      require(f.rename(new Path(f"$deltaPath/.tmp_c$seq%09d"),
-        new Path(f"$deltaPath/c$seq%09d")),
+      require(f.rename(tmpDir(seq), new Path(f"$deltaPath/c$seq%09d")),
         s"rename failed publishing commit $seq")
     }
     writeSmallFile(spark, seqPath, seqs.last.toString)

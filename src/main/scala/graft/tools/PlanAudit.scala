@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of catalog queries —
   * the `.explain("formatted")` audit loop the build guide prescribes.
   * Usage: runMain graft.tools.PlanAudit <query>[,query...] [sfDir] */
@@ -9,14 +7,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       println(s"==== $name ====")

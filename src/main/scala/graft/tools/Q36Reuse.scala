@@ -1,15 +1,10 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.AtomicLong
 object Q36Reuse {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     val stages = new AtomicLong; val tasks = new AtomicLong
     val recs = new AtomicLong
