@@ -29,7 +29,14 @@ object Checkpoints {
 
   implicit class TruncateOps(private val df: DataFrame) extends AnyVal {
     /** Truncate lineage: reliable `checkpoint(eager)` when a checkpoint
-      * dir is configured, `localCheckpoint(eager)` otherwise. */
+      * dir is configured, `localCheckpoint(eager)` otherwise.
+      *
+      * Cost on the reliable path. Eager: the checkpoint job is the only
+      * evaluation of the sub-plan (Spark writes the files straight off
+      * the RDD, no separate action first). Lazy: the first action on the
+      * result evaluates the sub-plan and the checkpoint job that follows
+      * it evaluates it again, so a narrow sub-plan runs twice; one ending
+      * in a shuffle reuses its materialized shuffle and runs once. */
     def truncate(eager: Boolean = true): DataFrame =
       if (reliable(df)) df.checkpoint(eager) else df.localCheckpoint(eager)
   }

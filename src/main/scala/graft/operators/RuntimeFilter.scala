@@ -35,7 +35,14 @@ object RuntimeFilter {
 
   /** `fact` rows whose `factKey` passes a Bloom filter built from
     * `dim(dimKey)`. Purely a pre-filter: keeps all matching rows, plus a
-    * ~fpp fraction of non-matching ones. */
+    * ~fpp fraction of non-matching ones.
+    *
+    * Eager: this call runs a Spark job over `dim` at once (a `head()` of
+    * the one-row bitset) before returning, and the returned frame
+    * carries that bitset as a literal. It is therefore pinned to the
+    * `dim` snapshot read at call time: rows added to `dim` afterwards are
+    * not in the filter, and their fact matches are pruned away. Call it
+    * again after `dim` changes. */
   def bloomPrune(fact: DataFrame, factKey: String, dim: DataFrame,
       dimKey: String, numBits: Int, numHashes: Int): DataFrame = {
     BloomSketch.register(fact.sparkSession)

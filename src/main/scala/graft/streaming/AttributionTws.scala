@@ -2,18 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, ValueState}
 
 /** Streaming last-touch attribution — the continuous form of
   * [[graft.operators.Attribution.lastTouch]]: each conversion credits the
   * user's latest STRICTLY-earlier touch within the lookback, online.
   *
-  * Order discipline (the [[CusumTws]] rule): attribution reads "latest
-  * touch so far", a left fold over event time, so out-of-order rows
-  * CANNOT be folded on arrival. Events buffer in a ListState until the
-  * watermark passes them, then fold in event-time order. The strictly-
-  * earlier rule is enforced by VALUE (touch_ts ≤ conv_ts − 1 at credit
+  * Order discipline (the [[WatermarkOrderedFold]] rule): attribution
+  * reads "latest touch so far", a left fold over event time, so
+  * out-of-order rows CANNOT be folded on arrival. Events wait in the
+  * reorder buffer until the watermark passes them, then fold in
+  * event-time order. The strictly-earlier rule is enforced by VALUE (touch_ts ≤ conv_ts − 1 at credit
   * time), and the state update keeps the smallest touch id among
   * equal-timestamp touches — both decisions are arrival-order-free, which
   * is what makes streaming ≡ batch exact (AttributionTwsSpec pins the
@@ -40,22 +39,19 @@ object AttributionTws {
       emittedAt: java.sql.Timestamp)
 
   class Processor(lookbackMs: Long, stateTtlMs: Long)
-      extends StatefulProcessor[String, Event, Credit] {
+      extends WatermarkOrderedFold[Event, Credit] {
     @transient private var lastTouch: ValueState[Touch] = _
     @transient private var seq: ValueState[Long] = _
-    @transient private var pending: ListState[Event] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit = {
       lastTouch = getHandle.getValueState[Touch]("lastTouch",
-        Encoders.product[Touch], org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.product[Touch], TTLConfig.NONE)
       seq = getHandle.getValueState[Long]("seq", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      pending = getHandle.getListState[Event]("pending",
-        Encoders.product[Event], org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
     }
+
+    override protected def rowEncoder = Encoders.product[Event]
+    override protected def eventTimeMs(e: Event): Long = e.tsMs
 
     private def nextSeq(): Long = {
       val n = (if (seq.exists()) seq.get() else 0L) + 1L
@@ -63,17 +59,11 @@ object AttributionTws {
       n
     }
 
-    /** Fold every buffered event the watermark has passed, in event-time
-      * order; conversions read the latest-touch state BY VALUE (strictly
-      * earlier + lookback), so same-millisecond touches are invisible to
-      * them no matter the fold order at equal ts. */
-    private def drain(key: String, wmMs: Long): Iterator[Credit] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) { expire(wmMs); return Iterator.empty }
-      pending.clear()
-      later.foreach(pending.appendValue)
-      val emitAt = new java.sql.Timestamp(wmMs)
+    /** Conversions read the latest-touch state BY VALUE (strictly earlier
+      * + lookback), so same-millisecond touches are invisible to them no
+      * matter the fold order at equal ts. */
+    override protected def fold(key: String, due: Seq[Event],
+        emittedAt: java.sql.Timestamp): Seq[Credit] = {
       val out = Seq.newBuilder[Credit]
       // (tsMs, isTouch, id): at equal ts conversions fold first — they
       // cannot see an equal-ts touch anyway; ids order equal peers
@@ -89,57 +79,20 @@ object AttributionTws {
             c.tsMs <= e.tsMs - 1 && c.tsMs >= e.tsMs - lookbackMs)
           out += (hit match {
             case Some(c) => Credit(key, e.id, e.tsMs, c.id, c.tsMs,
-              e.tsMs - c.tsMs, attributed = true, nextSeq(), emitAt)
+              e.tsMs - c.tsMs, attributed = true, nextSeq(), emittedAt)
             case None => Credit(key, e.id, e.tsMs, -1L, -1L, -1L,
-              attributed = false, nextSeq(), emitAt)
+              attributed = false, nextSeq(), emittedAt)
           })
         }
       }
-      expire(wmMs)
-      out.result().iterator
+      out.result()
     }
 
     /** Clear the touch record once no in-watermark conversion can still
       * reach back to it. */
-    private def expire(wmMs: Long): Unit =
+    override protected def expire(wmMs: Long): Unit =
       if (wmMs != Long.MinValue && lastTouch.exists() &&
         lastTouch.get().tsMs < wmMs - stateTtlMs) lastTouch.clear()
-
-    /** One timer per key at watermark+1 while anything is buffered (the
-      * [[CusumTws]] release valve for keys whose watermark advances with
-      * no further rows). */
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[Credit] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Credit] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
   }
 
   /** Attribute a keyed touch/conversion stream. Output watermark rides

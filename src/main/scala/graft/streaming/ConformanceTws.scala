@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
-  OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig,
+  ValueState}
 
 /** Streaming directly-follows conformance monitor — the continuous form
   * of [[graft.operators.ProcessMining.dfgConformanceE6]] (van der Aalst
@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
   * the inter-stage event time is stage 1's `emittedAt` release time):
   *
   *  1. keyed by CASE: directly-follows is an ORDER notion, so events
-  *     buffer in a ListState until the watermark passes them (the
-  *     [[CusumTws]] reorder rule), then fold in (tsMs, tieBreak) order;
+  *     wait in the [[WatermarkOrderedFold]] reorder buffer until the
+  *     watermark passes them, then fold in (tsMs, tieBreak) order;
   *     the case's last drained activity persists across drains, so each
   *     consecutive pair emits exactly one [[Transition]] — streaming
   *     transitions ≡ the batch per-case lead() census on the same data.
@@ -45,107 +45,54 @@ object ConformanceTws {
       offModelShareE6: Long, emittedAt: java.sql.Timestamp)
 
   /** Stage 1: per-case watermark-ordered fold to transitions. */
-  class CaseProcessor
-      extends StatefulProcessor[String, CaseEvent, Transition] {
+  class CaseProcessor extends WatermarkOrderedFold[CaseEvent, Transition] {
     @transient private var lastAct: ValueState[String] = _
-    @transient private var pending: ListState[CaseEvent] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit =
       lastAct = getHandle.getValueState[String]("lastAct", Encoders.STRING,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      pending = getHandle.getListState[CaseEvent]("pending",
-        Encoders.product[CaseEvent],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
+        TTLConfig.NONE)
 
-    private def drain(key: String, wmMs: Long): Iterator[Transition] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def rowEncoder = Encoders.product[CaseEvent]
+    override protected def eventTimeMs(e: CaseEvent): Long = e.tsMs
+
+    override protected def fold(key: String, due: Seq[CaseEvent],
+        emittedAt: java.sql.Timestamp): Seq[Transition] = {
       var prev = Option(if (lastAct.exists()) lastAct.get() else null)
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due.sortBy(e => (e.tsMs, e.tieBreak)).flatMap { e =>
         val t = prev.map(p =>
-          Transition(key, p, e.activity, e.tsMs, emitAt))
+          Transition(key, p, e.activity, e.tsMs, emittedAt))
         prev = Some(e.activity)
         t
       }
       prev.foreach(lastAct.update)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[CaseEvent],
-        timerValues: TimerValues): Iterator[Transition] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Transition] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
       out
     }
   }
 
   /** Stage 2: global fold of transitions into the running census. */
   class CensusProcessor(model: Set[(String, String)])
-      extends StatefulProcessor[String, Transition, ConformancePoint] {
-    @transient private var pendingS: ListState[Transition] = _
+      extends WatermarkOrderedFold[Transition, ConformancePoint] {
     @transient private var edges: MapState[String, Long] = _
     @transient private var nTrans: ValueState[Long] = _
     @transient private var nOff: ValueState[Long] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pendingS = getHandle.getListState[Transition]("pending",
-        Encoders.product[Transition],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+    override protected def initState(): Unit = {
       edges = getHandle.getMapState[String, Long]("edges",
-        Encoders.STRING, Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
       nTrans = getHandle.getValueState[Long]("nTrans", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
       nOff = getHandle.getValueState[Long]("nOff", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
     }
 
-    private def drain(wmMs: Long): Iterator[ConformancePoint] = {
-      val all = pendingS.get().toSeq
-      val (due, later) = all.partition(_.emittedAt.getTime <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pendingS.clear()
-      later.foreach(pendingS.appendValue)
+    override protected def rowEncoder = Encoders.product[Transition]
+    override protected def eventTimeMs(t: Transition): Long =
+      t.emittedAt.getTime
+
+    override protected def fold(key: String, due: Seq[Transition],
+        emittedAt: java.sql.Timestamp): Seq[ConformancePoint] = {
       var n = if (nTrans.exists()) nTrans.get() else 0L
       var off = if (nOff.exists()) nOff.get() else 0L
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due
         .sortBy(t => (t.atMs, t.caseId, t.fromAct, t.toAct))
         .map { t =>
@@ -156,43 +103,10 @@ object ConformanceTws {
           n += 1
           if (!ok) off += 1
           ConformancePoint(t.fromAct, t.toAct, en, ok, n, off,
-            off * 1000000L / n, emitAt)
+            off * 1000000L / n, emittedAt)
         }
       nTrans.update(n)
       nOff.update(off)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pendingS.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Transition],
-        timerValues: TimerValues): Iterator[ConformancePoint] = {
-      rows.foreach(pendingS.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[ConformancePoint] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, ValueState}
 
 /** Streaming one-sided CUSUM drift monitor — the continuous form of
   * [[graft.operators.Anomaly.cusumDrift]], with the KNOWN-target
@@ -12,8 +11,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   * per-key empirical mean needs the whole series and is a backtest).
   *
   * Order discipline: CUSUM is a left fold, so out-of-order events CANNOT
-  * be folded on arrival. Rows buffer in a ListState until the watermark
-  * passes them (the [[InferredJoinTws]] buffering rule), then fold in
+  * be folded on arrival. Rows wait in the [[WatermarkOrderedFold]]
+  * reorder buffer until the watermark passes them, then fold in
   * (tsMs, vE6) order — the same total order the batch window form sorts
   * by, which is what makes streaming ≡ batch exact (CusumTwsSpec pins
   * it). State per key: one running S + the in-flight reorder buffer,
@@ -31,77 +30,31 @@ object CusumTws {
       alarmed: Boolean, seq: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(targetE6: Long, slackE6: Long, thresholdE6: Long)
-      extends StatefulProcessor[String, Event, Point] {
+      extends WatermarkOrderedFold[Event, Point] {
     @transient private var s: ValueState[Long] = _
     @transient private var seq: ValueState[Long] = _
-    @transient private var pending: ListState[Event] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit = {
       s = getHandle.getValueState[Long]("s", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
       seq = getHandle.getValueState[Long]("seq", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      pending = getHandle.getListState[Event]("pending",
-        Encoders.product[Event], org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
     }
 
-    /** Fold every buffered event the watermark has passed, in event-time
-      * order; keep the rest buffered. */
-    private def drain(wmMs: Long): Iterator[Point] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def rowEncoder = Encoders.product[Event]
+    override protected def eventTimeMs(e: Event): Long = e.tsMs
+
+    override protected def fold(key: String, due: Seq[Event],
+        emittedAt: java.sql.Timestamp): Seq[Point] = {
       var cur = if (s.exists()) s.get() else 0L
       var n = if (seq.exists()) seq.get() else 0L
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due.sortBy(e => (e.tsMs, e.vE6)).map { e =>
         cur = math.max(0L, cur + e.vE6 - targetE6 - slackE6)
         n += 1
-        Point(e.key, e.tsMs, e.vE6, cur, cur > thresholdE6, n, emitAt)
+        Point(e.key, e.tsMs, e.vE6, cur, cur > thresholdE6, n, emittedAt)
       }
       s.update(cur)
       seq.update(n)
-      out.iterator
-    }
-
-    /** One timer per key at watermark+1 while anything is buffered, so
-      * late-arriving watermark advances (no new rows for this key) still
-      * release the buffer. */
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[Point] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Point] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
-  OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig,
+  ValueState}
 
 /** Online Elo ratings as a continuous monitor — the streaming form of
   * [[graft.operators.Preference.eloRatings]] (r15 verdict item 4): a
@@ -14,9 +14,9 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
   *
   * Elo state is GLOBAL (each update reads both players' current
   * ratings), so the processor is keyed by the constant leaderboard key —
-  * the [[ConformanceTws]] census-stage shape. Matches buffer in a
-  * ListState until the watermark passes them (the CusumTws reorder
-  * rule) and drain in (tsMs, tieBreak) order — deterministic across
+  * the [[ConformanceTws]] census-stage shape. Matches wait in the
+  * [[WatermarkOrderedFold]] reorder buffer until the watermark passes
+  * them and drain in (tsMs, tieBreak) order — deterministic across
   * triggers — so the trajectory is the batch fold's trajectory exactly:
   * the update arithmetic is the SHARED `Preference.eloDelta` (one
   * pow(10, Δ/400) on integer rating diffs, ⌊x+0.5⌋-pinned expected
@@ -38,37 +38,26 @@ object EloTws {
       emittedAt: java.sql.Timestamp)
 
   class EloProcessor(kFactor: Long, initialRating: Long)
-      extends StatefulProcessor[String, MatchEvent, EloPoint] {
-    @transient private var pending: ListState[MatchEvent] = _
+      extends WatermarkOrderedFold[MatchEvent, EloPoint] {
     @transient private var ratings: MapState[Long, Long] = _
     @transient private var counts: MapState[Long, Long] = _
     @transient private var nMatches: ValueState[Long] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState[MatchEvent]("pending",
-        Encoders.product[MatchEvent],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+    override protected def initState(): Unit = {
       ratings = getHandle.getMapState[Long, Long]("ratings",
-        Encoders.scalaLong, Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
       counts = getHandle.getMapState[Long, Long]("counts",
-        Encoders.scalaLong, Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
       nMatches = getHandle.getValueState[Long]("nMatches",
-        Encoders.scalaLong, org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt",
-        Encoders.scalaLong, org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    private def drain(wmMs: Long): Iterator[EloPoint] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def rowEncoder = Encoders.product[MatchEvent]
+    override protected def eventTimeMs(m: MatchEvent): Long = m.tsMs
+
+    override protected def fold(key: String, due: Seq[MatchEvent],
+        emittedAt: java.sql.Timestamp): Seq[EloPoint] = {
       var n = if (nMatches.exists()) nMatches.get() else 0L
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due
         .sortBy(m => (m.tsMs, m.tieBreak))
         .flatMap { m =>
@@ -85,43 +74,10 @@ object EloTws {
             counts.updateValue(l, Option(counts.getValue(l)).getOrElse(0L) + 1L)
             n += 1
             Some(EloPoint(m.tsMs, m.tieBreak, w, l, rw + d, rl - d, n,
-              emitAt))
+              emittedAt))
           }
         }
       nMatches.update(n)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[MatchEvent],
-        timerValues: TimerValues): Iterator[EloPoint] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[EloPoint] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
-  OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
+  ValueState}
 
 /** Streaming annotator-agreement monitor — Fleiss' κ (Fleiss 1971) over a
   * growing rating stream, the continuous form of
@@ -100,41 +101,32 @@ object FleissKappaTws {
 
   /** Stage 2: global fold of closed items into the running κ. */
   class KappaProcessor(m: Int)
-      extends StatefulProcessor[String, ItemClosed, KappaPoint] {
-    @transient private var pendingS: ListState[ItemClosed] = _
+      extends WatermarkOrderedFold[ItemClosed, KappaPoint] {
     @transient private var nItems: ValueState[Long] = _
     @transient private var nDropped: ValueState[Long] = _
     @transient private var pbarNum: ValueState[Long] = _
     @transient private var marginals: MapState[String, Long] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pendingS = getHandle.getListState[ItemClosed]("pending",
-        Encoders.product[ItemClosed],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+    override protected def initState(): Unit = {
       nItems = getHandle.getValueState[Long]("nItems", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
       nDropped = getHandle.getValueState[Long]("nDropped",
-        Encoders.scalaLong, org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.scalaLong, TTLConfig.NONE)
       pbarNum = getHandle.getValueState[Long]("pbarNum", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
       marginals = getHandle.getMapState[String, Long]("marginals",
-        Encoders.STRING, Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    private def drain(wmMs: Long): Iterator[KappaPoint] = {
-      val all = pendingS.get().toSeq
-      val (due, later) = all.partition(_.emittedAt.getTime <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pendingS.clear()
-      later.foreach(pendingS.appendValue)
+    override protected def rowEncoder = Encoders.product[ItemClosed]
+    override protected def eventTimeMs(c: ItemClosed): Long =
+      c.emittedAt.getTime
+
+    override protected def fold(key: String, due: Seq[ItemClosed],
+        emittedAt: java.sql.Timestamp): Seq[KappaPoint] = {
       var n = if (nItems.exists()) nItems.get() else 0L
       var nd = if (nDropped.exists()) nDropped.get() else 0L
       var pb = if (pbarNum.exists()) pbarNum.get() else 0L
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due.sortBy(c => (c.closedAtMs, c.item)).map { c =>
         if (!c.complete) nd += 1
         else {
@@ -158,42 +150,10 @@ object FleissKappaTws {
             Some(((BigInt(pb) * s2 - pe * s1) * 1000000 /
               (s1 * (s2 - pe))).toLong)
           else None
-        KappaPoint(c.item, c.complete, n, nd, pbarE6, peE6, kappaE6, emitAt)
+        KappaPoint(c.item, c.complete, n, nd, pbarE6, peE6, kappaE6,
+          emittedAt)
       }
       nItems.update(n); nDropped.update(nd); pbarNum.update(pb)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pendingS.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[ItemClosed],
-        timerValues: TimerValues): Iterator[KappaPoint] = {
-      rows.foreach(pendingS.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[KappaPoint] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }

@@ -2,22 +2,20 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, ValueState}
 
 /** Streaming Holt double-exponential smoothing — the continuous form of
   * [[graft.operators.Trend.holtLinear]]: each key carries a live
   * (level, trend) pair and every processed observation emits the updated
   * one-step forecast, the online "where is this metric heading" readout.
   *
-  * Order discipline: the Holt recursion is a left fold, so rows buffer in
-  * a ListState until the watermark passes them (the [[CusumTws]] /
-  * [[InferredJoinTws]] buffering rule) and fold in (orderKey, y) order —
-  * the same total order batch `holtLinear` sorts by, which is what makes
-  * streaming ≡ batch EXACT: all arithmetic is the identical pure-BIGINT
-  * integer-ratio recursion with truncating division per step
-  * (HoltTwsSpec pins final state against the batch operator
-  * bit-for-bit).
+  * Order discipline: the Holt recursion is a left fold, so rows wait in
+  * the [[WatermarkOrderedFold]] reorder buffer until the watermark passes
+  * them and fold in (orderKey, y) order — the same total order batch
+  * `holtLinear` sorts by, which is what makes streaming ≡ batch EXACT:
+  * all arithmetic is the identical pure-BIGINT integer-ratio recursion
+  * with truncating division per step (HoltTwsSpec pins final state
+  * against the batch operator bit-for-bit).
   *
   * State per key: two longs + a fold counter + the in-flight reorder
   * buffer, pruned on every drain — bounded by the watermark delay,
@@ -35,31 +33,22 @@ object HoltTws {
   private case class St(level: Long, trend: Long, n: Long)
 
   class Processor(alphaNum: Long, betaNum: Long, den: Long)
-      extends StatefulProcessor[String, Obs, Forecast] {
+      extends WatermarkOrderedFold[Obs, Forecast] {
     @transient private var st: ValueState[St] = _
-    @transient private var pending: ListState[Obs] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit =
       st = getHandle.getValueState[St]("st", Encoders.product[St],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      pending = getHandle.getListState[Obs]("pending",
-        Encoders.product[Obs], org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
+        TTLConfig.NONE)
+
+    override protected def rowEncoder = Encoders.product[Obs]
+    override protected def eventTimeMs(o: Obs): Long = o.tsMs
 
     /** Truncating integer division — Spark SQL `div` / Java `/`. */
     @inline private def tdiv(a: Long, b: Long): Long = a / b
 
-    private def drain(wmMs: Long): Iterator[Forecast] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def fold(key: String, due: Seq[Obs],
+        emittedAt: java.sql.Timestamp): Seq[Forecast] = {
       var cur = if (st.exists()) st.get() else St(0L, 0L, 0L)
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due.sortBy(o => (o.tsMs, o.y)).map { o =>
         cur =
           if (cur.n == 0L) St(o.y, 0L, 1L)
@@ -71,42 +60,9 @@ object HoltTws {
             St(l, b, cur.n + 1)
           }
         Forecast(o.key, o.tsMs, o.y, cur.level, cur.trend,
-          cur.level + cur.trend, cur.n, emitAt)
+          cur.level + cur.trend, cur.n, emittedAt)
       }
       st.update(cur)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Obs],
-        timerValues: TimerValues): Iterator[Forecast] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Forecast] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }

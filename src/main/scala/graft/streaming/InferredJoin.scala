@@ -44,14 +44,6 @@ object InferredJoin {
 
   def emptyScopedState: ScopedState = ScopedState(Map.empty, Map.empty, Nil, Nil)
 
-  // Kept for source compatibility with round-1 call sites / specs.
-  case class State(
-      lefts: Map[String, Long],
-      pendingFk: List[(String, String, Long)],
-      pendingInfer: List[(String, Long)])
-
-  def emptyState: State = State(Map.empty, Nil, Nil)
-
   private def toScoped(platformId: Long, logUserId: String, e: JoinSideEvent): ScopedEvent =
     ScopedEvent(platformId, logUserId, e.side, e.id, e.parentId, e.tsMs,
       scopes = Seq(logUserId))
@@ -175,26 +167,6 @@ object InferredJoin {
     }
 
     (out.result(), ScopedState(lefts, scopeIdx, pendingFk, pendingInfer))
-  }
-
-  /** Single-scope compatibility form (round-1 shape): every event scoped by
-    * logUserId only — equivalent to `includeKeyAsScope` with no ancestors. */
-  def advance(key: (Long, String), events: Seq[JoinSideEvent], st: State,
-      watermarkMs: Long, maxTimeMs: Long, outOfOrderMs: Long): (Seq[JoinedPair], State) = {
-    val scopedSt = ScopedState(
-      st.lefts.map { case (pk, ts) => pk -> ((ts, Seq.empty[String])) },
-      Map(key._2 -> st.lefts.toList.map { case (pk, ts) => (ts, pk) }.sorted),
-      st.pendingFk.map { case (rid, fk, ts) =>
-        ScopedEvent(key._1, key._2, 1, rid, fk, ts, Seq(key._2)) },
-      st.pendingInfer.map { case (rid, ts) =>
-        ScopedEvent(key._1, key._2, 1, rid, "", ts, Seq(key._2)) })
-    val scopedEvents = events.map(toScoped(key._1, key._2, _))
-    val (out, next) = advanceScoped(key, scopedEvents, scopedSt, watermarkMs,
-      maxTimeMs, outOfOrderMs, rightOuter = false)
-    (out, State(
-      next.lefts.map { case (pk, (ts, _)) => pk -> ts },
-      next.pendingFk.map(e => (e.id, e.parentId, e.tsMs)),
-      next.pendingInfer.map(e => (e.id, e.tsMs))))
   }
 
   /** Streaming scoped form: watermark on event time, flatMapGroupsWithState

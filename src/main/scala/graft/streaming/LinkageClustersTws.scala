@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig,
   ValueState}
 
 /** Streaming record-linkage cluster maintenance — the continuous form of
@@ -20,7 +19,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
   * grain (records under management), never event grain — the same
   * budget the batch golden-record table carries — and `maxEntities`
   * enforces it loudly. Links buffer until the watermark passes and fold
-  * in (tsMs, a, b) order (the [[CusumTws]] rule), so the emitted
+  * in (tsMs, a, b) order (the [[WatermarkOrderedFold]] rule), so the emitted
   * trajectory is deterministic under any arrival order; the FINAL
   * census is order-free (union is commutative), which is what
   * LinkageClustersTwsSpec pins against the batch operator.
@@ -37,28 +36,25 @@ object LinkageClustersTws {
       nLinks: Long, seq: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(maxEntities: Long)
-      extends StatefulProcessor[String, Link, Snap] {
+      extends WatermarkOrderedFold[Link, Snap] {
     @transient private var parent: MapState[Long, Long] = _
-    @transient private var pending: ListState[Link] = _
     @transient private var nRec: ValueState[Long] = _
     @transient private var nLink: ValueState[Long] = _
     @transient private var seq: ValueState[Long] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit = {
       parent = getHandle.getMapState[Long, Long]("parent",
         Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      pending = getHandle.getListState[Link]("pending",
-        Encoders.product[Link], TTLConfig.NONE)
       nRec = getHandle.getValueState[Long]("nRec", Encoders.scalaLong,
         TTLConfig.NONE)
       nLink = getHandle.getValueState[Long]("nLink", Encoders.scalaLong,
         TTLConfig.NONE)
       seq = getHandle.getValueState[Long]("seq", Encoders.scalaLong,
         TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        TTLConfig.NONE)
     }
+
+    override protected def rowEncoder = Encoders.product[Link]
+    override protected def eventTimeMs(l: Link): Long = l.tsMs
 
     private def root(x: Long): Long = {
       var r = x
@@ -74,12 +70,8 @@ object LinkageClustersTws {
       r
     }
 
-    private def drain(wmMs: Long): Iterator[Snap] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def fold(key: String, due: Seq[Link],
+        emittedAt: java.sql.Timestamp): Seq[Snap] = {
       var rec = if (nRec.exists()) nRec.get() else 0L
       var lk = if (nLink.exists()) nLink.get() else 0L
       due.sortBy(l => (l.tsMs, l.a, l.b)).foreach { l =>
@@ -114,43 +106,7 @@ object LinkageClustersTws {
       }
       val census = sizes.values.groupBy(identity).view
         .mapValues(_.size.toLong).toSeq.sortBy(_._1)
-      val emitAt = new java.sql.Timestamp(wmMs)
-      census.iterator.map { case (sz, nc) =>
-        Snap(sz, nc, rec, lk, n, emitAt)
-      }
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Link],
-        timerValues: TimerValues): Iterator[Snap] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Snap] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
+      census.map { case (sz, nc) => Snap(sz, nc, rec, lk, n, emittedAt) }
     }
   }
 

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState,
-  OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, ValueState}
 
 /** Streaming MinHash-LSH near-duplicate monitor (r15 verdict item 5) —
   * the continuous form of [[graft.operators.Dedup.minHashLshPairs]]'s
@@ -23,7 +22,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState,
   * stage 2's event time is stage 1's `emittedAt` release time):
   *
   *  1. keyed by (band, bucket): doc-band rows buffer until the
-  *     watermark passes them (the CusumTws reorder rule), then fold in
+  *     watermark passes them (the [[WatermarkOrderedFold]] rule), then fold in
   *     (tsMs, tieBreak, docId) order against one boolean per bucket —
   *     "has any earlier doc landed here" — emitting a [[BucketHit]]
   *     per row. Bucket-parallel: the shuffle key is the bucket hash,
@@ -51,102 +50,50 @@ object LshDedupTws {
       emittedAt: java.sql.Timestamp)
 
   /** Stage 1: per-bucket watermark-ordered occupancy fold. */
-  class BucketProcessor
-      extends StatefulProcessor[String, BucketRow, BucketHit] {
+  class BucketProcessor extends WatermarkOrderedFold[BucketRow, BucketHit] {
     @transient private var occupied: ValueState[Boolean] = _
-    @transient private var pending: ListState[BucketRow] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit =
       occupied = getHandle.getValueState[Boolean]("occupied",
-        Encoders.scalaBoolean, org.apache.spark.sql.streaming.TTLConfig.NONE)
-      pending = getHandle.getListState[BucketRow]("pending",
-        Encoders.product[BucketRow],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
+        Encoders.scalaBoolean, TTLConfig.NONE)
 
-    private def drain(wmMs: Long): Iterator[BucketHit] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def rowEncoder = Encoders.product[BucketRow]
+    override protected def eventTimeMs(r: BucketRow): Long = r.tsMs
+
+    override protected def fold(key: String, due: Seq[BucketRow],
+        emittedAt: java.sql.Timestamp): Seq[BucketHit] = {
       var occ = occupied.exists() && occupied.get()
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due.sortBy(r => (r.tsMs, r.tieBreak, r.docId)).map { r =>
-        val hit = BucketHit(r.docId, r.tsMs, r.tieBreak, occ, emitAt)
+        val hit = BucketHit(r.docId, r.tsMs, r.tieBreak, occ, emittedAt)
         occ = true
         hit
       }
       occupied.update(occ)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[BucketRow],
-        timerValues: TimerValues): Iterator[BucketHit] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[BucketHit] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }
 
   /** Stage 2: global fold of per-band verdicts into the dup census. */
   class CensusProcessor(bands: Int)
-      extends StatefulProcessor[String, BucketHit, DedupPoint] {
-    @transient private var pending: ListState[BucketHit] = _
+      extends WatermarkOrderedFold[BucketHit, DedupPoint] {
     @transient private var nDocs: ValueState[Long] = _
     @transient private var nDups: ValueState[Long] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState[BucketHit]("pending",
-        Encoders.product[BucketHit],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+    override protected def initState(): Unit = {
       nDocs = getHandle.getValueState[Long]("nDocs", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
       nDups = getHandle.getValueState[Long]("nDups", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
     }
 
-    private def drain(wmMs: Long): Iterator[DedupPoint] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.emittedAt.getTime <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def rowEncoder = Encoders.product[BucketHit]
+    override protected def eventTimeMs(h: BucketHit): Long =
+      h.emittedAt.getTime
+
+    override protected def fold(key: String, due: Seq[BucketHit],
+        emittedAt: java.sql.Timestamp): Seq[DedupPoint] = {
       var n = if (nDocs.exists()) nDocs.get() else 0L
       var dups = if (nDups.exists()) nDups.get() else 0L
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due.groupBy(h => (h.tsMs, h.tieBreak, h.docId))
         .toSeq.sortBy(_._1)
         .map { case ((ts, tie, id), hits) =>
@@ -158,43 +105,10 @@ object LshDedupTws {
           n += 1
           if (isDup) dups += 1
           DedupPoint(id, ts, tie, isDup, n, dups,
-            dups * 1000000L / n, emitAt)
+            dups * 1000000L / n, emittedAt)
         }
       nDocs.update(n)
       nDups.update(dups)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[BucketHit],
-        timerValues: TimerValues): Iterator[DedupPoint] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[DedupPoint] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, ValueState}
 
 /** Streaming Page–Hinkley change detector — the continuous form of the
   * q305 batch gate: each key carries the live sequential-test state
@@ -15,12 +14,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   * IDENTICAL and PageHinkleyTwsSpec pins it against the batch windows
   * step for step).
   *
-  * Order discipline: the recursion is a left fold, so rows buffer in
-  * ListState until the watermark passes them (the [[HoltTws]] /
-  * [[CusumTws]] rule) and fold in (tsMs, x) order — the same total
-  * order the batch windows sort by. All arithmetic is BIGINT with the
-  * same truncating division (running mean = cum·1e6 div n on
-  * non-negative cums).
+  * Order discipline: the recursion is a left fold, so rows wait in the
+  * [[WatermarkOrderedFold]] reorder buffer until the watermark passes
+  * them and fold in (tsMs, x) order — the same total order the batch
+  * windows sort by. All arithmetic is BIGINT with the same truncating
+  * division (running mean = cum·1e6 div n on non-negative cums).
   *
   * State per key: four longs + the watermark-bounded reorder buffer.
   * Emission: one [[Ph]] per observation with the fold sequence;
@@ -34,28 +32,19 @@ object PageHinkleyTws {
 
   private case class St(n: Long, cumX: Long, u: Long, minU: Long)
 
-  class Processor extends StatefulProcessor[String, Obs, Ph] {
+  class Processor extends WatermarkOrderedFold[Obs, Ph] {
     @transient private var st: ValueState[St] = _
-    @transient private var pending: ListState[Obs] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit =
       st = getHandle.getValueState[St]("st", Encoders.product[St],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      pending = getHandle.getListState[Obs]("pending",
-        Encoders.product[Obs], org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
+        TTLConfig.NONE)
 
-    private def drain(wmMs: Long): Iterator[Ph] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def rowEncoder = Encoders.product[Obs]
+    override protected def eventTimeMs(o: Obs): Long = o.tsMs
+
+    override protected def fold(key: String, due: Seq[Obs],
+        emittedAt: java.sql.Timestamp): Seq[Ph] = {
       var cur = if (st.exists()) st.get() else St(0L, 0L, 0L, Long.MaxValue)
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due.sortBy(o => (o.tsMs, o.x)).map { o =>
         val n = cur.n + 1
         val cumX = cur.cumX + o.x
@@ -64,42 +53,9 @@ object PageHinkleyTws {
         val minU = math.min(cur.minU, u)
         cur = St(n, cumX, u, minU)
         val ph = u - minU
-        Ph(o.key, o.tsMs, o.x, n, u, ph, ph > 2L * mean, n, emitAt)
+        Ph(o.key, o.tsMs, o.x, n, u, ph, ph > 2L * mean, n, emittedAt)
       }
       st.update(cur)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Obs],
-        timerValues: TimerValues): Iterator[Ph] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Ph] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
-  OutputMode, StatefulProcessor, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig,
+  ValueState}
 
 /** Streaming PSI drift monitor — the continuous form of
   * [[graft.operators.Drift.psiBins]]: the deployment reality is a
@@ -53,76 +53,33 @@ object PsiDriftTws {
   }
 
   class DriftProcessor(refCounts: Map[Int, Long], nRef: Long)
-      extends StatefulProcessor[String, BinnedEvent, DriftPoint] {
-    @transient private var pending: ListState[BinnedEvent] = _
+      extends WatermarkOrderedFold[BinnedEvent, DriftPoint] {
     @transient private var counts: MapState[Int, Long] = _
     @transient private var nTgt: ValueState[Long] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState[BinnedEvent]("pending",
-        Encoders.product[BinnedEvent],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+    override protected def initState(): Unit = {
       counts = getHandle.getMapState[Int, Long]("counts",
-        Encoders.scalaInt, Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        Encoders.scalaInt, Encoders.scalaLong, TTLConfig.NONE)
       nTgt = getHandle.getValueState[Long]("nTgt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+        TTLConfig.NONE)
     }
 
-    private def drain(wmMs: Long): Iterator[DriftPoint] = {
-      val all = pending.get().toSeq
-      val (due, later) = all.partition(_.tsMs <= wmMs)
-      if (due.isEmpty) return Iterator.empty
-      pending.clear()
-      later.foreach(pending.appendValue)
+    override protected def rowEncoder = Encoders.product[BinnedEvent]
+    override protected def eventTimeMs(e: BinnedEvent): Long = e.tsMs
+
+    override protected def fold(key: String, due: Seq[BinnedEvent],
+        emittedAt: java.sql.Timestamp): Seq[DriftPoint] = {
       val tgt = scala.collection.mutable.Map.empty[Int, Long]
       counts.iterator().foreach { case (b, c) => tgt(b) = c }
       var n = if (nTgt.exists()) nTgt.get() else 0L
-      val emitAt = new java.sql.Timestamp(wmMs)
       val out = due.sortBy(e => (e.tsMs, e.tieBreak)).map { e =>
         tgt(e.bucket) = tgt.getOrElse(e.bucket, 0L) + 1L
         n += 1
         DriftPoint(e.tsMs, e.tieBreak, e.bucket, n,
-          psiE6(refCounts, nRef, tgt, n), emitAt)
+          psiE6(refCounts, nRef, tgt, n), emittedAt)
       }
       tgt.foreach { case (b, c) => counts.updateValue(b, c) }
       nTgt.update(n)
-      out.iterator
-    }
-
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.get().hasNext
-      if (hasPending) {
-        val next = wmMs + 1
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[BinnedEvent],
-        timerValues: TimerValues): Iterator[DriftPoint] = {
-      rows.foreach(pending.appendValue)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[DriftPoint] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(wm)
-      armTimer(wm)
       out
     }
   }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig,
+  ValueState}
 
 import graft.schema.WindowAggResult
 
@@ -14,7 +14,7 @@ import graft.schema.WindowAggResult
   * transition logic is [[SlidingCounter.advance]] verbatim; this wrapper
   * maps it onto typed state (a bucket MapState instead of the FMGWS state
   * case class — per-bucket point updates, no full-map rewrite per batch)
-  * and explicit per-key timers at the emit cadence.
+  * and one [[KeyTimerProcessor]] timer per key at the emit cadence.
   *
   * Requires the RocksDB state store provider, as the other tws ports. */
 object SlidingCounterTws {
@@ -32,60 +32,18 @@ object SlidingCounterTws {
       count: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(emitMs: Long, windowsMs: Seq[Long])
-      extends StatefulProcessor[String, Event, ResultAt] {
+      extends KeyTimerProcessor[Event, ResultAt] {
     @transient private var buckets: MapState[Long, Long] = _
     @transient private var lastEmit: ValueState[Long] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit = {
       buckets = getHandle.getMapState[Long, Long]("buckets",
         Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
       lastEmit = getHandle.getValueState[Long]("lastEmit",
         Encoders.scalaLong, TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt",
-        Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    /** Emit every tick the watermark has passed and point-rewrite the
-      * bucket map (advance only ever drops buckets outside ingest). Both
-      * the input path and the timer path run this, so a continuously-hot
-      * key emits every batch off its own input processing — timers only
-      * cover keys that go QUIET with live buckets (input processing runs
-      * before timer expiry within a batch, so a due timer on a hot key is
-      * a no-op, never the only emission path). */
-    private def drain(key: String, wmMs: Long): Seq[ResultAt] = {
-      if (!lastEmit.exists()) return Nil
-      val st = State(buckets.iterator().map(kv => kv._1 -> kv._2).toMap,
-        lastEmit.get())
-      val (out, next) = SlidingCounter.advance(key, Nil, st, wmMs, emitMs, windowsMs)
-      st.buckets.keysIterator.filterNot(next.buckets.contains)
-        .foreach(buckets.removeKey)
-      lastEmit.update(next.lastEmitMs)
-      if (next.buckets.isEmpty) { buckets.clear(); lastEmit.clear() }
-      out.map(r => ResultAt(r.key, r.windowStartMs, r.windowSizeMs,
-        r.count, new java.sql.Timestamp(
-          math.max(r.windowStartMs + r.windowSizeMs, wmMs + 1))))
-    }
-
-    /** One timer outstanding per key, at the next FUTURE tick (drain has
-      * already fired everything <= wm, so lastEmit+emitMs > wm here —
-      * never delete-and-repark a due timer, the starvation failure mode
-      * for always-active keys). */
-    private def armTimer(wmMs: Long): Unit = {
-      if (!lastEmit.exists()) { // drained empty: no further ticks owed
-        if (timerAt.exists()) { getHandle.deleteTimer(timerAt.get()); timerAt.clear() }
-        return
-      }
-      val next = math.max(lastEmit.get() + emitMs, wmMs + 1)
-      if (!timerAt.exists() || timerAt.get() != next) {
-        if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-        getHandle.registerTimer(next)
-        timerAt.update(next)
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[ResultAt] = {
+    override protected def ingest(key: String, rows: Iterator[Event]): Unit = {
       var minBucket = Long.MaxValue
       rows.foreach { e =>
         val b = ((e.tsMs + emitMs - 1) / emitMs) * emitMs // ceil-aligned
@@ -97,20 +55,37 @@ object SlidingCounterTws {
       // earliest bucket (advance's lastEmitMs==0 convention)
       if (!lastEmit.exists() && minBucket != Long.MaxValue)
         lastEmit.update(minBucket - emitMs)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out.iterator
     }
 
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[ResultAt] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out.iterator
+    /** Emit every tick the watermark has passed and point-rewrite the
+      * bucket map (advance only ever drops buckets outside ingest). Both
+      * the input path and the timer path run this, so a continuously-hot
+      * key emits every batch off its own input processing — timers only
+      * cover keys that go QUIET with live buckets (input processing runs
+      * before timer expiry within a batch, so a due timer on a hot key is
+      * a no-op, never the only emission path). */
+    override protected def release(key: String,
+        wmMs: Long): Iterator[ResultAt] = {
+      if (!lastEmit.exists()) return Iterator.empty
+      val st = State(buckets.iterator().map(kv => kv._1 -> kv._2).toMap,
+        lastEmit.get())
+      val (out, next) = SlidingCounter.advance(key, Nil, st, wmMs, emitMs, windowsMs)
+      st.buckets.keysIterator.filterNot(next.buckets.contains)
+        .foreach(buckets.removeKey)
+      lastEmit.update(next.lastEmitMs)
+      if (next.buckets.isEmpty) { buckets.clear(); lastEmit.clear() }
+      out.map(r => ResultAt(r.key, r.windowStartMs, r.windowSizeMs,
+        r.count, new java.sql.Timestamp(
+          math.max(r.windowStartMs + r.windowSizeMs, wmMs + 1)))).iterator
     }
+
+    /** The next FUTURE tick (release has already fired everything <= wm,
+      * so lastEmit+emitMs > wm here — never delete-and-repark a due
+      * timer, the starvation failure mode for always-active keys); none
+      * once the key drained empty. */
+    override protected def nextTimer(wmMs: Long): Option[Long] =
+      if (!lastEmit.exists()) None
+      else Some(math.max(lastEmit.get() + emitMs, wmMs + 1))
   }
 
   /** FMGWS-parity form (drops the chaining column). */

@@ -4,8 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig}
 
 /** Streaming EXACT sliding-window percentiles — the continuous form of
   * [[graft.agg.Windows.slidingPercentiles]] (the latency-SLO p50/p95/p99
@@ -35,7 +34,7 @@ object SlidingHistTws {
       quantile: Long, winN: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(sliceMs: Long, windowSlices: Int, percents: Seq[Int])
-      extends StatefulProcessor[String, Event, WindowQuantile] {
+      extends KeyTimerProcessor[Event, WindowQuantile] {
     require(sliceMs > 0 && windowSlices >= 1)
     require(percents.nonEmpty && percents.forall(p => p > 0 && p <= 100))
     private val spanMs = sliceMs * windowSlices
@@ -44,15 +43,12 @@ object SlidingHistTws {
     // key-batch, the SlidingMgTws discipline)
     @transient private var sliceHist: MapState[Long, String] = _
     @transient private var pending: MapState[Long, Boolean] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit = {
       sliceHist = getHandle.getMapState[Long, String]("sliceHist",
         Encoders.scalaLong, Encoders.STRING, TTLConfig.NONE)
       pending = getHandle.getMapState[Long, Boolean]("pending",
         Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        TTLConfig.NONE)
     }
 
     private def parse(s: String): mutable.HashMap[Long, Long] = {
@@ -67,8 +63,8 @@ object SlidingHistTws {
     private def render(m: mutable.HashMap[Long, Long]): String =
       m.toSeq.sortBy(_._1).map { case (v, c) => s"$v:$c" }.mkString(";")
 
-    private def ingest(batch: Seq[Event]): Unit =
-      batch.groupBy(e => e.tsMs - math.floorMod(e.tsMs, sliceMs))
+    override protected def ingest(key: String, rows: Iterator[Event]): Unit =
+      rows.toSeq.groupBy(e => e.tsMs - math.floorMod(e.tsMs, sliceMs))
         .foreach { case (slice, es) =>
           val m = if (sliceHist.containsKey(slice))
             parse(sliceHist.getValue(slice))
@@ -83,7 +79,10 @@ object SlidingHistTws {
           }
         }
 
-    private def drain(key: String, wmMs: Long): Iterator[WindowQuantile] = {
+    /** Emit every pending window the watermark has closed; prune slices
+      * no future window needs. */
+    override protected def release(key: String,
+        wmMs: Long): Iterator[WindowQuantile] = {
       if (wmMs == Long.MinValue) return Iterator.empty
       val due = pending.iterator().map(_._1)
         .filter(w => w + spanMs <= wmMs).toArray.sorted
@@ -122,39 +121,10 @@ object SlidingHistTws {
       out.iterator
     }
 
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.iterator().hasNext
-      if (hasPending) {
-        val next = math.max(
-          pending.iterator().map(_._1).min + spanMs, wmMs + 1)
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[WindowQuantile] = {
-      ingest(rows.toSeq)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[WindowQuantile] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
+    /** Wake when the earliest open window can close. */
+    override protected def nextTimer(wmMs: Long): Option[Long] =
+      pending.iterator().map(_._1).minOption
+        .map(w => math.max(w + spanMs, wmMs + 1))
   }
 
   /** Per-key sliding exact percentiles: window = `windowSlices` slices of

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.RollingHash
@@ -35,7 +34,7 @@ object SlidingHllTws {
       emittedAt: java.sql.Timestamp)
 
   class Processor(p: Int, sliceMs: Long, windowSlices: Int)
-      extends StatefulProcessor[String, Event, WindowSketch] {
+      extends KeyTimerProcessor[Event, WindowSketch] {
     require(p >= 4 && p <= 16 && sliceMs > 0 && windowSlices >= 1)
     private val m = 1 << p
     private val windowBits = 64 - p
@@ -43,15 +42,12 @@ object SlidingHllTws {
 
     @transient private var slices: MapState[Long, Array[Byte]] = _
     @transient private var pending: MapState[Long, Boolean] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit = {
       slices = getHandle.getMapState[Long, Array[Byte]]("slices",
         Encoders.scalaLong, Encoders.BINARY, TTLConfig.NONE)
       pending = getHandle.getMapState[Long, Boolean]("pending",
         Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        TTLConfig.NONE)
     }
 
     private def updateSlice(tsMs: Long, value: String): Unit = {
@@ -74,9 +70,13 @@ object SlidingHllTws {
       }
     }
 
+    override protected def ingest(key: String, rows: Iterator[Event]): Unit =
+      rows.foreach(e => updateSlice(e.tsMs, e.value))
+
     /** Emit every pending window the watermark has closed; prune slices
       * no future window needs. */
-    private def drain(key: String, wmMs: Long): Iterator[WindowSketch] = {
+    override protected def release(key: String,
+        wmMs: Long): Iterator[WindowSketch] = {
       if (wmMs == Long.MinValue) return Iterator.empty
       val due = pending.iterator().map(_._1)
         .filter(w => w + spanMs <= wmMs).toArray.sorted
@@ -112,40 +112,10 @@ object SlidingHllTws {
       out.iterator
     }
 
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.iterator().hasNext
-      if (hasPending) {
-        // wake when the earliest open window can close
-        val next = math.max(
-          pending.iterator().map(_._1).min + spanMs, wmMs + 1)
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[WindowSketch] = {
-      rows.foreach(e => updateSlice(e.tsMs, e.value))
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[WindowSketch] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
+    /** Wake when the earliest open window can close. */
+    override protected def nextTimer(wmMs: Long): Option[Long] =
+      pending.iterator().map(_._1).minOption
+        .map(w => math.max(w + spanMs, wmMs + 1))
   }
 
   /** Per-key sliding distinct-count sketches: window = `windowSlices`

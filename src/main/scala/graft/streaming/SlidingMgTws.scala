@@ -4,8 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig}
 
 import graft.agg.MisraGries
 
@@ -44,7 +43,7 @@ object SlidingMgTws {
       winN: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(k: Int, sliceMs: Long, windowSlices: Int)
-      extends StatefulProcessor[String, Event, WindowSummary] {
+      extends KeyTimerProcessor[Event, WindowSummary] {
     require(k >= 1 && sliceMs > 0 && windowSlices >= 1)
     private val spanMs = sliceMs * windowSlices
 
@@ -53,17 +52,14 @@ object SlidingMgTws {
     @transient private var sliceMg: MapState[Long, String] = _
     @transient private var sliceN: MapState[Long, Long] = _
     @transient private var pending: MapState[Long, Boolean] = _
-    @transient private var timerAt: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override protected def initState(): Unit = {
       sliceMg = getHandle.getMapState[Long, String]("sliceMg",
         Encoders.scalaLong, Encoders.STRING, TTLConfig.NONE)
       sliceN = getHandle.getMapState[Long, Long]("sliceN",
         Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
       pending = getHandle.getMapState[Long, Boolean]("pending",
         Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
-      timerAt = getHandle.getValueState[Long]("timerAt", Encoders.scalaLong,
-        TTLConfig.NONE)
     }
 
     private def render(m: mutable.HashMap[String, Long]): String = {
@@ -75,8 +71,8 @@ object SlidingMgTws {
       sb.toString
     }
 
-    private def ingest(batch: Seq[Event]): Unit =
-      batch.groupBy(e => e.tsMs - math.floorMod(e.tsMs, sliceMs))
+    override protected def ingest(key: String, rows: Iterator[Event]): Unit =
+      rows.toSeq.groupBy(e => e.tsMs - math.floorMod(e.tsMs, sliceMs))
         .foreach { case (slice, es) =>
           val m = mutable.HashMap.empty[String, Long]
           if (sliceMg.containsKey(slice))
@@ -98,7 +94,10 @@ object SlidingMgTws {
           }
         }
 
-    private def drain(key: String, wmMs: Long): Iterator[WindowSummary] = {
+    /** Emit every pending window the watermark has closed; prune slices
+      * no future window needs. */
+    override protected def release(key: String,
+        wmMs: Long): Iterator[WindowSummary] = {
       if (wmMs == Long.MinValue) return Iterator.empty
       val due = pending.iterator().map(_._1)
         .filter(w => w + spanMs <= wmMs).toArray.sorted
@@ -129,39 +128,10 @@ object SlidingMgTws {
       out.iterator
     }
 
-    private def armTimer(wmMs: Long): Unit = {
-      val hasPending = pending.iterator().hasNext
-      if (hasPending) {
-        val next = math.max(
-          pending.iterator().map(_._1).min + spanMs, wmMs + 1)
-        if (!timerAt.exists() || timerAt.get() != next) {
-          if (timerAt.exists()) getHandle.deleteTimer(timerAt.get())
-          getHandle.registerTimer(next)
-          timerAt.update(next)
-        }
-      } else if (timerAt.exists()) {
-        getHandle.deleteTimer(timerAt.get())
-        timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[WindowSummary] = {
-      ingest(rows.toSeq)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[WindowSummary] = {
-      timerAt.clear()
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val out = drain(key, wm)
-      armTimer(wm)
-      out
-    }
+    /** Wake when the earliest open window can close. */
+    override protected def nextTimer(wmMs: Long): Option[Long] =
+      pending.iterator().map(_._1).minOption
+        .map(w => math.max(w + spanMs, wmMs + 1))
   }
 
   /** Per-key sliding frequent-items summaries: window = `windowSlices`

@@ -27,18 +27,6 @@ class CounterChainSpec extends SparkSpec {
   // featureId(Query=5, metric=1, Day=2)
   private val Fid = ((5L << 24) | (1L << 8) | 2L).toString
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // (platformId, queryHash, metric, tsMs)
   private type Ev = (Long, String, Long, Long)
   private def ev(q: String, ts: Long): Ev = (0L, q, 1L, ts)

@@ -96,6 +96,10 @@ class UpsertTableR16Spec extends SparkSpec {
       assert(rel.count() == 3)
       // reliable checkpoint writes under the configured dir
       assert(new java.io.File(ckDir).listFiles.nonEmpty)
+      // the eager reliable checkpoint computes its sub-plan once
+      val evals = spark.sparkContext.longAccumulator("truncate_evals")
+      df.map { r => evals.add(1L); r.getInt(0) }.toDF("x").truncate(true)
+      assert(evals.sum == 3L)
     } finally {
       // SparkContext has no public unset; clear the private var so the
       // shared test context goes back to local checkpoints (test-only

@@ -7,18 +7,6 @@ class AttributionTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // user a: touch 1s; equal-ts touches at 4s (ids 40, 41 — min id wins);
   //   conv 2s (credits 1s), conv 4s (same-ms touches invisible → credits
   //   1s), conv 5s (credits id 40), conv 40s (lookback 10s exceeded →

@@ -8,18 +8,6 @@ class CoverageTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // u1: overlap + touch chain then a separate island; u2: duplicate
   // intervals collapsing in one batch. Starts stay STRICTLY above the
   // (global, cross-key) watermark each batch inherits: the tws late

@@ -7,18 +7,6 @@ class CusumTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // drifting key (steps up at t≥5s), steady key; 2.5 arrives OUT OF ORDER
   // (after 4s in stream order) to exercise the reorder buffer.
   private val fixture = Seq(

@@ -8,18 +8,6 @@ class EloTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // Three players, OUT-OF-ORDER arrivals (match at 2000 arrives before
   // 1000's) and a second batch that lands after the first drain — the
   // watermark-ordered fold must still replay them in (tsMs, tieBreak)

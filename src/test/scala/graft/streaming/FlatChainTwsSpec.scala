@@ -18,18 +18,6 @@ class FlatChainTwsSpec extends SparkSpec {
   private val W = 10000L
   private val OOO = 1000L
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // stage 1: views (side 0) × insertions (side 1), logUserId scope,
   // right-outer — the q35 stage-1 shape
   private val stage1Events = Seq(

@@ -8,18 +8,6 @@ class FleissKappaTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // m = 3 campaign. i1/i2/i5 complete; i3 under- and i4 over-staffed
   // (both must be DROPPED, exactly like the batch operator's nr ≠ m
   // rule). i5 exercises the duplicate-rater min rule (c then a → a)

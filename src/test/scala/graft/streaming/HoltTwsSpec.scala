@@ -8,18 +8,6 @@ class HoltTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // two keys; one row arrives OUT OF ORDER (2.5s after 4s) inside the
   // watermark delay to exercise the reorder buffer; values include a drop
   // so a negative trend step exercises truncation-toward-zero

@@ -7,18 +7,6 @@ class LinkageClustersTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s: org.apache.spark.sql.SparkSession = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // chain {1,2,3}, pair {10,11}, then a late link MERGES the two
   // clusters (2—10 at t=2.5s arrives after t=4s in stream order);
   // {20,21,22} forms a triangle (redundant link must not double-count)

@@ -9,18 +9,6 @@ class LshDedupTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private val N = 3
   private val NumHashes = 8
   private val Bands = 4

@@ -9,18 +9,6 @@ class PageHinkleyTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // a level shift at t>=4000 on key "a" (100-ish → 500-ish) that PH must
   // flag; a late in-delay row exercises the reorder buffer; "b" is calm
   private val fixture = Seq(

@@ -11,18 +11,6 @@ class SlidingHllTwsSpec extends SparkSpec {
   private val (p, sliceMs, k) = (8, 1000L, 3)
   private val m = 1 << p
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Reference: registers of all values whose slice falls in the window. */
   private def refHex(values: Seq[String]): String = {
     val regs = new Array[Int](m)

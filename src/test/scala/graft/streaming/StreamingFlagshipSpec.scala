@@ -33,18 +33,6 @@ class StreamingFlagshipSpec extends SparkSpec {
   private val Gap = 2000L
   private val SessOoo = RedOoo + 3000L
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   // ---- fixture ------------------------------------------------------
   // u1: view v1 → insertion i1 → impressions mI (inferred, event-time
   // root) and mE (exact, redundant) → actions a1 (on mE, re-points to mI,

@@ -9,18 +9,6 @@ class TrendTwsSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private val fixture = Seq(
     TrendTws.Obs("a", 0L, 2L), TrendTws.Obs("a", 1L, 5L),
     TrendTws.Obs("a", 2L, 8L), TrendTws.Obs("a", 3L, 11L),
