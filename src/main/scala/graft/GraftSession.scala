@@ -31,5 +31,12 @@ object GraftSession {
     // driver-side latency there
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     .config("spark.ui.enabled", "false")
+    // every transformWithState operator needs the RocksDB store (the
+    // default HDFS-backed store rejects them), and a query's provider is
+    // fixed by its first checkpoint; RocksDB also keeps large state off
+    // the heap. The flatMapGroupsWithState operators run on it too, as in
+    // the benchmark's session.
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .getOrCreate()
 }

@@ -55,8 +55,13 @@ object StreamingJobs {
         Seq("actionId")))
   }
 
-  /** Flat job slice: insertion→impression inferred join as a stream,
-    * joined pairs to parquet, dropped pairs to a side-channel dir. */
+  /** Flat job slice: insertion→impression inferred join as a stream
+    * ([[InferredJoin.joinStream]], the `transformWithState` join), joined
+    * and dropped pairs (`matchType`) to one dt/hour parquet table.
+    *
+    * A checkpoint written by the earlier `flatMapGroupsWithState` form of
+    * this join cannot restart the `transformWithState` operator: a
+    * deployment that ran that form starts on a new checkpoint directory. */
   def flatOutput(envelopes: DataFrame, outDir: String, checkpointDir: String)(
       implicit spark: SparkSession): StreamingQuery = {
     import spark.implicits._

@@ -29,7 +29,8 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, ValueState}
   * Emission: one [[Credit]] per conversion — attributed with lag, or the
   * −1 sentinel census row (same contract as the batch operator).
   * `emittedAt` carries the release time for chaining further tws stages.
-  * Requires the RocksDB state store provider, as all tws ops do. */
+  * Runs on the RocksDB state store that `GraftSession` sets for every
+  * `transformWithState` operator. */
 object AttributionTws {
 
   case class Event(user: String, id: Long, tsMs: Long, isTouch: Boolean)

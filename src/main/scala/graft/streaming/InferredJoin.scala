@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.schema.{JoinSideEvent, JoinedPair, ScopedEvent}
 
@@ -169,38 +167,6 @@ object InferredJoin {
     (out.result(), ScopedState(lefts, scopeIdx, pendingFk, pendingInfer))
   }
 
-  /** Streaming scoped form: watermark on event time, flatMapGroupsWithState
-    * with event-time timeouts. */
-  def joinScopedStream(events: Dataset[ScopedEvent], watermarkDelay: String,
-      maxTimeMs: Long, outOfOrderMs: Long, rightOuter: Boolean)(
-      implicit spark: SparkSession): Dataset[JoinedPair] = {
-    import spark.implicits._
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[ScopedEvent]
-      .groupByKey(e => (e.platformId, e.logUserId))
-      .flatMapGroupsWithState[ScopedState, JoinedPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[ScopedState]) =>
-          val st = state.getOption.getOrElse(emptyScopedState)
-          val wm = state.getCurrentWatermarkMs()
-          val (out, next) = advanceScoped(key, it.toSeq, st, wm, maxTimeMs,
-            outOfOrderMs, rightOuter)
-          if (next.lefts.isEmpty && next.pendingFk.isEmpty && next.pendingInfer.isEmpty) {
-            state.remove()
-          } else {
-            state.update(next)
-            // wake when the earliest pending RHS becomes resolvable
-            val pendTs = (next.pendingFk.map(_.tsMs) ++ next.pendingInfer.map(_.tsMs))
-            val nextFire = (pendTs.map(_ + outOfOrderMs) ++
-              next.lefts.values.map(_._1 + maxTimeMs + outOfOrderMs)).min
-            state.setTimeoutTimestamp(math.max(nextFire, wm + 1))
-          }
-          out.iterator
-      }
-  }
-
   /** Batch scoped form: one pass per key, everything resolvable. */
   def joinScopedBatch(events: Dataset[ScopedEvent], maxTimeMs: Long,
       outOfOrderMs: Long, rightOuter: Boolean)(
@@ -216,13 +182,15 @@ object InferredJoin {
       }
   }
 
-  /** Streaming single-scope form (round-1 shape). */
+  /** Streaming single-scope form (round-1 shape): [[InferredJoinTws]]
+    * projected to [[JoinedPair]]. */
   def joinStream(events: Dataset[JoinSideEvent], watermarkDelay: String,
       maxTimeMs: Long, outOfOrderMs: Long)(implicit spark: SparkSession): Dataset[JoinedPair] = {
     import spark.implicits._
-    joinScopedStream(
-      events.map(e => toScoped(e.platformId, e.logUserId, e)),
-      watermarkDelay, maxTimeMs, outOfOrderMs, rightOuter = false)
+    InferredJoinTws.joinScopedStream(
+        events.map(e => toScoped(e.platformId, e.logUserId, e)),
+        watermarkDelay, maxTimeMs, outOfOrderMs, rightOuter = false)
+      .drop("emittedAt").as[JoinedPair]
   }
 
   /** Batch single-scope form (round-1 shape). */

@@ -1,29 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.schema.{JoinedPair, ScopedEvent}
 
-/** [[InferredJoin]] on Spark 4's `transformWithState` — the chainable form
-  * of the J1 core. The FMGWS port (`InferredJoin.joinScopedStream`) is
-  * limited to one stateful stage per query; this port emits a RELEASE-time
-  * column (`emittedAt`, non-decreasing relative to the watermark) and
-  * re-assigns the output watermark to it via the `eventTimeColumnName`
-  * overload, so TWO OR MORE inferred-join stages compose in a SINGLE
-  * streaming query — the reference's flagship view→insertion→impression→
-  * action chain as one program (FlatOutputJob.java:368-641) rather than
-  * one checkpointed query per stage. [[FlatChainTws]] wires that chain;
-  * FlatChainTwsSpec pins two-stage output parity against the batch form
-  * that q35 gates.
+/** [[InferredJoin]] on Spark 4's `transformWithState` — the one streaming
+  * form of the J1 core (`InferredJoin.joinStream` projects it back to
+  * [[JoinedPair]]). It emits a RELEASE-time column (`emittedAt`,
+  * non-decreasing relative to the watermark) and re-assigns the output
+  * watermark to it via the `eventTimeColumnName` overload, so TWO OR MORE
+  * inferred-join stages compose in a SINGLE streaming query — the
+  * reference's flagship view→insertion→impression→action chain as one
+  * program (FlatOutputJob.java:368-641) rather than one checkpointed query
+  * per stage. [[FlatChainTws]] wires that chain; FlatChainTwsSpec pins
+  * two-stage output parity against the batch form that q35 gates.
   *
-  * Same pure per-key transition as batch/FMGWS ([[InferredJoin.advanceScoped]]):
-  * state and emissions are identical, only the harness differs — typed
-  * ValueState + explicit per-key timers instead of GroupState timeouts.
-  * Requires the RocksDB state store provider, as all tws ops do. */
+  * Same pure per-key transition as batch ([[InferredJoin.advanceScoped]])
+  * on the [[TransitionProcessor]] timer harness. Runs on the RocksDB state
+  * store that `GraftSession` sets for every `transformWithState` operator. */
 object InferredJoinTws {
+  import InferredJoin.{ScopedState, emptyScopedState}
 
   /** Chained-query output: [[JoinedPair]] plus the release time the next
     * stateful stage anchors its watermark on (see SeenGateTws.GatedAt for
@@ -33,51 +31,27 @@ object InferredJoinTws {
       matchType: String, emittedAt: java.sql.Timestamp)
 
   class Processor(maxTimeMs: Long, outOfOrderMs: Long, rightOuter: Boolean)
-      extends StatefulProcessor[(Long, String), ScopedEvent, JoinedPairAt] {
-    import InferredJoin.{ScopedState, emptyScopedState}
-
-    @transient private var st: ValueState[ScopedState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[ScopedState]("joinState",
-        Encoders.product[ScopedState], TTLConfig.NONE)
-
-    private def emptyState(s: ScopedState): Boolean =
+      extends TransitionProcessor[(Long, String), ScopedEvent, ScopedState,
+        JoinedPair, JoinedPairAt] {
+    override protected def stateName = "joinState"
+    override protected def stateEncoder = Encoders.product[ScopedState]
+    override protected def emptyState = emptyScopedState
+    override protected def isEmpty(s: ScopedState): Boolean =
       s.lefts.isEmpty && s.pendingFk.isEmpty && s.pendingInfer.isEmpty
-
-    /** Advance the pure transition at `wm`, persist/clear state, schedule
-      * the next wake-up, stamp emissions with a release time ≥ wm+1. */
-    private def step(key: (Long, String), events: Seq[ScopedEvent],
-        wm: Long): Iterator[JoinedPairAt] = {
-      val cur = if (st.exists()) st.get() else emptyScopedState
-      val (out, next) = InferredJoin.advanceScoped(key, events, cur, wm,
-        maxTimeMs, outOfOrderMs, rightOuter)
-      if (emptyState(next)) st.clear()
-      else {
-        st.update(next)
-        val pendTs = next.pendingFk.map(_.tsMs) ++ next.pendingInfer.map(_.tsMs)
-        val nextFire = (pendTs.map(_ + outOfOrderMs) ++
-          next.lefts.values.map(_._1 + maxTimeMs + outOfOrderMs)).min
-        getHandle.registerTimer(math.max(nextFire, wm + 1))
-      }
-      out.iterator.map(p => JoinedPairAt(p.platformId, p.logUserId, p.leftId,
-        p.rightId, p.leftTs, p.rightTs, p.matchType,
-        new java.sql.Timestamp(math.max(math.max(p.leftTs, p.rightTs), wm + 1))))
-    }
-
-    override def handleInputRows(key: (Long, String),
-        rows: Iterator[ScopedEvent],
-        timerValues: TimerValues): Iterator[JoinedPairAt] =
-      step(key, rows.toSeq, timerValues.getCurrentWatermarkInMs())
-
-    override def handleExpiredTimer(key: (Long, String),
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[JoinedPairAt] =
-      // the expiry time is the watermark the timer was waiting for — the
-      // current watermark may already be further along; use the larger so
-      // one firing resolves everything currently resolvable
-      step(key, Seq.empty, math.max(expiredTimerInfo.getExpiryTimeInMs(),
-        timerValues.getCurrentWatermarkInMs()))
+    // a pending RHS resolves once its out-of-order bound passes; an LHS
+    // expires when no RHS in its window can still match it
+    override protected def fireAt(s: ScopedState): Long =
+      ((s.pendingFk ++ s.pendingInfer).map(_.tsMs + outOfOrderMs) ++
+        s.lefts.values.map(_._1 + maxTimeMs + outOfOrderMs)).min
+    override protected def advance(key: (Long, String),
+        rows: Seq[ScopedEvent], s: ScopedState,
+        wmMs: Long): (Seq[JoinedPair], ScopedState) =
+      InferredJoin.advanceScoped(key, rows, s, wmMs, maxTimeMs, outOfOrderMs,
+        rightOuter)
+    override protected def stamp(p: JoinedPair, wmMs: Long): JoinedPairAt =
+      JoinedPairAt(p.platformId, p.logUserId, p.leftId, p.rightId, p.leftTs,
+        p.rightTs, p.matchType, new java.sql.Timestamp(
+          math.max(math.max(p.leftTs, p.rightTs), wmMs + 1)))
   }
 
   /** First-stage form: watermark on the events' own time. Output carries

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** D3 as a chainable `transformWithState` stage — the streaming form of
   * the reference's redundant-impression reduction
@@ -160,45 +159,24 @@ object RedundantReduceTws {
   }
 
   class Processor(oooMs: Long, replaceTtlMs: Long, cleanupMs: Long)
-      extends StatefulProcessor[(Long, String), TinyJoined, Reduced] {
-
-    @transient private var st: ValueState[ReduceState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[ReduceState]("reduceState",
-        Encoders.product[ReduceState], TTLConfig.NONE)
-
-    private def isEmpty(s: ReduceState): Boolean =
+      extends TransitionProcessor[(Long, String), TinyJoined, ReduceState,
+        Reduced, Reduced] {
+    override protected def stateName = "reduceState"
+    override protected def stateEncoder = Encoders.product[ReduceState]
+    override protected def emptyState = emptyReduceState
+    override protected def isEmpty(s: ReduceState): Boolean =
       s.roots.isEmpty && s.midToIns.isEmpty && s.pendImps.isEmpty &&
         s.pendActs.isEmpty
-
-    private def step(key: (Long, String), events: Seq[TinyJoined],
-        wm: Long): Iterator[Reduced] = {
-      val cur = if (st.exists()) st.get() else emptyReduceState
-      val (out, next) = advance(key, events, cur, wm, oooMs, replaceTtlMs,
+    override protected def fireAt(s: ReduceState): Long =
+      (s.pendImps.map(_._3 + oooMs) ++ s.pendActs.map(_._4 + cleanupMs) ++
+        s.roots.values.map(_._1 + 2 * cleanupMs) ++
+        s.midToIns.values.map(_._2 + 2 * cleanupMs)).min
+    override protected def advance(key: (Long, String), rows: Seq[TinyJoined],
+        s: ReduceState, wmMs: Long): (Seq[Reduced], ReduceState) =
+      RedundantReduceTws.advance(key, rows, s, wmMs, oooMs, replaceTtlMs,
         cleanupMs)
-      if (isEmpty(next)) st.clear()
-      else {
-        st.update(next)
-        val fires = next.pendImps.map(_._3 + oooMs) ++
-          next.pendActs.map(_._4 + cleanupMs) ++
-          next.roots.values.map(_._1 + 2 * cleanupMs) ++
-          next.midToIns.values.map(_._2 + 2 * cleanupMs)
-        getHandle.registerTimer(math.max(fires.min, wm + 1))
-      }
-      out.iterator
-    }
-
-    override def handleInputRows(key: (Long, String),
-        rows: Iterator[TinyJoined],
-        timerValues: TimerValues): Iterator[Reduced] =
-      step(key, rows.toSeq, timerValues.getCurrentWatermarkInMs())
-
-    override def handleExpiredTimer(key: (Long, String),
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Reduced] =
-      step(key, Seq.empty, math.max(expiredTimerInfo.getExpiryTimeInMs(),
-        timerValues.getCurrentWatermarkInMs()))
+    // advance already stamps its emissions
+    override protected def stamp(r: Reduced, wmMs: Long): Reduced = r
   }
 
   /** Chained-stage form: `tiny` must already carry an event-time column

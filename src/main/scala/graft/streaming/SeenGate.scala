@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming J11 (reference RightSeenOutput,
   * P:common/functions/RightSeenOutput.java:22-107): emit left elements
@@ -50,31 +48,6 @@ object SeenGate {
       due.sortBy(identity).foreach { case (ts, id) => out += Gated(key, id, ts) }
     // unseen due lefts drop (the reference clears them without emitting)
     (out.result(), GateState(seen, still))
-  }
-
-  /** Streaming form. */
-  def gateStream(events: Dataset[Event], watermarkDelay: String)(
-      implicit spark: SparkSession): Dataset[Gated] = {
-    import spark.implicits._
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[Event]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[GateState, Gated](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[GateState]) =>
-          val st = state.getOption.getOrElse(emptyState)
-          val wm = state.getCurrentWatermarkMs()
-          val (out, next) = advance(key, it.toSeq, st, wm)
-          if (next.delayed.isEmpty && !next.seen) state.remove()
-          else {
-            state.update(next)
-            next.delayed.map(_._1).minOption.foreach(t =>
-              state.setTimeoutTimestamp(math.max(t, wm + 1)))
-          }
-          out.iterator
-      }
   }
 
   /** Batch form (everything resolves; equals left-semi + bypass union). */

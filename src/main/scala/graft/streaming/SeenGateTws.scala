@@ -11,13 +11,12 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   * that forces one-stateful-stage-per-query goes away). This port is the
   * template for migrating the other stateful ops: the pure `advance`
   * logic maps onto typed state variables (ValueState/ListState) plus
-  * explicit per-key timers, and the spec pins output parity against the
-  * FMGWS form.
+  * explicit per-key timers. It is the one streaming form of the gate:
+  * SeenGateSpec pins its output against the batch left-semi + bypass.
   *
-  * Requires the RocksDB state store provider
-  * (`spark.sql.streaming.stateStore.providerClass` =
-  * `...state.RocksDBStateStoreProvider`) — also the production-scale
-  * choice: state lives off-heap/on-disk, bounded only by local disk. */
+  * Runs on the RocksDB state store that `GraftSession` sets for every
+  * `transformWithState` operator — also the production-scale choice:
+  * state lives off-heap/on-disk, bounded only by local disk. */
 object SeenGateTws {
   import SeenGate.{Event, Gated}
 

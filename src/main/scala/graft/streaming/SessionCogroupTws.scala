@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** J7 — the FlatResponseInsertion session cogroup — as a chainable
   * `transformWithState` stage (reference: flat impressions coGroup flat
@@ -90,50 +89,34 @@ object SessionCogroupTws {
   }
 
   class Processor(gapMs: Long, oooMs: Long)
-      extends StatefulProcessor[(Long, String, String), FlatEvent, FlatSession] {
+      extends TransitionProcessor[(Long, String, String), FlatEvent,
+        SessState, FlatSession, FlatSession] {
+    override protected def stateName = "sessState"
+    override protected def stateEncoder = Encoders.product[SessState]
+    override protected def emptyState = SessState(Nil)
+    override protected def isEmpty(s: SessState): Boolean = s.events.isEmpty
 
-    @transient private var st: ValueState[SessState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessState]("sessState",
-        Encoders.product[SessState], TTLConfig.NONE)
-
-    private def step(key: (Long, String, String), events: Seq[FlatEvent],
-        wm: Long): Iterator[FlatSession] = {
-      val cur = if (st.exists()) st.get().events else Nil
-      val (out, next) = advance(key,
-        events.map(e => SessEv(e.isImpression, e.id, e.tsMs)), cur, wm,
-        gapMs, oooMs)
-      if (next.isEmpty) st.clear()
-      else {
-        st.update(SessState(next))
-        // earliest possible close = the FIRST open session's end + gap +
-        // ooo; if later input extends that session, the re-registration on
-        // that input supersedes (an early firing just re-checks and
-        // re-arms — wasted work, never wrong emission)
-        var end = Long.MinValue
-        var fire = Long.MaxValue
-        next.sortBy(e => (e.tsMs, e.id)).foreach { e =>
-          if (end != Long.MinValue && e.tsMs - end > gapMs && fire == Long.MaxValue)
-            fire = end + gapMs + oooMs
-          end = math.max(end, e.tsMs)
-        }
-        if (fire == Long.MaxValue) fire = end + gapMs + oooMs
-        getHandle.registerTimer(math.max(fire, wm + 1))
-      }
-      out.iterator
+    /** The earliest possible close: the FIRST open session's end + gap +
+      * ooo. Later input that extends that session moves the timer; an
+      * early firing just re-checks and re-arms — wasted work, never wrong
+      * emission. */
+    override protected def fireAt(s: SessState): Long = {
+      val ts = s.events.map(_.tsMs).sorted
+      ts.zip(ts.tail).collectFirst { case (a, b) if b - a > gapMs => a }
+        .getOrElse(ts.last) + gapMs + oooMs
     }
 
-    override def handleInputRows(key: (Long, String, String),
-        rows: Iterator[FlatEvent],
-        timerValues: TimerValues): Iterator[FlatSession] =
-      step(key, rows.toSeq, timerValues.getCurrentWatermarkInMs())
+    override protected def advance(key: (Long, String, String),
+        rows: Seq[FlatEvent], s: SessState,
+        wmMs: Long): (Seq[FlatSession], SessState) = {
+      val (out, open) = SessionCogroupTws.advance(key,
+        rows.map(e => SessEv(e.isImpression, e.id, e.tsMs)), s.events, wmMs,
+        gapMs, oooMs)
+      (out, SessState(open))
+    }
 
-    override def handleExpiredTimer(key: (Long, String, String),
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[FlatSession] =
-      step(key, Seq.empty, math.max(expiredTimerInfo.getExpiryTimeInMs(),
-        timerValues.getCurrentWatermarkInMs()))
+    // advance already stamps its emissions
+    override protected def stamp(f: FlatSession, wmMs: Long): FlatSession = f
   }
 
   /** Chained-stage form: `events` must already carry an event-time column

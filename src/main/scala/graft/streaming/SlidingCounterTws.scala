@@ -16,7 +16,8 @@ import graft.schema.WindowAggResult
   * case class — per-bucket point updates, no full-map rewrite per batch)
   * and one [[KeyTimerProcessor]] timer per key at the emit cadence.
   *
-  * Requires the RocksDB state store provider, as the other tws ports. */
+  * Runs on the RocksDB state store that `GraftSession` sets for every
+  * `transformWithState` operator. */
 object SlidingCounterTws {
   import SlidingCounter.{Event, State}
 
@@ -32,7 +33,7 @@ object SlidingCounterTws {
       count: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(emitMs: Long, windowsMs: Seq[Long])
-      extends KeyTimerProcessor[Event, ResultAt] {
+      extends KeyTimerProcessor[String, Event, ResultAt] {
     @transient private var buckets: MapState[Long, Long] = _
     @transient private var lastEmit: ValueState[Long] = _
 
@@ -43,7 +44,7 @@ object SlidingCounterTws {
         Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    override protected def ingest(key: String, rows: Iterator[Event]): Unit = {
+    private def ingest(rows: Iterator[Event]): Unit = {
       var minBucket = Long.MaxValue
       rows.foreach { e =>
         val b = ((e.tsMs + emitMs - 1) / emitMs) * emitMs // ceil-aligned
@@ -64,8 +65,9 @@ object SlidingCounterTws {
       * cover keys that go QUIET with live buckets (input processing runs
       * before timer expiry within a batch, so a due timer on a hot key is
       * a no-op, never the only emission path). */
-    override protected def release(key: String,
+    override protected def step(key: String, rows: Iterator[Event],
         wmMs: Long): Iterator[ResultAt] = {
+      ingest(rows)
       if (!lastEmit.exists()) return Iterator.empty
       val st = State(buckets.iterator().map(kv => kv._1 -> kv._2).toMap,
         lastEmit.get())
@@ -79,7 +81,7 @@ object SlidingCounterTws {
           math.max(r.windowStartMs + r.windowSizeMs, wmMs + 1)))).iterator
     }
 
-    /** The next FUTURE tick (release has already fired everything <= wm,
+    /** The next FUTURE tick (step has already fired everything <= wm,
       * so lastEmit+emitMs > wm here — never delete-and-repark a due
       * timer, the starvation failure mode for always-active keys); none
       * once the key drained empty. */

@@ -34,7 +34,7 @@ object SlidingHistTws {
       quantile: Long, winN: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(sliceMs: Long, windowSlices: Int, percents: Seq[Int])
-      extends KeyTimerProcessor[Event, WindowQuantile] {
+      extends KeyTimerProcessor[String, Event, WindowQuantile] {
     require(sliceMs > 0 && windowSlices >= 1)
     require(percents.nonEmpty && percents.forall(p => p > 0 && p <= 100))
     private val spanMs = sliceMs * windowSlices
@@ -63,7 +63,7 @@ object SlidingHistTws {
     private def render(m: mutable.HashMap[Long, Long]): String =
       m.toSeq.sortBy(_._1).map { case (v, c) => s"$v:$c" }.mkString(";")
 
-    override protected def ingest(key: String, rows: Iterator[Event]): Unit =
+    private def ingest(rows: Iterator[Event]): Unit =
       rows.toSeq.groupBy(e => e.tsMs - math.floorMod(e.tsMs, sliceMs))
         .foreach { case (slice, es) =>
           val m = if (sliceHist.containsKey(slice))
@@ -81,8 +81,9 @@ object SlidingHistTws {
 
     /** Emit every pending window the watermark has closed; prune slices
       * no future window needs. */
-    override protected def release(key: String,
+    override protected def step(key: String, rows: Iterator[Event],
         wmMs: Long): Iterator[WindowQuantile] = {
+      ingest(rows)
       if (wmMs == Long.MinValue) return Iterator.empty
       val due = pending.iterator().map(_._1)
         .filter(w => w + spanMs <= wmMs).toArray.sorted

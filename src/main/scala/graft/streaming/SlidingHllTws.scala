@@ -34,7 +34,7 @@ object SlidingHllTws {
       emittedAt: java.sql.Timestamp)
 
   class Processor(p: Int, sliceMs: Long, windowSlices: Int)
-      extends KeyTimerProcessor[Event, WindowSketch] {
+      extends KeyTimerProcessor[String, Event, WindowSketch] {
     require(p >= 4 && p <= 16 && sliceMs > 0 && windowSlices >= 1)
     private val m = 1 << p
     private val windowBits = 64 - p
@@ -70,13 +70,14 @@ object SlidingHllTws {
       }
     }
 
-    override protected def ingest(key: String, rows: Iterator[Event]): Unit =
+    private def ingest(rows: Iterator[Event]): Unit =
       rows.foreach(e => updateSlice(e.tsMs, e.value))
 
     /** Emit every pending window the watermark has closed; prune slices
       * no future window needs. */
-    override protected def release(key: String,
+    override protected def step(key: String, rows: Iterator[Event],
         wmMs: Long): Iterator[WindowSketch] = {
+      ingest(rows)
       if (wmMs == Long.MinValue) return Iterator.empty
       val due = pending.iterator().map(_._1)
         .filter(w => w + spanMs <= wmMs).toArray.sorted

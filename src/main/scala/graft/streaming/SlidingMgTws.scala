@@ -43,7 +43,7 @@ object SlidingMgTws {
       winN: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(k: Int, sliceMs: Long, windowSlices: Int)
-      extends KeyTimerProcessor[Event, WindowSummary] {
+      extends KeyTimerProcessor[String, Event, WindowSummary] {
     require(k >= 1 && sliceMs > 0 && windowSlices >= 1)
     private val spanMs = sliceMs * windowSlices
 
@@ -71,7 +71,7 @@ object SlidingMgTws {
       sb.toString
     }
 
-    override protected def ingest(key: String, rows: Iterator[Event]): Unit =
+    private def ingest(rows: Iterator[Event]): Unit =
       rows.toSeq.groupBy(e => e.tsMs - math.floorMod(e.tsMs, sliceMs))
         .foreach { case (slice, es) =>
           val m = mutable.HashMap.empty[String, Long]
@@ -96,8 +96,9 @@ object SlidingMgTws {
 
     /** Emit every pending window the watermark has closed; prune slices
       * no future window needs. */
-    override protected def release(key: String,
+    override protected def step(key: String, rows: Iterator[Event],
         wmMs: Long): Iterator[WindowSummary] = {
+      ingest(rows)
       if (wmMs == Long.MinValue) return Iterator.empty
       val due = pending.iterator().map(_._1)
         .filter(w => w + spanMs <= wmMs).toArray.sorted

@@ -3,17 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** User-attribute join (reference J10 UserJoin + UserUpdateMerger,
   * P:common/functions/userjoin/UserJoin.java:62-358): partial user-record
   * updates merge per key (latest non-empty field wins), and events join
   * the merged user state as of their timestamp.
   *
-  * Streaming forms: `joinStream` is the full two-tier port of the
-  * reference's fast path — events wait only `fastOooMs` when the user is
-  * already known (UserJoin.java:172-231), re-buffer to the full
-  * `maxOooMs` window when not, and emit UNenriched if the user never
+  * Streaming form: `joinStream` ([[UserJoinTws]]) is the full two-tier
+  * port of the reference's fast path — events wait only `fastOooMs` when
+  * the user is already known (UserJoin.java:172-231), re-buffer to the
+  * full `maxOooMs` window when not, and emit UNenriched if the user never
   * arrives (the reference's until-end-of-window pass). Batch form
   * composes `mergedUpdates` with `operators.AsOfJoin`.
   */
@@ -86,34 +85,20 @@ object UserJoin {
     (out.result(), JoinState(updates, fastStill, slowStill))
   }
 
-  /** Streaming form: flatMapGroupsWithState with event-time timeouts. */
+  /** Streaming form: the [[UserJoinTws]] stage on a raw stream (the
+    * watermark on the events' own time, no payload), projected to
+    * [[Enriched]]. */
   def joinStream(events: Dataset[In], watermarkDelay: String,
       fastOooMs: Long, maxOooMs: Long, ttlMs: Long)(
       implicit spark: SparkSession): Dataset[Enriched] = {
     import spark.implicits._
-    events
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[In]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[JoinState, Enriched](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[JoinState]) =>
-          val st = state.getOption.getOrElse(emptyJoinState)
-          val wm = state.getCurrentWatermarkMs()
-          val (out, next) = advance(key, it.toSeq, st, wm, fastOooMs,
-            maxOooMs, ttlMs)
-          if (next.updates.isEmpty && next.fastPending.isEmpty &&
-              next.slowPending.isEmpty) state.remove()
-          else {
-            state.update(next)
-            val fires = next.fastPending.map(_._1 + fastOooMs) ++
-              next.slowPending.map(_._1 + maxOooMs) ++
-              next.updates.lastOption.map(_._1 + ttlMs)
-            state.setTimeoutTimestamp(math.max(fires.min, wm + 1))
-          }
-          out.iterator
-      }
+    UserJoinTws.joinChained(
+        events.withColumn("payload", lit(""))
+          .withColumn("emittedAt", timestamp_millis(col("tsMs")))
+          .withWatermark("emittedAt", watermarkDelay)
+          .as[UserJoinTws.InAt],
+        fastOooMs, maxOooMs, ttlMs)
+      .drop("payload", "emittedAt").as[Enriched]
   }
 
   /** Batch form (everything resolves; fast/slow tiers converge). */

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig}
 
 /** [[UserJoin]] on `transformWithState` — the chainable J10 port, and the
   * last stage of the reference's flagship output path (joinUserAndOutput,
@@ -13,16 +12,18 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   * with the user attributes effective AT ITS EVENT TIME.
   *
   * The transition is [[UserJoin.advance]] VERBATIM — same two-tier fast
-  * path, same merge semantics, same TTL — so the FMGWS/batch parity specs
-  * keep pinning the logic. What this port adds is row transport: a tws
-  * stage's output type is fixed, so the event's full row rides through as
-  * an opaque `payload` string (to_json at the boundary, from_json after —
-  * the same envelope discipline as the Kafka seam), held in a MapState
-  * sidecar keyed by event id rather than widening the shared state class.
+  * path, same merge semantics, same TTL — on the [[TransitionProcessor]]
+  * timer harness, so the batch parity specs keep pinning the logic. What
+  * this port adds is row transport: a tws stage's output type is fixed,
+  * so the event's full row rides through as an opaque `payload` string
+  * (to_json at the boundary, from_json after — the same envelope
+  * discipline as the Kafka seam), held in a MapState sidecar keyed by
+  * event id rather than widening the shared state class.
   *
-  * Requires the RocksDB state store provider, as all tws ports. */
+  * Runs on the RocksDB state store that `GraftSession` sets for every
+  * `transformWithState` operator. */
 object UserJoinTws {
-  import UserJoin.{In, JoinState, emptyJoinState}
+  import UserJoin.{Enriched, In, JoinState, emptyJoinState}
 
   /** Union-input row: [[UserJoin.In]] + the row payload (side 1 only) +
     * the chain's time column. */
@@ -37,52 +38,43 @@ object UserJoinTws {
       emittedAt: java.sql.Timestamp)
 
   class Processor(fastOooMs: Long, maxOooMs: Long, ttlMs: Long)
-      extends StatefulProcessor[String, InAt, EnrichedAt] {
-
-    @transient private var st: ValueState[JoinState] = _
+      extends TransitionProcessor[String, InAt, JoinState, Enriched,
+        EnrichedAt] {
     @transient private var payloads: MapState[String, String] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[JoinState]("joinState",
-        Encoders.product[JoinState], TTLConfig.NONE)
+    override protected def stateName = "joinState"
+    override protected def stateEncoder = Encoders.product[JoinState]
+    override protected def emptyState = emptyJoinState
+
+    override protected def initState(): Unit = {
+      super.initState()
       payloads = getHandle.getMapState[String, String]("payloads",
         Encoders.STRING, Encoders.STRING, TTLConfig.NONE)
     }
 
-    private def isEmpty(s: JoinState): Boolean =
+    override protected def isEmpty(s: JoinState): Boolean =
       s.updates.isEmpty && s.fastPending.isEmpty && s.slowPending.isEmpty
 
-    private def step(key: String, events: Seq[InAt],
-        wm: Long): Iterator[EnrichedAt] = {
-      events.foreach(e => if (e.side == 1) payloads.updateValue(e.id, e.payload))
-      val cur = if (st.exists()) st.get() else emptyJoinState
-      val (out, next) = UserJoin.advance(key,
-        events.map(e => In(e.key, e.side, e.id, e.tsMs, e.attrs)), cur, wm,
+    override protected def fireAt(s: JoinState): Long =
+      (s.fastPending.map(_._1 + fastOooMs) ++
+        s.slowPending.map(_._1 + maxOooMs) ++
+        s.updates.lastOption.map(_._1 + ttlMs)).min
+
+    override protected def advance(key: String, rows: Seq[InAt],
+        s: JoinState, wmMs: Long): (Seq[Enriched], JoinState) = {
+      rows.foreach(e => if (e.side == 1) payloads.updateValue(e.id, e.payload))
+      UserJoin.advance(key,
+        rows.map(e => In(e.key, e.side, e.id, e.tsMs, e.attrs)), s, wmMs,
         fastOooMs, maxOooMs, ttlMs)
-      if (isEmpty(next)) st.clear()
-      else {
-        st.update(next)
-        val fires = next.fastPending.map(_._1 + fastOooMs) ++
-          next.slowPending.map(_._1 + maxOooMs) ++
-          next.updates.lastOption.map(_._1 + ttlMs)
-        getHandle.registerTimer(math.max(fires.min, wm + 1))
-      }
-      out.iterator.map { e =>
-        val p = if (payloads.containsKey(e.id)) payloads.getValue(e.id) else ""
-        payloads.removeKey(e.id)
-        EnrichedAt(e.key, e.id, e.tsMs, e.attrs, e.path, p,
-          new java.sql.Timestamp(math.max(e.tsMs, wm + 1)))
-      }
     }
 
-    override def handleInputRows(key: String, rows: Iterator[InAt],
-        timerValues: TimerValues): Iterator[EnrichedAt] =
-      step(key, rows.toSeq, timerValues.getCurrentWatermarkInMs())
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[EnrichedAt] =
-      step(key, Seq.empty, math.max(expiredTimerInfo.getExpiryTimeInMs(),
-        timerValues.getCurrentWatermarkInMs()))
+    /** Re-attach the event's payload (and drop it from the sidecar). */
+    override protected def stamp(e: Enriched, wmMs: Long): EnrichedAt = {
+      val p = if (payloads.containsKey(e.id)) payloads.getValue(e.id) else ""
+      payloads.removeKey(e.id)
+      EnrichedAt(e.key, e.id, e.tsMs, e.attrs, e.path, p,
+        new java.sql.Timestamp(math.max(e.tsMs, wmMs + 1)))
+    }
   }
 
   /** Chained-stage form: `events` must already carry an `emittedAt` time

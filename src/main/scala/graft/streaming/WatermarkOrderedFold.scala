@@ -5,29 +5,35 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** One event-time timer per key, for `transformWithState` processors that
-  * wake themselves on watermark progress (the watermark-ordered folds
-  * below and the sliding slice operators). New rows go to `ingest`; then
-  * both entry points (input rows and an expired timer) run `release` at
-  * the current watermark and move the key's single timer to `nextTimer`,
-  * or delete it when nothing more is owed. The timer's time lives in the
-  * `timerAt` long, so the old timer can be deleted when the time moves.
-  * `nextTimer` is always above the watermark (`release` has fired
-  * everything at or below it), so a due timer is never re-parked.
+  * wake themselves on watermark progress (the watermark-ordered folds,
+  * the sliding slice operators and the join chain's transitions below).
+  * Both entry points run `step` at the current watermark — input rows
+  * with the key's new rows, an expired timer with none — then move the
+  * key's single timer to `nextTimer`, or delete it when nothing more is
+  * owed. The timer's time lives in the `timerAt` long, so the old timer
+  * can be deleted when the time moves. `nextTimer` is always above the
+  * watermark (`step` has fired everything at or below it), so a due
+  * timer is never re-parked. A timer fires only once the watermark has
+  * reached it, so the current watermark is the step's watermark on both
+  * paths.
+  *
+  * An expired timer clears `timerAt` only when it is the timer `timerAt`
+  * holds. Any other timer (one left registered by a checkpoint of an
+  * earlier version) runs one step that finds nothing due and leaves the
+  * live timer in place.
   *
   * Subclasses register their own state in `initState`. */
-abstract class KeyTimerProcessor[I, O] extends StatefulProcessor[String, I, O] {
+abstract class KeyTimerProcessor[K, I, O] extends StatefulProcessor[K, I, O] {
   @transient private var timerAt: ValueState[Long] = _
 
   /** Register the operator's own state variables. */
   protected def initState(): Unit
 
-  /** Take one key's new rows into state. */
-  protected def ingest(key: String, rows: Iterator[I]): Unit
+  /** Take one key's new rows (none when a timer fired) into state and
+    * emit what the watermark `wmMs` has released. */
+  protected def step(key: K, rows: Iterator[I], wmMs: Long): Iterator[O]
 
-  /** Emit what the watermark `wmMs` has released for this key. */
-  protected def release(key: String, wmMs: Long): Iterator[O]
-
-  /** When the key's timer should next fire after a release at `wmMs`
+  /** When the key's timer should next fire after a step at `wmMs`
     * (above `wmMs`), or None when the key owes nothing more. */
   protected def nextTimer(wmMs: Long): Option[Long]
 
@@ -37,20 +43,19 @@ abstract class KeyTimerProcessor[I, O] extends StatefulProcessor[String, I, O] {
       TTLConfig.NONE)
   }
 
-  override final def handleInputRows(key: String, rows: Iterator[I],
-      timerValues: TimerValues): Iterator[O] = {
-    ingest(key, rows)
-    onWatermark(key, timerValues.getCurrentWatermarkInMs())
-  }
+  override final def handleInputRows(key: K, rows: Iterator[I],
+      timerValues: TimerValues): Iterator[O] =
+    onWatermark(key, rows, timerValues.getCurrentWatermarkInMs())
 
-  override final def handleExpiredTimer(key: String, timerValues: TimerValues,
+  override final def handleExpiredTimer(key: K, timerValues: TimerValues,
       expiredTimerInfo: ExpiredTimerInfo): Iterator[O] = {
-    timerAt.clear()
-    onWatermark(key, timerValues.getCurrentWatermarkInMs())
+    if (timerAt.exists() && timerAt.get() == expiredTimerInfo.getExpiryTimeInMs())
+      timerAt.clear()
+    onWatermark(key, Iterator.empty, timerValues.getCurrentWatermarkInMs())
   }
 
-  private def onWatermark(key: String, wmMs: Long): Iterator[O] = {
-    val out = release(key, wmMs)
+  private def onWatermark(key: K, rows: Iterator[I], wmMs: Long): Iterator[O] = {
+    val out = step(key, rows, wmMs)
     nextTimer(wmMs) match {
       case Some(next) =>
         if (!timerAt.exists() || timerAt.get() != next) {
@@ -68,6 +73,44 @@ abstract class KeyTimerProcessor[I, O] extends StatefulProcessor[String, I, O] {
   }
 }
 
+/** Timer harness for a pure per-key transition
+  * `advance(key, rows, state, wm) → (out, next)` — the join chain's
+  * stages, whose batch forms and parity checks run the same `advance`.
+  * The harness owns the operator's one `ValueState` (its name and
+  * encoder are the operator's, so checkpoints keep their layout), clears
+  * it when the next state is empty, and keeps the key's single timer at
+  * `max(fireAt(next), wm + 1)`. Each operator supplies only `advance`,
+  * its emptiness test, `fireAt` (the earliest event time at which the
+  * state can change) and `stamp`, which turns a released value into an
+  * output row with its release time. */
+abstract class TransitionProcessor[K, I, S, A, O]
+    extends KeyTimerProcessor[K, I, O] {
+  @transient private var state: ValueState[S] = _
+  private var fire: Option[Long] = None
+
+  protected def stateName: String
+  protected def stateEncoder: Encoder[S]
+  protected def emptyState: S
+  protected def isEmpty(s: S): Boolean
+  protected def fireAt(s: S): Long
+  protected def advance(key: K, rows: Seq[I], s: S, wmMs: Long): (Seq[A], S)
+  protected def stamp(a: A, wmMs: Long): O
+
+  override protected def initState(): Unit =
+    state = getHandle.getValueState[S](stateName, stateEncoder, TTLConfig.NONE)
+
+  override protected final def step(key: K, rows: Iterator[I],
+      wmMs: Long): Iterator[O] = {
+    val cur = if (state.exists()) state.get() else emptyState
+    val (out, next) = advance(key, rows.toSeq, cur, wmMs)
+    if (isEmpty(next)) { state.clear(); fire = None }
+    else { state.update(next); fire = Some(math.max(fireAt(next), wmMs + 1)) }
+    out.iterator.map(stamp(_, wmMs))
+  }
+
+  override protected final def nextTimer(wmMs: Long): Option[Long] = fire
+}
+
 /** Watermark-ordered fold — the reorder buffer of every left-fold
   * operator here (the keyed process function of the reference: buffer
   * until the watermark passes, then fold in event-time order). Rows wait
@@ -83,7 +126,8 @@ abstract class KeyTimerProcessor[I, O] extends StatefulProcessor[String, I, O] {
   * rows into the operator's own total order — the order its batch form
   * sorts by, which is what makes streaming equal batch. State per key is
   * the operator's own plus the buffer, bounded by the watermark delay. */
-abstract class WatermarkOrderedFold[I, O] extends KeyTimerProcessor[I, O] {
+abstract class WatermarkOrderedFold[I, O]
+    extends KeyTimerProcessor[String, I, O] {
   @transient private var pending: ListState[I] = _
 
   /** Encoder of the buffered rows. */
@@ -107,10 +151,9 @@ abstract class WatermarkOrderedFold[I, O] extends KeyTimerProcessor[I, O] {
     pending = getHandle.getListState[I]("pending", rowEncoder, TTLConfig.NONE)
   }
 
-  override protected final def ingest(key: String, rows: Iterator[I]): Unit =
+  override protected final def step(key: String, rows: Iterator[I],
+      wmMs: Long): Iterator[O] = {
     rows.foreach(pending.appendValue)
-
-  override protected final def release(key: String, wmMs: Long): Iterator[O] = {
     val (due, later) = pending.get().toSeq.partition(eventTimeMs(_) <= wmMs)
     val out =
       if (due.isEmpty) Nil

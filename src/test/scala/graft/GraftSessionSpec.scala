@@ -12,7 +12,9 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
       "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
       "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
-      "spark.ui.enabled" -> "false"
+      "spark.ui.enabled" -> "false",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ).foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
   }
 }

@@ -78,62 +78,58 @@ class CounterChainSpec extends SparkSpec {
 
   test("one-query counter chain matches the q29-style batch derivation, " +
       "including the gate's crossing-day cut") {
-    withRocksDb {
-      StateClient.state.clear()
-      val mem = MemoryStream[Ev]
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cc").toString
-      val q = StreamingJobs.counterQueryFamilies(
-        mem.toDF().toDF("platformId", "queryHash", "metric", "tsMs"),
-        StateClient, tmp)
-      // all events in flight up front; the PACING is in the watermark —
-      // it passes tick 1 (qC's day-1 count times out unseen → drops),
-      // then tick 2 (qC's marker lands), then drains the trailing ticks.
-      // Feeding day 2 only after the tick-1 advance would make its rows
-      // LATE (wm already past their event times) and silently dropped.
-      mem.addData(day1 ++ day2: _*)
-      q.processAllAvailable()
-      advancePast(mem, q, Day)
-      advancePast(mem, q, 2 * Day)
-      advancePast(mem, q, 5 * Day) // trailing ticks + final gate releases
-      advancePast(mem, q, 7 * Day)
-      q.stop()
-      assert(stateOf(StateClient, dropZero = true) == batchExpected)
-      // the sliding decrement is visible: the tick after each query's last
-      // activity wrote an explicit zero under its own window key
-      val zeros = stateOf(StateClient, dropZero = false)
-        .filter(_._2 == "0").keySet.map(_._1)
-      assert(zeros == Set(
-        s"qu${S}0${S}qA$S${2 * Day}", s"qu${S}0${S}qC$S${2 * Day}"))
-      // and the never-top query left nothing
-      assert(!stateOf(StateClient, dropZero = false).keySet
-        .exists(_._1.contains("qB")))
-    }
+    StateClient.state.clear()
+    val mem = MemoryStream[Ev]
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cc").toString
+    val q = StreamingJobs.counterQueryFamilies(
+      mem.toDF().toDF("platformId", "queryHash", "metric", "tsMs"),
+      StateClient, tmp)
+    // all events in flight up front; the PACING is in the watermark —
+    // it passes tick 1 (qC's day-1 count times out unseen → drops),
+    // then tick 2 (qC's marker lands), then drains the trailing ticks.
+    // Feeding day 2 only after the tick-1 advance would make its rows
+    // LATE (wm already past their event times) and silently dropped.
+    mem.addData(day1 ++ day2: _*)
+    q.processAllAvailable()
+    advancePast(mem, q, Day)
+    advancePast(mem, q, 2 * Day)
+    advancePast(mem, q, 5 * Day) // trailing ticks + final gate releases
+    advancePast(mem, q, 7 * Day)
+    q.stop()
+    assert(stateOf(StateClient, dropZero = true) == batchExpected)
+    // the sliding decrement is visible: the tick after each query's last
+    // activity wrote an explicit zero under its own window key
+    val zeros = stateOf(StateClient, dropZero = false)
+      .filter(_._2 == "0").keySet.map(_._1)
+    assert(zeros == Set(
+      s"qu${S}0${S}qA$S${2 * Day}", s"qu${S}0${S}qC$S${2 * Day}"))
+    // and the never-top query left nothing
+    assert(!stateOf(StateClient, dropZero = false).keySet
+      .exists(_._1.contains("qB")))
   }
 
   test("counter chain restarts from checkpoint mid-stream") {
-    withRocksDb {
-      StateClient.state.clear()
-      val mem = MemoryStream[Ev]
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cc2").toString
-      def start() = StreamingJobs.counterQueryFamilies(
-        mem.toDF().toDF("platformId", "queryHash", "metric", "tsMs"),
-        StateClient, tmp)
-      // phase A: all events in, watermark past tick 1, kill — day-2
-      // counter buckets, gate seen-flags and delayed lefts all live in
-      // the checkpoint
-      val q1 = start()
-      mem.addData(day1 ++ day2: _*)
-      q1.processAllAvailable()
-      advancePast(mem, q1, Day)
-      q1.stop()
-      // phase B: restart, drain the rest
-      val q2 = start()
-      advancePast(mem, q2, 2 * Day)
-      advancePast(mem, q2, 5 * Day)
-      advancePast(mem, q2, 7 * Day)
-      q2.stop()
-      assert(stateOf(StateClient, dropZero = true) == batchExpected)
-    }
+    StateClient.state.clear()
+    val mem = MemoryStream[Ev]
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cc2").toString
+    def start() = StreamingJobs.counterQueryFamilies(
+      mem.toDF().toDF("platformId", "queryHash", "metric", "tsMs"),
+      StateClient, tmp)
+    // phase A: all events in, watermark past tick 1, kill — day-2
+    // counter buckets, gate seen-flags and delayed lefts all live in
+    // the checkpoint
+    val q1 = start()
+    mem.addData(day1 ++ day2: _*)
+    q1.processAllAvailable()
+    advancePast(mem, q1, Day)
+    q1.stop()
+    // phase B: restart, drain the rest
+    val q2 = start()
+    advancePast(mem, q2, 2 * Day)
+    advancePast(mem, q2, 5 * Day)
+    advancePast(mem, q2, 7 * Day)
+    q2.stop()
+    assert(stateOf(StateClient, dropZero = true) == batchExpected)
   }
 }
 

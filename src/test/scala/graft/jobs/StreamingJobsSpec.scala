@@ -50,50 +50,82 @@ class StreamingJobsSpec extends SparkSpec {
   }
 
   test("flagshipOutput runs the five-stage chain end-to-end to FlatResponseInsertion files") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val (tmp, env) = staged()
-      import graft.sources.LogRequestSplit
-      // dimension frames from the staged batch — the production shape reads
-      // the compacted raw tables' read-optimized views the same way
-      val insertionMeta = LogRequestSplit.deliveryLogs(env).toDF()
-        .select(col("timing.eventApiTimestamp").as("tsMs"),
-          col("request.requestId").as("requestId"),
-          explode(col("insertions")).as("i"))
-        .select(col("i.insertionId").as("insertionId"), col("requestId"),
-          col("i.contentId").as("contentId"), col("tsMs"))
-      val impDetails = LogRequestSplit.impressions(env).toDF()
-        .select(col("impressionId"), col("contentId").as("imp_content"))
-      val actDetails = LogRequestSplit.actions(env).toDF()
-        .select(col("actionId"), col("actionType").as("act_type"))
-      val stream = StreamingJobs.envelopeStream(spark, s"$tmp/in", env.schema)
-      val q = StreamingJobs.flagshipOutput(stream, insertionMeta, impDetails,
-        actDetails, s"$tmp/out", s"$tmp/ckpt",
-        maxTimeMs = 60000L, oooMs = 1000L, gapMs = 60000L)
+    val (tmp, env) = staged()
+    import graft.sources.LogRequestSplit
+    // dimension frames from the staged batch — the production shape reads
+    // the compacted raw tables' read-optimized views the same way
+    val insertionMeta = LogRequestSplit.deliveryLogs(env).toDF()
+      .select(col("timing.eventApiTimestamp").as("tsMs"),
+        col("request.requestId").as("requestId"),
+        explode(col("insertions")).as("i"))
+      .select(col("i.insertionId").as("insertionId"), col("requestId"),
+        col("i.contentId").as("contentId"), col("tsMs"))
+    val impDetails = LogRequestSplit.impressions(env).toDF()
+      .select(col("impressionId"), col("contentId").as("imp_content"))
+    val actDetails = LogRequestSplit.actions(env).toDF()
+      .select(col("actionId"), col("actionType").as("act_type"))
+    val stream = StreamingJobs.envelopeStream(spark, s"$tmp/in", env.schema)
+    val q = StreamingJobs.flagshipOutput(stream, insertionMeta, impDetails,
+      actDetails, s"$tmp/out", s"$tmp/ckpt",
+      maxTimeMs = 60000L, oooMs = 1000L, gapMs = 60000L)
+    q.processAllAvailable()
+    // five chained stateful stages: each appended late file is one
+    // watermark advance; the cascade needs several
+    for (r <- 1 to 8) {
+      FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
+        startMs = 1700000000000L + r * 86400000L)).toDS().toDF()
+        .write.mode("append").parquet(s"$tmp/in")
       q.processAllAvailable()
-      // five chained stateful stages: each appended late file is one
-      // watermark advance; the cascade needs several
-      for (r <- 1 to 8) {
-        FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
-          startMs = 1700000000000L + r * 86400000L)).toDS().toDF()
-          .write.mode("append").parquet(s"$tmp/in")
-        q.processAllAvailable()
-      }
-      q.stop()
-      val out = spark.read.parquet(s"$tmp/out/flat_response_insertion")
-        .where(col("sessionStartMs") < 1700000000000L + 86400000L)
-      assert(out.count() > 0)
-      // sessions carry both cogroup sides and the partition columns
-      assert(out.agg(sum("nActs")).head().getLong(0) > 0)
-      assert(out.agg(sum("nImps")).head().getLong(0) > 0)
-      assert(out.columns.contains("impIds") && out.columns.contains("dt"))
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
+    q.stop()
+    val out = spark.read.parquet(s"$tmp/out/flat_response_insertion")
+      .where(col("sessionStartMs") < 1700000000000L + 86400000L)
+    assert(out.count() > 0)
+    // sessions carry both cogroup sides and the partition columns
+    assert(out.agg(sum("nActs")).head().getLong(0) > 0)
+    assert(out.agg(sum("nImps")).head().getLong(0) > 0)
+    assert(out.columns.contains("impIds") && out.columns.contains("dt"))
+  }
+
+  test("flatOutput streams the insertion-impression join to the batch join's rows") {
+    val (tmp, env) = staged()
+    val q = StreamingJobs.flatOutput(
+      StreamingJobs.envelopeStream(spark, s"$tmp/in", env.schema),
+      s"$tmp/out", s"$tmp/ckpt")
+    q.processAllAvailable()
+    // a file a day later moves the watermark past every pending join
+    val cutoff = 1700000000000L + 86400000L
+    FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
+        startMs = cutoff)).toDS().toDF()
+      .write.mode("append").parquet(s"$tmp/in")
+    q.processAllAvailable()
+    FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
+        startMs = cutoff + 86400000L)).toDS().toDF()
+      .write.mode("append").parquet(s"$tmp/in")
+    q.processAllAvailable(); q.stop()
+
+    import graft.schema.{JoinSideEvent, JoinedPair}
+    import graft.sources.LogRequestSplit
+    val ins = LogRequestSplit.deliveryLogs(env).toDF()
+      .select(col("platformId"), col("userInfo.logUserId").as("logUserId"),
+        col("timing.eventApiTimestamp").as("tsMs"),
+        explode(col("insertions")).as("i"))
+      .select(col("platformId"), col("logUserId"), lit(0).as("side"),
+        col("i.insertionId").as("id"), lit("").as("parentId"), col("tsMs"))
+    val imp = LogRequestSplit.impressions(env).toDF()
+      .select(col("platformId"), col("userInfo.logUserId").as("logUserId"),
+        lit(1).as("side"), col("impressionId").as("id"),
+        col("insertionId").as("parentId"),
+        col("timing.eventApiTimestamp").as("tsMs"))
+    val expected = graft.streaming.InferredJoin.joinBatch(
+      ins.unionByName(imp).as[JoinSideEvent], 30 * 60 * 1000L, 1000L)
+      .collect().toSet
+    assert(expected.exists(_.matchType == "exact"))
+    val got = spark.read.parquet(s"$tmp/out/joined")
+      .where(col("rightTs") < cutoff).drop("eventApiTs", "dt", "hour")
+      .as[JoinedPair].collect()
+    assert(got.length == got.toSet.size)
+    assert(got.toSet == expected)
   }
 
   test("counter streams command frames through the client") {

@@ -37,68 +37,64 @@ class AttributionTwsSpec extends SparkSpec {
   }
 
   test("streaming credits equal the batch window form, late touch folds in order") {
-    withRocksDb {
-      val mem = MemoryStream[AttributionTws.Event]
-      val q = AttributionTws.attribute(mem.toDS(), "2 seconds", lookbackMs)
-        .writeStream.format("memory").queryName("attr_tws")
-        .outputMode("append").start()
-      try {
-        // rows arrive in stream order ≠ event order (3.5s touch late);
-        // user b rides batch 1 so the watermark hasn't passed its 1s conv
-        mem.addData((fixture.take(6) :+ fixture(8)): _*)
-        q.processAllAvailable()
-        mem.addData(fixture.slice(6, 8): _*)
-        q.processAllAvailable()
-        mem.addData(AttributionTws.Event("zzz", 0L, 120000L, isTouch = true))
-        q.processAllAvailable()
-        mem.addData(AttributionTws.Event("zzz", 1L, 240000L, isTouch = true))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("attr_tws")
-        .select("user", "convId", "convTs", "touchId", "touchTs", "lagMs",
-          "attributed")
-        .as[(String, Long, Long, Long, Long, Long, Boolean)].collect()
-        .filterNot(_._1 == "zzz").toSet
-      assert(got == batchCredits)
-      // semantic pins: conv 4s credits the late 3.5s touch (equal-ts
-      // touches invisible), conv 5s credits min-id touch 40, conv 40s and
-      // user b are sentinels
-      val byConv = got.map(c => c._2 -> c).toMap
-      assert(byConv(42L)._4 == 35L, "conv@4s must credit the late 3.5s touch")
-      assert(byConv(50L)._4 == 40L, "equal-ts touches tie-break to min id")
-      assert(byConv(90L)._7 == false && byConv(90L)._4 == -1L)
-      assert(byConv(11L)._7 == false)
-    }
+    val mem = MemoryStream[AttributionTws.Event]
+    val q = AttributionTws.attribute(mem.toDS(), "2 seconds", lookbackMs)
+      .writeStream.format("memory").queryName("attr_tws")
+      .outputMode("append").start()
+    try {
+      // rows arrive in stream order ≠ event order (3.5s touch late);
+      // user b rides batch 1 so the watermark hasn't passed its 1s conv
+      mem.addData((fixture.take(6) :+ fixture(8)): _*)
+      q.processAllAvailable()
+      mem.addData(fixture.slice(6, 8): _*)
+      q.processAllAvailable()
+      mem.addData(AttributionTws.Event("zzz", 0L, 120000L, isTouch = true))
+      q.processAllAvailable()
+      mem.addData(AttributionTws.Event("zzz", 1L, 240000L, isTouch = true))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("attr_tws")
+      .select("user", "convId", "convTs", "touchId", "touchTs", "lagMs",
+        "attributed")
+      .as[(String, Long, Long, Long, Long, Long, Boolean)].collect()
+      .filterNot(_._1 == "zzz").toSet
+    assert(got == batchCredits)
+    // semantic pins: conv 4s credits the late 3.5s touch (equal-ts
+    // touches invisible), conv 5s credits min-id touch 40, conv 40s and
+    // user b are sentinels
+    val byConv = got.map(c => c._2 -> c).toMap
+    assert(byConv(42L)._4 == 35L, "conv@4s must credit the late 3.5s touch")
+    assert(byConv(50L)._4 == 40L, "equal-ts touches tie-break to min id")
+    assert(byConv(90L)._7 == false && byConv(90L)._4 == -1L)
+    assert(byConv(11L)._7 == false)
   }
 
   test("touch state expires once the watermark is stateTtl past it") {
-    withRocksDb {
-      val mem = MemoryStream[AttributionTws.Event]
-      // tiny ttl = lookback: the 1s touch must be GONE when the watermark
-      // reaches 20s, so a (late-ish but in-delay) conv probing afterwards
-      // sees no state even though ts arithmetic alone would attribute it
-      val q = AttributionTws.attribute(mem.toDS(), "10 seconds",
-          lookbackMs = 5000L, stateTtlMs = 5000L)
-        .writeStream.format("memory").queryName("attr_ttl")
-        .outputMode("append").start()
-      try {
-        mem.addData(AttributionTws.Event("u", 1L, 1000L, isTouch = true))
-        q.processAllAvailable()
-        mem.addData(AttributionTws.Event("u", 2L, 30000L, isTouch = true))
-        q.processAllAvailable() // wm → 20s; expire clears the 1s touch
-        mem.addData(AttributionTws.Event("u", 3L, 31000L, isTouch = false))
-        mem.addData(AttributionTws.Event("u", 4L, 45000L, isTouch = true))
-        q.processAllAvailable()
-        mem.addData(AttributionTws.Event("u", 5L, 60000L, isTouch = true))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("attr_ttl")
-        .select("convId", "touchId", "attributed")
-        .as[(Long, Long, Boolean)].collect().toSet
-      // conv at 31s: its valid touch is 30s (in lookback, in state — the
-      // 30s touch itself is younger than the ttl horizon when the conv
-      // drains), so attribution still works across the expiry machinery
-      assert(got == Set((3L, 2L, true)))
-    }
+    val mem = MemoryStream[AttributionTws.Event]
+    // tiny ttl = lookback: the 1s touch must be GONE when the watermark
+    // reaches 20s, so a (late-ish but in-delay) conv probing afterwards
+    // sees no state even though ts arithmetic alone would attribute it
+    val q = AttributionTws.attribute(mem.toDS(), "10 seconds",
+        lookbackMs = 5000L, stateTtlMs = 5000L)
+      .writeStream.format("memory").queryName("attr_ttl")
+      .outputMode("append").start()
+    try {
+      mem.addData(AttributionTws.Event("u", 1L, 1000L, isTouch = true))
+      q.processAllAvailable()
+      mem.addData(AttributionTws.Event("u", 2L, 30000L, isTouch = true))
+      q.processAllAvailable() // wm → 20s; expire clears the 1s touch
+      mem.addData(AttributionTws.Event("u", 3L, 31000L, isTouch = false))
+      mem.addData(AttributionTws.Event("u", 4L, 45000L, isTouch = true))
+      q.processAllAvailable()
+      mem.addData(AttributionTws.Event("u", 5L, 60000L, isTouch = true))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("attr_ttl")
+      .select("convId", "touchId", "attributed")
+      .as[(Long, Long, Boolean)].collect().toSet
+    // conv at 31s: its valid touch is 30s (in lookback, in state — the
+    // 30s touch itself is younger than the ttl horizon when the conv
+    // drains), so attribution still works across the expiry machinery
+    assert(got == Set((3L, 2L, true)))
   }
 }

@@ -22,54 +22,52 @@ class EloTwsSpec extends SparkSpec {
     EloTws.MatchEvent(61000L, 6L, 2L, 1L, aWins = true))
 
   test("streaming trajectory ends at the batch fold's ratings") {
-    withRocksDb {
-      val mem = MemoryStream[EloTws.MatchEvent]
-      val q = EloTws.ratings(mem.toDS(), "1 second")
-        .writeStream.format("memory").queryName("elo_tws")
-        .outputMode("append").start()
-      try {
-        mem.addData(fixture: _*)
-        q.processAllAvailable()
-        mem.addData(lateBatch: _*)
-        q.processAllAvailable()
-        // sentinel pushes the watermark past every buffered match
-        mem.addData(EloTws.MatchEvent(300000L, 99L, 8L, 9L, aWins = true))
-        q.processAllAvailable()
-      } finally q.stop()
-      val pts = spark.table("elo_tws")
-        .select("tsMs", "tieBreak", "winner", "loser", "winnerRating",
-          "loserRating", "nMatches")
-        .as[(Long, Long, Long, Long, Long, Long, Long)]
-        .collect().toSeq.sortBy(p => (p._1, p._2))
+    val mem = MemoryStream[EloTws.MatchEvent]
+    val q = EloTws.ratings(mem.toDS(), "1 second")
+      .writeStream.format("memory").queryName("elo_tws")
+      .outputMode("append").start()
+    try {
+      mem.addData(fixture: _*)
+      q.processAllAvailable()
+      mem.addData(lateBatch: _*)
+      q.processAllAvailable()
+      // sentinel pushes the watermark past every buffered match
+      mem.addData(EloTws.MatchEvent(300000L, 99L, 8L, 9L, aWins = true))
+      q.processAllAvailable()
+    } finally q.stop()
+    val pts = spark.table("elo_tws")
+      .select("tsMs", "tieBreak", "winner", "loser", "winnerRating",
+        "loserRating", "nMatches")
+      .as[(Long, Long, Long, Long, Long, Long, Long)]
+      .collect().toSeq.sortBy(p => (p._1, p._2))
 
-      // 5 real matches (the self-match emitted nothing; the sentinel
-      // stays buffered — nothing pushes the watermark past it)
-      assert(pts.size == 5, s"expected 5 points, got $pts")
-      assert(pts.map(_._7) == (1L to 5L), "running count is the fold order")
+    // 5 real matches (the self-match emitted nothing; the sentinel
+    // stays buffered — nothing pushes the watermark past it)
+    assert(pts.size == 5, s"expected 5 points, got $pts")
+    assert(pts.map(_._7) == (1L to 5L), "running count is the fold order")
 
-      // final per-player rating = last update touching the player
-      val finalRatings = pts.flatMap(p =>
-          Seq((p._3, p._7, p._5), (p._4, p._7, p._6)))
-        .groupBy(_._1).view.mapValues(_.maxBy(_._2)._3).toMap
+    // final per-player rating = last update touching the player
+    val finalRatings = pts.flatMap(p =>
+        Seq((p._3, p._7, p._5), (p._4, p._7, p._6)))
+      .groupBy(_._1).view.mapValues(_.maxBy(_._2)._3).toMap
 
-      // batch fold over the same DRAINED matches (self-match dropped
-      // there too; the sentinel never drained, so it stays out)
-      val all = fixture ++ lateBatch
-      val batch = graft.operators.Preference.eloRatings(
-          all.toDF(), col("playerA"), col("playerB"), col("aWins"),
-          Seq(col("tsMs"), col("tieBreak")))
-        .as[(Long, Long, Long)].collect()
-        .map(r => r._1 -> (r._2, r._3)).toMap
-      assert(finalRatings == batch.view.mapValues(_._1).toMap,
-        s"stream $finalRatings vs batch $batch")
+    // batch fold over the same DRAINED matches (self-match dropped
+    // there too; the sentinel never drained, so it stays out)
+    val all = fixture ++ lateBatch
+    val batch = graft.operators.Preference.eloRatings(
+        all.toDF(), col("playerA"), col("playerB"), col("aWins"),
+        Seq(col("tsMs"), col("tieBreak")))
+      .as[(Long, Long, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(finalRatings == batch.view.mapValues(_._1).toMap,
+      s"stream $finalRatings vs batch $batch")
 
-      // per-player match counts agree too
-      val streamCounts = pts.flatMap(p => Seq(p._3, p._4))
-        .groupBy(identity).view.mapValues(_.size.toLong).toMap
-      assert(streamCounts == batch.view.mapValues(_._2).toMap)
+    // per-player match counts agree too
+    val streamCounts = pts.flatMap(p => Seq(p._3, p._4))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    assert(streamCounts == batch.view.mapValues(_._2).toMap)
 
-      // zero-sum: total drift from the initial rating is exactly 0
-      assert(finalRatings.values.map(_ - 1500L).sum == 0L)
-    }
+    // zero-sum: total drift from the initial rating is exactly 0
+    assert(finalRatings.values.map(_ - 1500L).sum == 0L)
   }
 }

@@ -64,40 +64,38 @@ class FlatChainTwsSpec extends SparkSpec {
   }
 
   test("two chained tws inferred-join stages match the batch composition") {
-    withRocksDb {
-      val mem1 = MemoryStream[ScopedEvent]
-      val mem2 = MemoryStream[ScopedEvent]
-      val stage1 = InferredJoinTws.joinScopedStream(
-        mem1.toDS(), "1 second", W, OOO, rightOuter = true)
-      val out = FlatChainTws.nextStage(stage1, toStage2Left,
-        mem2.toDS(), "1 second", W, OOO, rightOuter = false)
-      val q = out.writeStream.format("memory").queryName("flat_chain_tws")
-        .outputMode("append").start()
-      mem1.addData(stage1Events: _*)
-      mem2.addData(stage2Rhs: _*)
+    val mem1 = MemoryStream[ScopedEvent]
+    val mem2 = MemoryStream[ScopedEvent]
+    val stage1 = InferredJoinTws.joinScopedStream(
+      mem1.toDS(), "1 second", W, OOO, rightOuter = true)
+    val out = FlatChainTws.nextStage(stage1, toStage2Left,
+      mem2.toDS(), "1 second", W, OOO, rightOuter = false)
+    val q = out.writeStream.format("memory").queryName("flat_chain_tws")
+      .outputMode("append").start()
+    mem1.addData(stage1Events: _*)
+    mem2.addData(stage2Rhs: _*)
+    q.processAllAvailable()
+    // advance BOTH source watermarks past every timer, twice: the first
+    // sentinel round moves stage 1 (whose releases then move the chained
+    // watermark), the second lets stage-2 timers fire on the moved value
+    for (ts <- Seq(600000L, 1200000L)) {
+      mem1.addData(ScopedEvent(0, "zz", 1, s"z$ts", "", ts, Seq("zz")))
+      mem2.addData(ScopedEvent(0, "zz", 1, s"y$ts", "", ts, Seq("zz")))
       q.processAllAvailable()
-      // advance BOTH source watermarks past every timer, twice: the first
-      // sentinel round moves stage 1 (whose releases then move the chained
-      // watermark), the second lets stage-2 timers fire on the moved value
-      for (ts <- Seq(600000L, 1200000L)) {
-        mem1.addData(ScopedEvent(0, "zz", 1, s"z$ts", "", ts, Seq("zz")))
-        mem2.addData(ScopedEvent(0, "zz", 1, s"y$ts", "", ts, Seq("zz")))
-        q.processAllAvailable()
-      }
-      q.stop()
-      val got = spark.table("flat_chain_tws")
-        .where(col("logUserId") =!= "zz")
-        .select("logUserId", "leftId", "rightId", "leftTs", "rightTs",
-          "matchType")
-        .as[(String, String, String, Long, Long, String)].collect().toSet
-      assert(got == batchResult)
-      // and the interesting cases really are in there
-      val byRight = got.map(t => t._3 -> t._6).toMap
-      assert(byRight("m1") == "exact")
-      assert(byRight("m2") == "inferred")
-      assert(byRight("m4") == "inferred")
-      assert(byRight("m3") == "dropped") // content mismatch on the rid scope
     }
+    q.stop()
+    val got = spark.table("flat_chain_tws")
+      .where(col("logUserId") =!= "zz")
+      .select("logUserId", "leftId", "rightId", "leftTs", "rightTs",
+        "matchType")
+      .as[(String, String, String, Long, Long, String)].collect().toSet
+    assert(got == batchResult)
+    // and the interesting cases really are in there
+    val byRight = got.map(t => t._3 -> t._6).toMap
+    assert(byRight("m1") == "exact")
+    assert(byRight("m2") == "inferred")
+    assert(byRight("m4") == "inferred")
+    assert(byRight("m3") == "dropped") // content mismatch on the rid scope
   }
 
   // ------------------------------------------------------------------
@@ -235,93 +233,87 @@ class FlatChainTwsSpec extends SparkSpec {
       .as[ReducedSig].collect().toSet
 
   test("full four-stage chain (3 joins + D3 reduce) matches the batch composition") {
-    withRocksDb {
-      val mem1 = MemoryStream[ScopedEvent]
-      val mem2 = MemoryStream[ScopedEvent]
-      val mem3 = MemoryStream[ScopedEvent]
-      val q = fcReduced(mem1, mem2, mem3)
-        .writeStream.format("memory").queryName("flat_full_chain")
-        .outputMode("append").start()
-      mem1.addData(fcStage1: _*)
-      mem2.addData(fcStage2Rhs: _*)
-      mem3.addData(fcStage3Rhs: _*)
-      q.processAllAvailable()
-      fcSentinels(mem1, mem2, mem3, q, 600000L)
-      q.stop()
-      val got = fcCollect("flat_full_chain")
-      assert(got == fcBatchResult)
-      // the cases that prove the composition, pinned explicitly:
-      // event-time root election beat release order (mI inferred < mE exact)
-      assert(got(("u1", "impression", "i1", "mI", "", "", 3000L)))
-      assert(got(("u1", "redundant", "i1", "mE", "", "", 3500L)))
-      // action on the redundant impression re-pointed to the root
-      assert(got(("u1", "action", "i1", "mI", "a1", "", 5000L)))
-      assert(got(("u1", "action", "i1", "mI", "a3", "", 6000L)))
-      // cart-item SEP unpacking survived the chain
-      assert(got(("u3", "action", "i3", "m4", "a2", "C9", 4500L)))
-      // the dropped action never reached the reduction
-      assert(!got.exists(_._5 == "aX"))
-    }
+    val mem1 = MemoryStream[ScopedEvent]
+    val mem2 = MemoryStream[ScopedEvent]
+    val mem3 = MemoryStream[ScopedEvent]
+    val q = fcReduced(mem1, mem2, mem3)
+      .writeStream.format("memory").queryName("flat_full_chain")
+      .outputMode("append").start()
+    mem1.addData(fcStage1: _*)
+    mem2.addData(fcStage2Rhs: _*)
+    mem3.addData(fcStage3Rhs: _*)
+    q.processAllAvailable()
+    fcSentinels(mem1, mem2, mem3, q, 600000L)
+    q.stop()
+    val got = fcCollect("flat_full_chain")
+    assert(got == fcBatchResult)
+    // the cases that prove the composition, pinned explicitly:
+    // event-time root election beat release order (mI inferred < mE exact)
+    assert(got(("u1", "impression", "i1", "mI", "", "", 3000L)))
+    assert(got(("u1", "redundant", "i1", "mE", "", "", 3500L)))
+    // action on the redundant impression re-pointed to the root
+    assert(got(("u1", "action", "i1", "mI", "a1", "", 5000L)))
+    assert(got(("u1", "action", "i1", "mI", "a3", "", 6000L)))
+    // cart-item SEP unpacking survived the chain
+    assert(got(("u3", "action", "i3", "m4", "a2", "C9", 4500L)))
+    // the dropped action never reached the reduction
+    assert(!got.exists(_._5 == "aX"))
   }
 
   test("chained query restarts from checkpoint with all four stages' state intact") {
-    withRocksDb {
-      val mem1 = MemoryStream[ScopedEvent]
-      val mem2 = MemoryStream[ScopedEvent]
-      val mem3 = MemoryStream[ScopedEvent]
-      val cp = java.nio.file.Files.createTempDirectory("graft_fc_cp2").toString
-      val outDir = java.nio.file.Files.createTempDirectory("graft_fc_out").toString
-      // memory sinks can't recover a checkpoint; foreachBatch→parquet can
-      // (at-least-once — replayed batches dedupe in the set comparison)
-      def start() = fcReduced(mem1, mem2, mem3).writeStream
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[RedundantReduceTws.Reduced],
-            _: Long) =>
-          b.write.mode("append").parquet(outDir)
-        }
-        .start()
-      // phase A: views/insertions/impressions flow in; NO watermark push —
-      // everything is still buffered in the four state stores at the kill
-      val q1 = start()
-      mem1.addData(fcStage1: _*)
-      mem2.addData(fcStage2Rhs: _*)
-      q1.processAllAvailable()
-      q1.stop()
-      // phase B: restart from the checkpoint, feed the actions, drain
-      val q2 = start()
-      mem3.addData(fcStage3Rhs: _*)
-      q2.processAllAvailable()
-      fcSentinels(mem1, mem2, mem3, q2, 600000L)
-      q2.stop()
-      val got = spark.read.parquet(outDir)
-        .where(col("logUserId") =!= "zz")
-        .select("logUserId", "kind", "insertionId", "impressionId",
-          "actionId", "contentId", "tsMs")
-        .as[ReducedSig].collect().toSet
-      assert(got == fcBatchResult)
-    }
+    val mem1 = MemoryStream[ScopedEvent]
+    val mem2 = MemoryStream[ScopedEvent]
+    val mem3 = MemoryStream[ScopedEvent]
+    val cp = java.nio.file.Files.createTempDirectory("graft_fc_cp2").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_fc_out").toString
+    // memory sinks can't recover a checkpoint; foreachBatch→parquet can
+    // (at-least-once — replayed batches dedupe in the set comparison)
+    def start() = fcReduced(mem1, mem2, mem3).writeStream
+      .option("checkpointLocation", cp)
+      .outputMode("append")
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[RedundantReduceTws.Reduced],
+          _: Long) =>
+        b.write.mode("append").parquet(outDir)
+      }
+      .start()
+    // phase A: views/insertions/impressions flow in; NO watermark push —
+    // everything is still buffered in the four state stores at the kill
+    val q1 = start()
+    mem1.addData(fcStage1: _*)
+    mem2.addData(fcStage2Rhs: _*)
+    q1.processAllAvailable()
+    q1.stop()
+    // phase B: restart from the checkpoint, feed the actions, drain
+    val q2 = start()
+    mem3.addData(fcStage3Rhs: _*)
+    q2.processAllAvailable()
+    fcSentinels(mem1, mem2, mem3, q2, 600000L)
+    q2.stop()
+    val got = spark.read.parquet(outDir)
+      .where(col("logUserId") =!= "zz")
+      .select("logUserId", "kind", "insertionId", "impressionId",
+        "actionId", "contentId", "tsMs")
+      .as[ReducedSig].collect().toSet
+    assert(got == fcBatchResult)
   }
 
   test("action ids carrying the reserved SelfMarker prefix fail loudly") {
-    withRocksDb {
-      val mem1 = MemoryStream[ScopedEvent]
-      val mem2 = MemoryStream[ScopedEvent]
-      val mem3 = MemoryStream[ScopedEvent]
-      val q = fcReduced(mem1, mem2, mem3)
-        .writeStream.format("memory").queryName("flat_selfmarker_guard")
-        .outputMode("append").start()
-      // an adversarial action id that would otherwise be misclassified as
-      // an impression self-pair in the fused stage-3 output mapping
-      mem3.addData(ScopedEvent(0, "u1", 1,
-        FlatChainTws.SelfMarker + "a1", "mE", 5000L, Seq("")))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-      assert(msgs(e).exists(_.contains("reserved SelfMarker prefix")))
-      q.stop()
+    val mem1 = MemoryStream[ScopedEvent]
+    val mem2 = MemoryStream[ScopedEvent]
+    val mem3 = MemoryStream[ScopedEvent]
+    val q = fcReduced(mem1, mem2, mem3)
+      .writeStream.format("memory").queryName("flat_selfmarker_guard")
+      .outputMode("append").start()
+    // an adversarial action id that would otherwise be misclassified as
+    // an impression self-pair in the fused stage-3 output mapping
+    mem3.addData(ScopedEvent(0, "u1", 1,
+      FlatChainTws.SelfMarker + "a1", "mE", 5000L, Seq("")))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
     }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    assert(msgs(e).exists(_.contains("reserved SelfMarker prefix")))
+    q.stop()
   }
 }

@@ -20,66 +20,62 @@ class LinkageClustersTwsSpec extends SparkSpec {
     LinkageClustersTws.Link(6000L, 20L, 22L)) // closes the triangle
 
   test("final census equals the batch alternating-components census") {
-    withRocksDb {
-      val mem = MemoryStream[LinkageClustersTws.Link]
-      val q = LinkageClustersTws.monitor(mem.toDS(), "2 seconds")
-        .writeStream.format("memory").queryName("lc_tws")
-        .outputMode("append").start()
-      try {
-        mem.addData(fixture.take(4): _*)
-        q.processAllAvailable()
-        mem.addData(fixture.drop(4): _*)
-        q.processAllAvailable()
-        mem.addData(LinkageClustersTws.Link(60000L, 990L, 991L))
-        q.processAllAvailable()
-        // second watermark push releases the 60s link too (the 120s
-        // one stays buffered and is excluded from the batch compare)
-        mem.addData(LinkageClustersTws.Link(120000L, 992L, 993L))
-        q.processAllAvailable()
-      } finally q.stop()
-      val snaps = spark.table("lc_tws")
-        .as[LinkageClustersTws.Snap].collect().toSeq
-      val last = snaps.map(_.seq).max
-      val finalCensus = snaps.filter(_.seq == last)
-        .map(s => s.size -> s.nClusters).toMap
+    val mem = MemoryStream[LinkageClustersTws.Link]
+    val q = LinkageClustersTws.monitor(mem.toDS(), "2 seconds")
+      .writeStream.format("memory").queryName("lc_tws")
+      .outputMode("append").start()
+    try {
+      mem.addData(fixture.take(4): _*)
+      q.processAllAvailable()
+      mem.addData(fixture.drop(4): _*)
+      q.processAllAvailable()
+      mem.addData(LinkageClustersTws.Link(60000L, 990L, 991L))
+      q.processAllAvailable()
+      // second watermark push releases the 60s link too (the 120s
+      // one stays buffered and is excluded from the batch compare)
+      mem.addData(LinkageClustersTws.Link(120000L, 992L, 993L))
+      q.processAllAvailable()
+    } finally q.stop()
+    val snaps = spark.table("lc_tws")
+      .as[LinkageClustersTws.Snap].collect().toSeq
+    val last = snaps.map(_.seq).max
+    val finalCensus = snaps.filter(_.seq == last)
+      .map(s => s.size -> s.nClusters).toMap
 
-      val links = (fixture :+ LinkageClustersTws.Link(60000L, 990L, 991L))
-        .map(l => (l.a, l.b)).toDF("id_a", "id_b")
-      val batch = graft.operators.Graph
-        .alternatingComponents(links, "id_a", "id_b")
-        .groupBy("component").count()
-        .groupBy("count").count()
-        .as[(Long, Long)].collect().toMap
-      assert(finalCensus == batch,
-        s"streaming $finalCensus vs batch $batch")
-      // the merged cluster {1,2,3,10,11} must exist
-      assert(finalCensus(5L) == 1L)
-      assert(finalCensus(3L) == 1L) // the triangle, not double-counted
-    }
+    val links = (fixture :+ LinkageClustersTws.Link(60000L, 990L, 991L))
+      .map(l => (l.a, l.b)).toDF("id_a", "id_b")
+    val batch = graft.operators.Graph
+      .alternatingComponents(links, "id_a", "id_b")
+      .groupBy("component").count()
+      .groupBy("count").count()
+      .as[(Long, Long)].collect().toMap
+    assert(finalCensus == batch,
+      s"streaming $finalCensus vs batch $batch")
+    // the merged cluster {1,2,3,10,11} must exist
+    assert(finalCensus(5L) == 1L)
+    assert(finalCensus(3L) == 1L) // the triangle, not double-counted
   }
 
   test("trajectory is deterministic and monotone in links folded") {
-    withRocksDb {
-      val mem = MemoryStream[LinkageClustersTws.Link]
-      val q = LinkageClustersTws.monitor(mem.toDS(), "1 second")
-        .writeStream.format("memory").queryName("lc_tws_traj")
-        .outputMode("append").start()
-      try {
-        mem.addData(fixture: _*)
-        q.processAllAvailable()
-        mem.addData(LinkageClustersTws.Link(60000L, 990L, 991L))
-        q.processAllAvailable()
-      } finally q.stop()
-      val snaps = spark.table("lc_tws_traj")
-        .as[LinkageClustersTws.Snap].collect().toSeq
-      // nLinks never decreases across seq, nRecords consistent with census
-      val bySeq = snaps.groupBy(_.seq).toSeq.sortBy(_._1)
-      assert(bySeq.map(_._2.head.nLinks) == bySeq.map(_._2.head.nLinks).sorted)
-      bySeq.foreach { case (_, rows) =>
-        val fromCensus = rows.map(r => r.size * r.nClusters).sum
-        assert(fromCensus == rows.head.nRecords,
-          s"census mass $fromCensus != nRecords ${rows.head.nRecords}")
-      }
+    val mem = MemoryStream[LinkageClustersTws.Link]
+    val q = LinkageClustersTws.monitor(mem.toDS(), "1 second")
+      .writeStream.format("memory").queryName("lc_tws_traj")
+      .outputMode("append").start()
+    try {
+      mem.addData(fixture: _*)
+      q.processAllAvailable()
+      mem.addData(LinkageClustersTws.Link(60000L, 990L, 991L))
+      q.processAllAvailable()
+    } finally q.stop()
+    val snaps = spark.table("lc_tws_traj")
+      .as[LinkageClustersTws.Snap].collect().toSeq
+    // nLinks never decreases across seq, nRecords consistent with census
+    val bySeq = snaps.groupBy(_.seq).toSeq.sortBy(_._1)
+    assert(bySeq.map(_._2.head.nLinks) == bySeq.map(_._2.head.nLinks).sorted)
+    bySeq.foreach { case (_, rows) =>
+      val fromCensus = rows.map(r => r.size * r.nClusters).sum
+      assert(fromCensus == rows.head.nRecords,
+        s"census mass $fromCensus != nRecords ${rows.head.nRecords}")
     }
   }
 }

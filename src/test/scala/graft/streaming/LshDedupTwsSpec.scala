@@ -29,67 +29,65 @@ class LshDedupTwsSpec extends SparkSpec {
     LshDedupTws.DocEvent(4L, 60000L, 4L, textC))
 
   test("per-doc collision verdicts and dup census end at the batch values") {
-    withRocksDb {
-      val mem = MemoryStream[LshDedupTws.DocEvent]
-      val q = LshDedupTws.monitor(mem.toDS(), N, NumHashes, Bands,
-          "1 second")
-        .writeStream.format("memory").queryName("lsh_tws")
-        .outputMode("append").start()
-      try {
-        mem.addData(fixture: _*)
-        q.processAllAvailable()
-        mem.addData(lateBatch: _*)
-        q.processAllAvailable()
-        // sentinel pushes the watermark past every buffered doc
-        mem.addData(LshDedupTws.DocEvent(99L, 300000L, 99L,
-          "sentinel words never seen anywhere else at all ever"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val pts = spark.table("lsh_tws")
-        .select("docId", "tsMs", "isDup", "nDocs", "nDups", "dupRateE6")
-        .as[(Long, Long, Boolean, Long, Long, Long)]
-        .collect().toSeq.sortBy(_._4)
+    val mem = MemoryStream[LshDedupTws.DocEvent]
+    val q = LshDedupTws.monitor(mem.toDS(), N, NumHashes, Bands,
+        "1 second")
+      .writeStream.format("memory").queryName("lsh_tws")
+      .outputMode("append").start()
+    try {
+      mem.addData(fixture: _*)
+      q.processAllAvailable()
+      mem.addData(lateBatch: _*)
+      q.processAllAvailable()
+      // sentinel pushes the watermark past every buffered doc
+      mem.addData(LshDedupTws.DocEvent(99L, 300000L, 99L,
+        "sentinel words never seen anywhere else at all ever"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val pts = spark.table("lsh_tws")
+      .select("docId", "tsMs", "isDup", "nDocs", "nDups", "dupRateE6")
+      .as[(Long, Long, Boolean, Long, Long, Long)]
+      .collect().toSeq.sortBy(_._4)
 
-      // 4 signed docs drained (d5 has no 3-shingle; sentinel buffered)
-      assert(pts.map(_._1) == Seq(1L, 2L, 3L, 4L), s"got $pts")
+    // 4 signed docs drained (d5 has no 3-shingle; sentinel buffered)
+    assert(pts.map(_._1) == Seq(1L, 2L, 3L, 4L), s"got $pts")
 
-      // batch replica over the same DRAINED docs: shared signature and
-      // bucket expressions + strictly-earlier-in-total-order occupancy
-      val all = (fixture ++ lateBatch).toDF()
-      val sig = graft.operators.Dedup.minHashSignatures(
-        all, "docId", "text", N, NumHashes)
-      val buckets = sig
-        .withColumn("__band", explode(array(
-          graft.operators.Dedup.bandStructCols(NumHashes, Bands): _*)))
-        .select(col("docId"), col("__band.band").as("band"),
-          col("__band.bucket").as("bucket"))
-        .join(all.select("docId", "tsMs", "tieBreak"), "docId")
-      val w = Window.partitionBy(col("band"), col("bucket"))
-      val batch = buckets
-        .withColumn("first",
-          min(struct(col("tsMs"), col("tieBreak"), col("docId"))).over(w))
-        .withColumn("hadEarlier",
-          col("first") < struct(col("tsMs"), col("tieBreak"), col("docId")))
-        .groupBy(col("docId"))
-        .agg(max(col("hadEarlier")).as("isDup"))
-        .as[(Long, Boolean)].collect().toMap
+    // batch replica over the same DRAINED docs: shared signature and
+    // bucket expressions + strictly-earlier-in-total-order occupancy
+    val all = (fixture ++ lateBatch).toDF()
+    val sig = graft.operators.Dedup.minHashSignatures(
+      all, "docId", "text", N, NumHashes)
+    val buckets = sig
+      .withColumn("__band", explode(array(
+        graft.operators.Dedup.bandStructCols(NumHashes, Bands): _*)))
+      .select(col("docId"), col("__band.band").as("band"),
+        col("__band.bucket").as("bucket"))
+      .join(all.select("docId", "tsMs", "tieBreak"), "docId")
+    val w = Window.partitionBy(col("band"), col("bucket"))
+    val batch = buckets
+      .withColumn("first",
+        min(struct(col("tsMs"), col("tieBreak"), col("docId"))).over(w))
+      .withColumn("hadEarlier",
+        col("first") < struct(col("tsMs"), col("tieBreak"), col("docId")))
+      .groupBy(col("docId"))
+      .agg(max(col("hadEarlier")).as("isDup"))
+      .as[(Long, Boolean)].collect().toMap
 
-      val streamVerdicts = pts.map(p => p._1 -> p._3).toMap
-      assert(streamVerdicts == batch,
-        s"stream $streamVerdicts vs batch $batch")
+    val streamVerdicts = pts.map(p => p._1 -> p._3).toMap
+    assert(streamVerdicts == batch,
+      s"stream $streamVerdicts vs batch $batch")
 
-      // expected shape: d1 first occupant, d2 exact dup, d3 unique, d4
-      // near-dup of d1 (must share at least one band at 8/4 hashes on a
-      // one-word edit — if this ever flaps the fixture must change, not
-      // the assertion)
-      assert(!streamVerdicts(1L) && streamVerdicts(2L) && !streamVerdicts(3L))
-      assert(streamVerdicts(4L), "near-dup d4 missed every band")
+    // expected shape: d1 first occupant, d2 exact dup, d3 unique, d4
+    // near-dup of d1 (must share at least one band at 8/4 hashes on a
+    // one-word edit — if this ever flaps the fixture must change, not
+    // the assertion)
+    assert(!streamVerdicts(1L) && streamVerdicts(2L) && !streamVerdicts(3L))
+    assert(streamVerdicts(4L), "near-dup d4 missed every band")
 
-      // running census: monotone, ends at batch totals, exact e6 rate
-      val last = pts.last
-      assert(last._4 == 4L && last._5 == batch.values.count(identity))
-      assert(last._6 == last._5 * 1000000L / last._4)
-      assert(pts.map(_._4) == Seq(1L, 2L, 3L, 4L))
-    }
+    // running census: monotone, ends at batch totals, exact e6 rate
+    val last = pts.last
+    assert(last._4 == 4L && last._5 == batch.values.count(identity))
+    assert(last._6 == last._5 * 1000000L / last._4)
+    assert(pts.map(_._4) == Seq(1L, 2L, 3L, 4L))
   }
 }

@@ -39,37 +39,35 @@ class PageHinkleyTwsSpec extends SparkSpec {
   }
 
   test("streaming PH equals the batch windows step for step; shift alarms") {
-    withRocksDb {
-      val mem = MemoryStream[PageHinkleyTws.Obs]
-      val q = PageHinkleyTws.detect(mem.toDS(), "2 seconds")
-        .writeStream.format("memory").queryName("ph_tws")
-        .outputMode("append").start()
-      try {
-        mem.addData(fixture: _*)
-        q.processAllAvailable()
-        mem.addData(PageHinkleyTws.Obs("zzz", 60000L, 0L))
-        q.processAllAvailable()
-        mem.addData(PageHinkleyTws.Obs("zzz", 120000L, 0L))
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("ph_tws").filter(col("key") =!= "zzz")
-        .select("key", "tsMs", "n", "u", "ph", "alarm")
-        .as[(String, Long, Long, Long, Long, Boolean)].collect()
+    val mem = MemoryStream[PageHinkleyTws.Obs]
+    val q = PageHinkleyTws.detect(mem.toDS(), "2 seconds")
+      .writeStream.format("memory").queryName("ph_tws")
+      .outputMode("append").start()
+    try {
+      mem.addData(fixture: _*)
+      q.processAllAvailable()
+      mem.addData(PageHinkleyTws.Obs("zzz", 60000L, 0L))
+      q.processAllAvailable()
+      mem.addData(PageHinkleyTws.Obs("zzz", 120000L, 0L))
+      q.processAllAvailable()
+    } finally q.stop()
+    val rows = spark.table("ph_tws").filter(col("key") =!= "zzz")
+      .select("key", "tsMs", "n", "u", "ph", "alarm")
+      .as[(String, Long, Long, Long, Long, Boolean)].collect()
 
-      // every emitted step matches the batch window pipeline exactly
-      val want = batchPh
-      rows.foreach { case (k, t, n, u, ph, _) =>
-        assert(want((k, t)) == ((n, u, ph)), s"($k, $t)")
-      }
-      assert(rows.length == want.size)
-
-      // the late 2.5s row folded in event-time position (n=3 at ts=2500)
-      assert(rows.find(r => r._1 == "a" && r._2 == 2500L).get._3 == 3L)
-
-      // the level shift alarms on key a; calm key b never does
-      val aAlarms = rows.filter(r => r._1 == "a" && r._6).map(_._2)
-      assert(aAlarms.nonEmpty && aAlarms.forall(_ >= 4000L), aAlarms.toSeq)
-      assert(!rows.exists(r => r._1 == "b" && r._6))
+    // every emitted step matches the batch window pipeline exactly
+    val want = batchPh
+    rows.foreach { case (k, t, n, u, ph, _) =>
+      assert(want((k, t)) == ((n, u, ph)), s"($k, $t)")
     }
+    assert(rows.length == want.size)
+
+    // the late 2.5s row folded in event-time position (n=3 at ts=2500)
+    assert(rows.find(r => r._1 == "a" && r._2 == 2500L).get._3 == 3L)
+
+    // the level shift alarms on key a; calm key b never does
+    val aAlarms = rows.filter(r => r._1 == "a" && r._6).map(_._2)
+    assert(aAlarms.nonEmpty && aAlarms.forall(_ >= 4000L), aAlarms.toSeq)
+    assert(!rows.exists(r => r._1 == "b" && r._6))
   }
 }

@@ -44,7 +44,7 @@ class SeenGateSpec extends SparkSpec {
     assert(batch == Set("a1", "a2", "c1"))
 
     val mem = MemoryStream[Event]
-    val q = gateStream(mem.toDS(), "1 second")
+    val q = SeenGateTws.gateStream(mem.toDS(), "1 second")
       .writeStream.format("memory").queryName("seen_gate_stream")
       .outputMode("append").start()
     mem.addData(events: _*)

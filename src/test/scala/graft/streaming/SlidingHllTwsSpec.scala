@@ -37,68 +37,64 @@ class SlidingHllTwsSpec extends SparkSpec {
     SlidingHllTws.Event("b", 2500L, "x2"))
 
   test("emitted windows match per-window reference registers; late row lands") {
-    withRocksDb {
-      val mem = MemoryStream[SlidingHllTws.Event]
-      val q = SlidingHllTws.sketchStream(mem.toDS(), "2 seconds", p, sliceMs, k)
-        .writeStream.format("memory").queryName("shll")
-        .outputMode("append").start()
-      try {
-        mem.addData(fixture.take(3): _*)
-        q.processAllAvailable()
-        mem.addData(fixture.drop(3): _*)
-        q.processAllAvailable()
-        mem.addData(SlidingHllTws.Event("zzz", 60000L, "w")) // close all
-        q.processAllAvailable()
-        mem.addData(SlidingHllTws.Event("zzz", 120000L, "w"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("shll")
-        .select("key", "windowStartMs", "hll")
-        .as[(String, Long, String)].collect()
-        .filterNot(_._1 == "zzz")
-        .map(r => (r._1, r._2) -> r._3).toMap
+    val mem = MemoryStream[SlidingHllTws.Event]
+    val q = SlidingHllTws.sketchStream(mem.toDS(), "2 seconds", p, sliceMs, k)
+      .writeStream.format("memory").queryName("shll")
+      .outputMode("append").start()
+    try {
+      mem.addData(fixture.take(3): _*)
+      q.processAllAvailable()
+      mem.addData(fixture.drop(3): _*)
+      q.processAllAvailable()
+      mem.addData(SlidingHllTws.Event("zzz", 60000L, "w")) // close all
+      q.processAllAvailable()
+      mem.addData(SlidingHllTws.Event("zzz", 120000L, "w"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("shll")
+      .select("key", "windowStartMs", "hll")
+      .as[(String, Long, String)].collect()
+      .filterNot(_._1 == "zzz")
+      .map(r => (r._1, r._2) -> r._3).toMap
 
-      // expected: every window covering a data slice, registers from the
-      // rows whose slice lies inside it
-      val byKey = fixture.groupBy(_.key)
-      val expected = byKey.flatMap { case (key, evs) =>
-        val slices = evs.map(e => e.tsMs - e.tsMs % sliceMs).distinct
-        val wins = slices.flatMap(sl => (0 until k).map(j => sl - j * sliceMs))
-          .distinct
-        wins.map { w =>
-          val inWin = evs.filter(e => {
-            val sl = e.tsMs - e.tsMs % sliceMs
-            sl >= w && sl < w + k * sliceMs
-          })
-          (key, w) -> refHex(inWin.map(_.value))
-        }
+    // expected: every window covering a data slice, registers from the
+    // rows whose slice lies inside it
+    val byKey = fixture.groupBy(_.key)
+    val expected = byKey.flatMap { case (key, evs) =>
+      val slices = evs.map(e => e.tsMs - e.tsMs % sliceMs).distinct
+      val wins = slices.flatMap(sl => (0 until k).map(j => sl - j * sliceMs))
+        .distinct
+      wins.map { w =>
+        val inWin = evs.filter(e => {
+          val sl = e.tsMs - e.tsMs % sliceMs
+          sl >= w && sl < w + k * sliceMs
+        })
+        (key, w) -> refHex(inWin.map(_.value))
       }
-      assert(got == expected)
-      // the late u7 really contributes: window starting at slice 0 for
-      // key "a" covers slices 0..2 and must include u1, u2, u7
-      assert(got(("a", 0L)) == refHex(Seq("u1", "u2", "u7")))
     }
+    assert(got == expected)
+    // the late u7 really contributes: window starting at slice 0 for
+    // key "a" covers slices 0..2 and must include u1, u2, u7
+    assert(got(("a", 0L)) == refHex(Seq("u1", "u2", "u7")))
   }
 
   test("every window emits exactly once") {
-    withRocksDb {
-      val mem = MemoryStream[SlidingHllTws.Event]
-      val q = SlidingHllTws.sketchStream(mem.toDS(), "1 second", p, sliceMs, k)
-        .writeStream.format("memory").queryName("shll_once")
-        .outputMode("append").start()
-      try {
-        fixture.grouped(2).foreach { batch =>
-          mem.addData(batch: _*); q.processAllAvailable()
-        }
-        mem.addData(SlidingHllTws.Event("zzz", 60000L, "w"))
-        q.processAllAvailable()
-        mem.addData(SlidingHllTws.Event("zzz", 120000L, "w"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("shll_once")
-        .select("key", "windowStartMs").as[(String, Long)].collect()
-        .filterNot(_._1 == "zzz").toSeq
-      assert(rows.size == rows.distinct.size, "duplicate window emission")
-    }
+    val mem = MemoryStream[SlidingHllTws.Event]
+    val q = SlidingHllTws.sketchStream(mem.toDS(), "1 second", p, sliceMs, k)
+      .writeStream.format("memory").queryName("shll_once")
+      .outputMode("append").start()
+    try {
+      fixture.grouped(2).foreach { batch =>
+        mem.addData(batch: _*); q.processAllAvailable()
+      }
+      mem.addData(SlidingHllTws.Event("zzz", 60000L, "w"))
+      q.processAllAvailable()
+      mem.addData(SlidingHllTws.Event("zzz", 120000L, "w"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val rows = spark.table("shll_once")
+      .select("key", "windowStartMs").as[(String, Long)].collect()
+      .filterNot(_._1 == "zzz").toSeq
+    assert(rows.size == rows.distinct.size, "duplicate window emission")
   }
 }

@@ -24,60 +24,58 @@ class SlidingMgTwsSpec extends SparkSpec {
   private val late = SlidingMgTws.Event("a", 2 * sliceMs + 500L, "h")
 
   test("window summaries: exact winN, candidate completeness, undercount bound") {
-    withRocksDb {
-      val mem = MemoryStream[SlidingMgTws.Event]
-      val q = SlidingMgTws.summaryStream(mem.toDS(), "2 seconds", k,
-          sliceMs, slices)
-        .writeStream.format("memory").queryName("mg_tws")
-        .outputMode("append").start()
-      try {
-        mem.addData(fixture.take(40): _*)
-        q.processAllAvailable()
-        mem.addData(late +: fixture.drop(40): _*)
-        q.processAllAvailable()
-        mem.addData(SlidingMgTws.Event("zzz", 60000L, "x"))
-        q.processAllAvailable()
-        mem.addData(SlidingMgTws.Event("zzz", 120000L, "x"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("mg_tws")
-        .select("key", "windowStartMs", "mg", "winN")
-        .as[(String, Long, String, Long)].collect()
-        .filter(_._1 == "a")
-        .map(r => r._2 -> (graft.agg.MisraGries.parse(r._3).toMap, r._4))
-        .toMap
+    val mem = MemoryStream[SlidingMgTws.Event]
+    val q = SlidingMgTws.summaryStream(mem.toDS(), "2 seconds", k,
+        sliceMs, slices)
+      .writeStream.format("memory").queryName("mg_tws")
+      .outputMode("append").start()
+    try {
+      mem.addData(fixture.take(40): _*)
+      q.processAllAvailable()
+      mem.addData(late +: fixture.drop(40): _*)
+      q.processAllAvailable()
+      mem.addData(SlidingMgTws.Event("zzz", 60000L, "x"))
+      q.processAllAvailable()
+      mem.addData(SlidingMgTws.Event("zzz", 120000L, "x"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("mg_tws")
+      .select("key", "windowStartMs", "mg", "winN")
+      .as[(String, Long, String, Long)].collect()
+      .filter(_._1 == "a")
+      .map(r => r._2 -> (graft.agg.MisraGries.parse(r._3).toMap, r._4))
+      .toMap
 
-      val all = fixture :+ late
-      // model: per window over the slice grid (slices -2..5 covered)
-      val model = (for {
-        w <- (-2 until 6).map(_ * sliceMs)
-        inWin = all.filter { e =>
-          val sl = e.tsMs - e.tsMs % sliceMs
-          sl >= w && sl < w + slices * sliceMs
-        }
-        if inWin.nonEmpty
-      } yield w -> inWin).toMap
-
-      assert(got.keySet == model.keySet, "every closed window emits once")
-      model.foreach { case (w, rows) =>
-        val (sketch, winN) = got(w)
-        val n = rows.size.toLong
-        assert(winN == n, s"window $w: winN=$winN != $n (must be exact)")
-        val truth = rows.groupBy(_.value).view.mapValues(_.size.toLong).toMap
-        truth.filter { case (_, c) => c > n / (k + 1) }.foreach { case (v, _) =>
-          assert(sketch.contains(v), s"window $w: heavy $v evicted")
-        }
-        sketch.foreach { case (v, c) =>
-          val t = truth.getOrElse(v, 0L)
-          assert(c <= t, s"window $w: $v overcounted $c > $t")
-          assert(c > t - n.toDouble / (k + 1) - 1,
-            s"window $w: $v undercount bound violated ($c vs $t, n=$n)")
-        }
-        assert(sketch.size <= k)
+    val all = fixture :+ late
+    // model: per window over the slice grid (slices -2..5 covered)
+    val model = (for {
+      w <- (-2 until 6).map(_ * sliceMs)
+      inWin = all.filter { e =>
+        val sl = e.tsMs - e.tsMs % sliceMs
+        sl >= w && sl < w + slices * sliceMs
       }
-      // the late row must be inside its event-time windows: window 0
-      // covers slices 0-2 and must count it in winN (26 rows, not 25)
-      assert(got(0L)._2 == model(0L).size.toLong)
+      if inWin.nonEmpty
+    } yield w -> inWin).toMap
+
+    assert(got.keySet == model.keySet, "every closed window emits once")
+    model.foreach { case (w, rows) =>
+      val (sketch, winN) = got(w)
+      val n = rows.size.toLong
+      assert(winN == n, s"window $w: winN=$winN != $n (must be exact)")
+      val truth = rows.groupBy(_.value).view.mapValues(_.size.toLong).toMap
+      truth.filter { case (_, c) => c > n / (k + 1) }.foreach { case (v, _) =>
+        assert(sketch.contains(v), s"window $w: heavy $v evicted")
+      }
+      sketch.foreach { case (v, c) =>
+        val t = truth.getOrElse(v, 0L)
+        assert(c <= t, s"window $w: $v overcounted $c > $t")
+        assert(c > t - n.toDouble / (k + 1) - 1,
+          s"window $w: $v undercount bound violated ($c vs $t, n=$n)")
+      }
+      assert(sketch.size <= k)
     }
+    // the late row must be inside its event-time windows: window 0
+    // covers slices 0-2 and must count it in winN (26 rows, not 25)
+    assert(got(0L)._2 == model(0L).size.toLong)
   }
 }

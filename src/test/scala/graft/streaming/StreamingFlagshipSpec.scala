@@ -191,173 +191,167 @@ class StreamingFlagshipSpec extends SparkSpec {
 
   test("single-query flagship: five chained stateful stages emit " +
       "FlatResponseInsertion matching the batch composition") {
-    withRocksDb {
-      val mem1 = MemoryStream[ScopedEvent]
-      val mem2 = MemoryStream[ScopedEvent]
-      val mem3 = MemoryStream[ScopedEvent]
-      val sessions = FlatChainTws.flagshipSessions(
-        reducedStream(mem1, mem2, mem3), insDetails, impDetails, actDetails,
-        Gap, SessOoo)
-      val q = sessions.writeStream.format("memory")
-        .queryName("flagship_sessions").outputMode("append").start()
-      mem1.addData(stage1: _*)
-      mem2.addData(stage2Rhs: _*)
-      mem3.addData(stage3Rhs: _*)
-      q.processAllAvailable()
-      sentinels(mem1, mem2, mem3, q, 600000L)
-      q.stop()
-      val got = sessSig(spark.table("flagship_sessions"))
-      assert(got == batchSessions)
-      // the structure that proves the composition:
-      // session 1 of i1 = the ROOT impression (mI, not redundant mE) + the
-      // re-pointed action a1; a3 opens a second session 5s later
-      assert(got(("u1", "i1", 3000L, 1L, 1L, "mI", "a1")))
-      assert(got(("u1", "i1", 9000L, 0L, 1L, "", "a3")))
-      // u3: one session; a5 (missing action details → dropped at the
-      // merge) never entered, a2's cart content unpacked upstream
-      assert(got(("u3", "i3", 2500L, 1L, 1L, "m4", "a2")))
-      assert(got.size == 3)
-    }
+    val mem1 = MemoryStream[ScopedEvent]
+    val mem2 = MemoryStream[ScopedEvent]
+    val mem3 = MemoryStream[ScopedEvent]
+    val sessions = FlatChainTws.flagshipSessions(
+      reducedStream(mem1, mem2, mem3), insDetails, impDetails, actDetails,
+      Gap, SessOoo)
+    val q = sessions.writeStream.format("memory")
+      .queryName("flagship_sessions").outputMode("append").start()
+    mem1.addData(stage1: _*)
+    mem2.addData(stage2Rhs: _*)
+    mem3.addData(stage3Rhs: _*)
+    q.processAllAvailable()
+    sentinels(mem1, mem2, mem3, q, 600000L)
+    q.stop()
+    val got = sessSig(spark.table("flagship_sessions"))
+    assert(got == batchSessions)
+    // the structure that proves the composition:
+    // session 1 of i1 = the ROOT impression (mI, not redundant mE) + the
+    // re-pointed action a1; a3 opens a second session 5s later
+    assert(got(("u1", "i1", 3000L, 1L, 1L, "mI", "a1")))
+    assert(got(("u1", "i1", 9000L, 0L, 1L, "", "a3")))
+    // u3: one session; a5 (missing action details → dropped at the
+    // merge) never entered, a2's cart content unpacked upstream
+    assert(got(("u3", "i3", 2500L, 1L, 1L, "m4", "a2")))
+    assert(got.size == 3)
   }
 
   test("five-stage flagship restarts from checkpoint with session state intact") {
-    withRocksDb {
-      val mem1 = MemoryStream[ScopedEvent]
-      val mem2 = MemoryStream[ScopedEvent]
-      val mem3 = MemoryStream[ScopedEvent]
-      val cp = java.nio.file.Files.createTempDirectory("graft_fs_cp").toString
-      val outDir = java.nio.file.Files.createTempDirectory("graft_fs_out").toString
-      def start() = FlatChainTws.flagshipSessions(
-          reducedStream(mem1, mem2, mem3), insDetails, impDetails, actDetails,
-          Gap, SessOoo)
-        .writeStream.option("checkpointLocation", cp).outputMode("append")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[SessionCogroupTws.FlatSession],
-            _: Long) =>
-          b.write.mode("append").parquet(outDir)
-        }
-        .start()
-      // phase A: everything except the actions; all five stores buffering
-      val q1 = start()
-      mem1.addData(stage1: _*)
-      mem2.addData(stage2Rhs: _*)
-      q1.processAllAvailable()
-      q1.stop()
-      // phase B: restart, feed actions, drain
-      val q2 = start()
-      mem3.addData(stage3Rhs: _*)
-      q2.processAllAvailable()
-      sentinels(mem1, mem2, mem3, q2, 600000L)
-      q2.stop()
-      assert(sessSig(spark.read.parquet(outDir)) == batchSessions)
-    }
+    val mem1 = MemoryStream[ScopedEvent]
+    val mem2 = MemoryStream[ScopedEvent]
+    val mem3 = MemoryStream[ScopedEvent]
+    val cp = java.nio.file.Files.createTempDirectory("graft_fs_cp").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_fs_out").toString
+    def start() = FlatChainTws.flagshipSessions(
+        reducedStream(mem1, mem2, mem3), insDetails, impDetails, actDetails,
+        Gap, SessOoo)
+      .writeStream.option("checkpointLocation", cp).outputMode("append")
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[SessionCogroupTws.FlatSession],
+          _: Long) =>
+        b.write.mode("append").parquet(outDir)
+      }
+      .start()
+    // phase A: everything except the actions; all five stores buffering
+    val q1 = start()
+    mem1.addData(stage1: _*)
+    mem2.addData(stage2Rhs: _*)
+    q1.processAllAvailable()
+    q1.stop()
+    // phase B: restart, feed actions, drain
+    val q2 = start()
+    mem3.addData(stage3Rhs: _*)
+    q2.processAllAvailable()
+    sentinels(mem1, mem2, mem3, q2, 600000L)
+    q2.stop()
+    assert(sessSig(spark.read.parquet(outDir)) == batchSessions)
   }
 
   test("production split: query 1 merges details AND user-enriches " +
       "(five stateful stages), query 2 cogroups the staged read") {
-    withRocksDb {
-      val mem1 = MemoryStream[ScopedEvent]
-      val mem2 = MemoryStream[ScopedEvent]
-      val mem3 = MemoryStream[ScopedEvent]
-      // user updates: (logUserId, userId, EVENT ts, arrival-ish stamp) —
-      // tsMs is the merge-semantics time, the stamp only drives the
-      // branch's watermark (the reference's user stream is the same:
-      // old-effective-time records can arrive whenever)
-      val memU = MemoryStream[(String, String, Long, Long)]
-      val joinedDir = java.nio.file.Files.createTempDirectory("graft_fs_joined").toString
-      // query 1: fused chain → stateless JoinedEvent merge → J10 user
-      // join (the reference's joinUserAndOutput position) → parquet
-      val merged = FlatChainTws.mergeFlagshipDetails(
-        reducedStream(mem1, mem2, mem3).toDF()
-          .where(col("kind").isin("impression", "action")),
-        insDetails, impDetails, actDetails)
-      val pSchema = merged.drop("emittedAt").schema
-      val evBranch = merged.select(col("logUserId").as("key"),
-        lit(1).as("side"),
-        when(col("kind") === "impression", col("impressionId"))
-          .otherwise(col("actionId")).as("id"),
-        col("tsMs"), map().cast("map<string,string>").as("attrs"),
-        to_json(struct(pSchema.fieldNames.map(col): _*)).as("payload"),
-        col("emittedAt"))
-      val upBranch = memU.toDF().toDF("key", "uid", "tsMs", "atMs")
-        .withColumn("emittedAt", timestamp_millis(col("atMs")))
-        .withWatermark("emittedAt", "1 second")
-        .select(col("key"), lit(0).as("side"),
-          concat_ws("_", lit("up"), col("key"), col("tsMs")).as("id"),
-          col("tsMs"), map(lit("userId"), col("uid")).as("attrs"),
-          lit("").as("payload"), col("emittedAt"))
-      val MaxOoo = 1400000L // u3's slow release lands between rounds 2 and 3
-      val enriched = UserJoinTws.joinChained(
-        evBranch.unionByName(upBranch).as[UserJoinTws.InAt],
-        fastOooMs = SessOoo, maxOooMs = MaxOoo, ttlMs = 100000000L)
-      val q1 = enriched.toDF()
-        .select(from_json(col("payload"), pSchema).as("r"),
-          element_at(col("attrs"), "userId").as("userId"),
-          col("path"), col("emittedAt"))
-        .select((pSchema.fieldNames.map(n => col(s"r.$n")) ++
-          Seq(col("userId"), col("path"), col("emittedAt"))): _*)
-        .writeStream.outputMode("append")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(joinedDir)
-        }
-        .start()
-      // u1's user record is in place before its events → fast tier
-      memU.addData(("u1", "U1", 400L, 400L))
-      mem1.addData(stage1: _*)
-      mem2.addData(stage2Rhs: _*)
-      mem3.addData(stage3Rhs: _*)
-      q1.processAllAvailable()
-      def round(ts: Long): Unit = {
-        mem1.addData(ScopedEvent(0, "zz", 1, s"z1_$ts", "", ts, Seq("zz")))
-        mem2.addData(ScopedEvent(0, "zz", 1, s"z2_$ts", "", ts, Seq("zz")))
-        mem3.addData(ScopedEvent(0, "zz", 1, s"z3_$ts", "", ts, Seq("zz")))
-        memU.addData(("zz", "", ts, ts))
-        q1.processAllAvailable()
+    val mem1 = MemoryStream[ScopedEvent]
+    val mem2 = MemoryStream[ScopedEvent]
+    val mem3 = MemoryStream[ScopedEvent]
+    // user updates: (logUserId, userId, EVENT ts, arrival-ish stamp) —
+    // tsMs is the merge-semantics time, the stamp only drives the
+    // branch's watermark (the reference's user stream is the same:
+    // old-effective-time records can arrive whenever)
+    val memU = MemoryStream[(String, String, Long, Long)]
+    val joinedDir = java.nio.file.Files.createTempDirectory("graft_fs_joined").toString
+    // query 1: fused chain → stateless JoinedEvent merge → J10 user
+    // join (the reference's joinUserAndOutput position) → parquet
+    val merged = FlatChainTws.mergeFlagshipDetails(
+      reducedStream(mem1, mem2, mem3).toDF()
+        .where(col("kind").isin("impression", "action")),
+      insDetails, impDetails, actDetails)
+    val pSchema = merged.drop("emittedAt").schema
+    val evBranch = merged.select(col("logUserId").as("key"),
+      lit(1).as("side"),
+      when(col("kind") === "impression", col("impressionId"))
+        .otherwise(col("actionId")).as("id"),
+      col("tsMs"), map().cast("map<string,string>").as("attrs"),
+      to_json(struct(pSchema.fieldNames.map(col): _*)).as("payload"),
+      col("emittedAt"))
+    val upBranch = memU.toDF().toDF("key", "uid", "tsMs", "atMs")
+      .withColumn("emittedAt", timestamp_millis(col("atMs")))
+      .withWatermark("emittedAt", "1 second")
+      .select(col("key"), lit(0).as("side"),
+        concat_ws("_", lit("up"), col("key"), col("tsMs")).as("id"),
+        col("tsMs"), map(lit("userId"), col("uid")).as("attrs"),
+        lit("").as("payload"), col("emittedAt"))
+    val MaxOoo = 1400000L // u3's slow release lands between rounds 2 and 3
+    val enriched = UserJoinTws.joinChained(
+      evBranch.unionByName(upBranch).as[UserJoinTws.InAt],
+      fastOooMs = SessOoo, maxOooMs = MaxOoo, ttlMs = 100000000L)
+    val q1 = enriched.toDF()
+      .select(from_json(col("payload"), pSchema).as("r"),
+        element_at(col("attrs"), "userId").as("userId"),
+        col("path"), col("emittedAt"))
+      .select((pSchema.fieldNames.map(n => col(s"r.$n")) ++
+        Seq(col("userId"), col("path"), col("emittedAt"))): _*)
+      .writeStream.outputMode("append")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").parquet(joinedDir)
       }
-      round(600000L); round(1200000L)
-      // u3's record arrives LATE (old effective time, current stamp):
-      // its events already fell off the fast tier and must release SLOW
-      // — enriched all the same
-      memU.addData(("u3", "U3", 400L, 1250000L))
-      for (r <- 3 to 8) round(r * 600000L)
-      q1.stop()
-      // JoinedEvent parity (detail columns + drop channel), as before
-      val staged = spark.read.parquet(joinedDir).where(col("logUserId") =!= "zz")
-      assert(joinedSig(staged) == joinedSig(batchMerged))
-      assert(staged.where(col("status") === "dropped")
-        .select("actionId", "missing")
-        .as[(String, String)].collect().toSeq == Seq(("a5", "ACTION")))
-      // enrichment parity: the batch J10 composition agrees on every
-      // event's userId even though arrival order differed
-      val bIn = batchMerged.select(col("logUserId"),
-          when(col("kind") === "impression", col("impressionId"))
-            .otherwise(col("actionId")).as("id"), col("tsMs"))
-        .as[(String, String, Long)].collect().toSeq
-        .map { case (k, id, ts) => UserJoin.In(k, 1, id, ts, Map.empty) } ++
-        Seq(UserJoin.In("u1", 0, "b_up1", 400L, Map("userId" -> "U1")),
-          UserJoin.In("u3", 0, "b_up3", 400L, Map("userId" -> "U3")))
-      val bEnriched = UserJoin.joinBatch(
-          spark.createDataset(bIn), SessOoo, MaxOoo)
-        .collect().map(e => e.id -> e.attrs.getOrElse("userId", "")).toMap
-      val gotUsers = staged.select("kind", "impressionId", "actionId", "userId", "path")
-        .collect().map(r => (if (r.getString(0) == "impression") r.getString(1)
-          else r.getString(2)) -> (r.getString(3), r.getString(4))).toMap
-      assert(gotUsers.view.mapValues(_._1).toMap == bEnriched)
-      // tier evidence: u1 rode the fast path, u3's late record forced slow
-      assert(gotUsers("mI")._2 == "fast" && gotUsers("a1")._2 == "fast")
-      assert(gotUsers("m4")._2 == "slow" && gotUsers("a2")._2 == "slow")
-      // query 2: staged read → J7 session cogroup (the reference's
-      // downstream-of-materialized-flat-tables shape); enrichment does
-      // not perturb session membership
-      val events = FlatChainTws.flatEvents(
-          spark.readStream.schema(staged.schema).parquet(joinedDir)
-            .where(col("status") === "ok" && col("logUserId") =!= "zz"))
-        .withWatermark("emittedAt", "1 second")
-      val q2 = SessionCogroupTws.cogroupChained(events, Gap, SessOoo)
-        .writeStream.format("memory").queryName("flagship_split_sessions")
-        .outputMode("append").start()
-      q2.processAllAvailable()
-      q2.stop()
-      assert(sessSig(spark.table("flagship_split_sessions")) == batchSessions)
+      .start()
+    // u1's user record is in place before its events → fast tier
+    memU.addData(("u1", "U1", 400L, 400L))
+    mem1.addData(stage1: _*)
+    mem2.addData(stage2Rhs: _*)
+    mem3.addData(stage3Rhs: _*)
+    q1.processAllAvailable()
+    def round(ts: Long): Unit = {
+      mem1.addData(ScopedEvent(0, "zz", 1, s"z1_$ts", "", ts, Seq("zz")))
+      mem2.addData(ScopedEvent(0, "zz", 1, s"z2_$ts", "", ts, Seq("zz")))
+      mem3.addData(ScopedEvent(0, "zz", 1, s"z3_$ts", "", ts, Seq("zz")))
+      memU.addData(("zz", "", ts, ts))
+      q1.processAllAvailable()
     }
+    round(600000L); round(1200000L)
+    // u3's record arrives LATE (old effective time, current stamp):
+    // its events already fell off the fast tier and must release SLOW
+    // — enriched all the same
+    memU.addData(("u3", "U3", 400L, 1250000L))
+    for (r <- 3 to 8) round(r * 600000L)
+    q1.stop()
+    // JoinedEvent parity (detail columns + drop channel), as before
+    val staged = spark.read.parquet(joinedDir).where(col("logUserId") =!= "zz")
+    assert(joinedSig(staged) == joinedSig(batchMerged))
+    assert(staged.where(col("status") === "dropped")
+      .select("actionId", "missing")
+      .as[(String, String)].collect().toSeq == Seq(("a5", "ACTION")))
+    // enrichment parity: the batch J10 composition agrees on every
+    // event's userId even though arrival order differed
+    val bIn = batchMerged.select(col("logUserId"),
+        when(col("kind") === "impression", col("impressionId"))
+          .otherwise(col("actionId")).as("id"), col("tsMs"))
+      .as[(String, String, Long)].collect().toSeq
+      .map { case (k, id, ts) => UserJoin.In(k, 1, id, ts, Map.empty) } ++
+      Seq(UserJoin.In("u1", 0, "b_up1", 400L, Map("userId" -> "U1")),
+        UserJoin.In("u3", 0, "b_up3", 400L, Map("userId" -> "U3")))
+    val bEnriched = UserJoin.joinBatch(
+        spark.createDataset(bIn), SessOoo, MaxOoo)
+      .collect().map(e => e.id -> e.attrs.getOrElse("userId", "")).toMap
+    val gotUsers = staged.select("kind", "impressionId", "actionId", "userId", "path")
+      .collect().map(r => (if (r.getString(0) == "impression") r.getString(1)
+        else r.getString(2)) -> (r.getString(3), r.getString(4))).toMap
+    assert(gotUsers.view.mapValues(_._1).toMap == bEnriched)
+    // tier evidence: u1 rode the fast path, u3's late record forced slow
+    assert(gotUsers("mI")._2 == "fast" && gotUsers("a1")._2 == "fast")
+    assert(gotUsers("m4")._2 == "slow" && gotUsers("a2")._2 == "slow")
+    // query 2: staged read → J7 session cogroup (the reference's
+    // downstream-of-materialized-flat-tables shape); enrichment does
+    // not perturb session membership
+    val events = FlatChainTws.flatEvents(
+        spark.readStream.schema(staged.schema).parquet(joinedDir)
+          .where(col("status") === "ok" && col("logUserId") =!= "zz"))
+      .withWatermark("emittedAt", "1 second")
+    val q2 = SessionCogroupTws.cogroupChained(events, Gap, SessOoo)
+      .writeStream.format("memory").queryName("flagship_split_sessions")
+      .outputMode("append").start()
+    q2.processAllAvailable()
+    q2.stop()
+    assert(sessSig(spark.table("flagship_split_sessions")) == batchSessions)
   }
 }

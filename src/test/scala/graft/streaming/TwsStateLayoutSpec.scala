@@ -14,16 +14,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class TwsStateLayoutSpec extends SparkSpec {
 
   test("CusumTws checkpoint: buffered row in pending, one timer at watermark + 1") {
-    // a child session carries the RocksDB provider so nothing leaks into
-    // the shared session
-    val rs = spark.newSession()
-    rs.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import rs.implicits._
+    import spark.implicits._
     val ckpt = java.nio.file.Files.createTempDirectory("tws_layout").toString
     try {
-      val mem = MemoryStream[CusumTws.Event](rs)
-      val q = CusumTws.monitor(mem.toDS(), "2 seconds", 0L, 0L, 1L)(rs)
+      val mem = MemoryStream[CusumTws.Event](spark)
+      val q = CusumTws.monitor(mem.toDS(), "2 seconds", 0L, 0L, 1L)(spark)
         .writeStream.format("noop").option("checkpointLocation", ckpt)
         .outputMode("append").start()
       try {
@@ -34,7 +29,7 @@ class TwsStateLayoutSpec extends SparkSpec {
       } finally q.stop()
       val wmMs = 3000L
 
-      def read(opts: (String, String)*) = rs.read.format("statestore")
+      def read(opts: (String, String)*) = spark.read.format("statestore")
         .option("path", ckpt).options(opts.toMap).load()
 
       val pending = read("stateVarName" -> "pending")
