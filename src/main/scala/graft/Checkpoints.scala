@@ -19,7 +19,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Usage: `import graft.Checkpoints.TruncateOps` and call
   * `df.truncate(eager)` wherever `df.localCheckpoint(eager)` was
-  * called. Eagerness semantics are passed straight through.
+  * called.
   */
 object Checkpoints {
 
@@ -28,16 +28,14 @@ object Checkpoints {
     df.sparkSession.sparkContext.getCheckpointDir.isDefined
 
   implicit class TruncateOps(private val df: DataFrame) extends AnyVal {
-    /** Truncate lineage: reliable `checkpoint(eager)` when a checkpoint
-      * dir is configured, `localCheckpoint(eager)` otherwise.
-      *
-      * Cost on the reliable path. Eager: the checkpoint job is the only
-      * evaluation of the sub-plan (Spark writes the files straight off
-      * the RDD, no separate action first). Lazy: the first action on the
-      * result evaluates the sub-plan and the checkpoint job that follows
-      * it evaluates it again, so a narrow sub-plan runs twice; one ending
-      * in a shuffle reuses its materialized shuffle and runs once. */
+    /** Truncate lineage: `localCheckpoint(eager)` without a checkpoint
+      * dir; with one, the reliable `checkpoint`, always eager. The eager
+      * checkpoint job is the sub-plan's only evaluation (Spark writes the
+      * files straight off the RDD). A lazy reliable checkpoint would run
+      * a narrow sub-plan twice: once in the first action on the result,
+      * and again in the checkpoint job that follows it. */
     def truncate(eager: Boolean = true): DataFrame =
-      if (reliable(df)) df.checkpoint(eager) else df.localCheckpoint(eager)
+      if (reliable(df)) df.checkpoint(eager = true)
+      else df.localCheckpoint(eager)
   }
 }

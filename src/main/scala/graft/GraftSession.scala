@@ -34,8 +34,8 @@ object GraftSession {
     // every transformWithState operator needs the RocksDB store (the
     // default HDFS-backed store rejects them), and a query's provider is
     // fixed by its first checkpoint; RocksDB also keeps large state off
-    // the heap. The flatMapGroupsWithState operators run on it too, as in
-    // the benchmark's session.
+    // the heap. The FMGWS operators (`KeyedTransition.flatMapGroups`) run
+    // on it too, as in the benchmark's session.
     .config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .getOrCreate()

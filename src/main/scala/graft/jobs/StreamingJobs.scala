@@ -59,7 +59,7 @@ object StreamingJobs {
     * ([[InferredJoin.joinStream]], the `transformWithState` join), joined
     * and dropped pairs (`matchType`) to one dt/hour parquet table.
     *
-    * A checkpoint written by the earlier `flatMapGroupsWithState` form of
+    * A checkpoint written by the earlier FMGWS form of
     * this join cannot restart the `transformWithState` operator: a
     * deployment that ran that form starts on a new checkpoint directory. */
   def flatOutput(envelopes: DataFrame, outDir: String, checkpointDir: String)(
@@ -85,22 +85,6 @@ object StreamingJobs {
         joined.toDF().withColumn("eventApiTs", col("rightTs")),
         "eventApiTs", s"$outDir/joined", s"$checkpointDir/joined")
       .queryName("flat_joined").start()
-  }
-
-  /** Counter job: joined-event stream → sliding counts → command sink. */
-  def counter(events: DataFrame, client: Sinks.CommandClient,
-      checkpointDir: String)(implicit spark: SparkSession): StreamingQuery = {
-    val counts = StreamOps.slidingCounts(
-      events.withColumn("eventTime", timestamp_millis(col("tsMs"))),
-      Seq("platformId", "contentId"), "eventTime", "1 minute",
-      "1 hour", "15 minutes")
-    val commands = counts.select(
-      lit("HSET").as("cmd"),
-      concat_ws("\u001f", col("platformId"), col("contentId")).as("key"),
-      col("window_start_ms").cast("string").as("field"),
-      col("n").cast("string").as("value"), lit(4L * 3600).as("ttlSec"))
-    Sinks.streamCommands(commands, client, s"$checkpointDir/counter")
-      .queryName("counter_commands").start()
   }
 
   /** Flat job tail: actions get their latest-impressions list attached
@@ -139,7 +123,8 @@ object StreamingJobs {
     * Input contract: platformId, logUserId, userId, contentId, osFamily,
     * agentFamily, metric (packed AggMetric long), tsMs.
     *
-    * Stays on the `flatMapGroupsWithState` SlidingCounter by measurement:
+    * Stays on the FMGWS SlidingCounter (`KeyedTransition.flatMapGroups`)
+    * by measurement:
     * moved onto `SlidingCounterTws`, it about doubled the `features_live`
     * benchmark's feature lag on a 4-core box (p50 2.6–3.2 s → 5.5 s,
     * p95 3.5–4.4 s → 7.9 s). */
@@ -301,7 +286,14 @@ object StreamingJobs {
     * sliding counts).
     *
     * Input contract: platformId, queryHash (string), metric (packed
-    * AggMetric long), tsMs. */
+    * AggMetric long), tsMs.
+    *
+    * A checkpoint written before `SlidingCounterTws` kept its state in one
+    * `counterState` value holds the counts in a `buckets` map state and a
+    * `lastEmit` long, which this version no longer reads. Spark restarts
+    * on such a checkpoint without an error and the old counts are lost,
+    * so a deployment that ran the earlier layout must start on a new
+    * checkpoint directory. */
   def counterQueryFamilies(events: DataFrame, client: Sinks.CommandClient,
       checkpointDir: String, watermarkDelay: String = "1 minute",
       emitMs: Long = 86400000L, windowMs: Long = 86400000L,
@@ -367,7 +359,7 @@ object StreamingJobs {
     * (the reference's LastTimeAndCount wiring,
     * CounterJob.java:799-885).
     *
-    * Stays on `flatMapGroupsWithState` with [[counterFamilies]]: with
+    * Stays on FMGWS with [[counterFamilies]]: with
     * both counter jobs on `transformWithState` the `features_live` lag
     * was 5.7 s p50 / 7.9–8.3 s p95, about 2× the FMGWS pair. */
   def counterLastSeen(events: DataFrame, client: Sinks.CommandClient,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.schema.DeliveryLogLite
 
@@ -51,25 +50,16 @@ object CombineDeliveryLog {
   def combineStream(logs: Dataset[DeliveryLogLite], watermarkDelay: String,
       windowMs: Long)(implicit spark: SparkSession): Dataset[DeliveryLogLite] = {
     import spark.implicits._
-    logs
+    val keyed = logs
       .withColumn("eventTime", timestamp_millis(col("tsMs")))
       .withWatermark("eventTime", watermarkDelay)
       .as[DeliveryLogLite]
       .groupByKey(e => (e.platformId, e.logUserId))
-      .flatMapGroupsWithState[State, DeliveryLogLite](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, it, state: GroupState[State]) =>
-          val st = state.getOption.getOrElse(State(Map.empty))
-          val wm = state.getCurrentWatermarkMs()
-          val (out, next) = advance(st, it.toSeq, wm, windowMs)
-          if (next.byClientRequest.isEmpty) state.remove()
-          else {
-            state.update(next)
-            val nextFire = next.byClientRequest.values.map(_.windowOpenTs + windowMs).min
-            state.setTimeoutTimestamp(math.max(nextFire, wm + 1))
-          }
-          out.iterator
-      }
+    KeyedTransition.flatMapGroups(keyed, State(Map.empty))(
+      _.byClientRequest.isEmpty, (_, st) => st.byClientRequest.values
+        .map(_.windowOpenTs + windowMs).minOption) {
+      (_, rows, st, wm) => advance(st, rows, wm, windowMs)
+    }
   }
 
   /** Batch form: merge per (key, clientRequestId) in one pass. */

@@ -40,9 +40,10 @@ object InferredJoinTws {
       s.lefts.isEmpty && s.pendingFk.isEmpty && s.pendingInfer.isEmpty
     // a pending RHS resolves once its out-of-order bound passes; an LHS
     // expires when no RHS in its window can still match it
-    override protected def fireAt(s: ScopedState): Long =
+    override protected def fireAt(key: (Long, String),
+        s: ScopedState): Option[Long] =
       ((s.pendingFk ++ s.pendingInfer).map(_.tsMs + outOfOrderMs) ++
-        s.lefts.values.map(_._1 + maxTimeMs + outOfOrderMs)).min
+        s.lefts.values.map(_._1 + maxTimeMs + outOfOrderMs)).minOption
     override protected def advance(key: (Long, String),
         rows: Seq[ScopedEvent], s: ScopedState,
         wmMs: Long): (Seq[JoinedPair], ScopedState) =

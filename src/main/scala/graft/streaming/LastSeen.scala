@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming A4 (reference LastTimeAndCount,
   * P:common/functions/LastTimeAndCount.java:29-290): per key, remember the
@@ -82,30 +81,20 @@ object LastSeen {
     (out.result(), State(lastTs, days, seq))
   }
 
-  /** Streaming form: flatMapGroupsWithState, event-time timers at each
+  /** Streaming form on [[KeyedTransition.flatMapGroups]], waking at each
     * key's earliest spread cleanup time. */
   def countStream(events: Dataset[Event], watermarkDelay: String,
       ttlDays: Int = 90)(implicit spark: SparkSession): Dataset[Result] = {
     import spark.implicits._
-    events
+    val keyed = events
       .withColumn("eventTime", timestamp_millis(col("tsMs")))
       .withWatermark("eventTime", watermarkDelay)
       .as[Event]
       .groupByKey(_.key)
-      .flatMapGroupsWithState[State, Result](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[State]) =>
-          val st = state.getOption.getOrElse(State(0L, Map.empty, 0L))
-          val wm = state.getCurrentWatermarkMs()
-          val (out, next) = advance(key, it.toSeq, st, wm, ttlDays)
-          if (next.dayCounts.isEmpty) state.remove()
-          else {
-            state.update(next)
-            val nextFire = next.dayCounts.keys
-              .map(cleanupTime(key.hashCode, _, ttlDays)).min
-            state.setTimeoutTimestamp(math.max(nextFire, wm + 1))
-          }
-          out.iterator
-      }
+    KeyedTransition.flatMapGroups(keyed, State(0L, Map.empty, 0L))(
+      _.dayCounts.isEmpty, (key, st) => st.dayCounts.keys
+        .map(cleanupTime(key.hashCode, _, ttlDays)).minOption) {
+      (key, rows, st, wm) => advance(key, rows, st, wm, ttlDays)
+    }
   }
 }

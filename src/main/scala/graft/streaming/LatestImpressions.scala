@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming J8 (reference AddLatestImpressions,
   * P:common/functions/AddLatestImpressions.java:33-388): a keyed
@@ -110,34 +109,27 @@ object LatestImpressions {
     (out.result(), LatestState(imps, actioned, stillPending))
   }
 
-  /** Streaming form: flatMapGroupsWithState with event-time timeouts. */
+  /** Streaming form on [[KeyedTransition.flatMapGroups]], waking when the
+    * earliest pending action resolves or kept entry expires. */
   def attachStream(events: Dataset[Event], watermarkDelay: String, k: Int,
       maxState: Int, sessionMs: Long, oooMs: Long)(
       implicit spark: SparkSession): Dataset[ActionWithLatest] = {
     import spark.implicits._
-    events
+    val keyed = events
       .withColumn("eventTime", timestamp_millis(col("tsMs")))
       .withWatermark("eventTime", watermarkDelay)
       .as[Event]
       .groupByKey(e => (e.platformId, e.logUserId))
-      .flatMapGroupsWithState[LatestState, ActionWithLatest](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[LatestState]) =>
-          val st = state.getOption.getOrElse(emptyState)
-          val wm = state.getCurrentWatermarkMs()
-          val (out, next) = advance(key, it.toSeq, st, wm, k, maxState,
-            sessionMs, oooMs)
-          if (next.impressions.isEmpty && next.actioned.isEmpty &&
-              next.pending.isEmpty) {
-            state.remove()
-          } else {
-            state.update(next)
-            val fires = next.pending.map(_.tsMs + oooMs) ++
-              (next.impressions ++ next.actioned).map(_.tsMs + sessionMs + oooMs)
-            state.setTimeoutTimestamp(math.max(fires.min, wm + 1))
-          }
-          out.iterator
-      }
+    // an action resolves at ts + ooo; a kept entry can age out of the
+    // session at ts + session + ooo
+    KeyedTransition.flatMapGroups(keyed, emptyState)(
+      st => st.impressions.isEmpty && st.actioned.isEmpty && st.pending.isEmpty,
+      (_, st) => (st.pending.map(_.tsMs + oooMs) ++
+        (st.impressions ++ st.actioned).map(_.tsMs + sessionMs + oooMs))
+        .minOption) {
+      (key, rows, st, wm) =>
+        advance(key, rows, st, wm, k, maxState, sessionMs, oooMs)
+    }
   }
 
   /** Batch form over bounded data (everything resolves; caps vacuous). */

@@ -167,10 +167,11 @@ object RedundantReduceTws {
     override protected def isEmpty(s: ReduceState): Boolean =
       s.roots.isEmpty && s.midToIns.isEmpty && s.pendImps.isEmpty &&
         s.pendActs.isEmpty
-    override protected def fireAt(s: ReduceState): Long =
+    override protected def fireAt(key: (Long, String),
+        s: ReduceState): Option[Long] =
       (s.pendImps.map(_._3 + oooMs) ++ s.pendActs.map(_._4 + cleanupMs) ++
         s.roots.values.map(_._1 + 2 * cleanupMs) ++
-        s.midToIns.values.map(_._2 + 2 * cleanupMs)).min
+        s.midToIns.values.map(_._2 + 2 * cleanupMs)).minOption
     override protected def advance(key: (Long, String), rows: Seq[TinyJoined],
         s: ReduceState, wmMs: Long): (Seq[Reduced], ReduceState) =
       RedundantReduceTws.advance(key, rows, s, wmMs, oooMs, replaceTtlMs,

@@ -6,10 +6,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** [[SeenGate]] on Spark 4's `transformWithState` — the successor API to
-  * flatMapGroupsWithState, and the one that may be CHAINED with further
-  * stateful operators in a single streaming query (the FMGWS restriction
-  * that forces one-stateful-stage-per-query goes away). This port is the
-  * template for migrating the other stateful ops: the pure `advance`
+  * FMGWS ([[KeyedTransition.flatMapGroups]]), and the one that may be
+  * CHAINED with further stateful operators in a single streaming query
+  * (the FMGWS restriction that forces one-stateful-stage-per-query goes
+  * away). This port is the template for migrating the other stateful
+  * ops: the pure `advance`
   * logic maps onto typed state variables (ValueState/ListState) plus
   * explicit per-key timers. It is the one streaming form of the gate:
   * SeenGateSpec pins its output against the batch left-semi + bypass.

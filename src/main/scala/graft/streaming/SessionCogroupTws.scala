@@ -100,10 +100,11 @@ object SessionCogroupTws {
       * ooo. Later input that extends that session moves the timer; an
       * early firing just re-checks and re-arms — wasted work, never wrong
       * emission. */
-    override protected def fireAt(s: SessState): Long = {
+    override protected def fireAt(key: (Long, String, String),
+        s: SessState): Option[Long] = {
       val ts = s.events.map(_.tsMs).sorted
       ts.zip(ts.tail).collectFirst { case (a, b) if b - a > gapMs => a }
-        .getOrElse(ts.last) + gapMs + oooMs
+        .orElse(ts.lastOption).map(_ + gapMs + oooMs)
     }
 
     override protected def advance(key: (Long, String, String),

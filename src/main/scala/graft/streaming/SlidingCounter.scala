@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.schema.WindowAggResult
 
@@ -57,23 +56,15 @@ object SlidingCounter {
       emitMs: Long, windowsMs: Seq[Long])(
       implicit spark: SparkSession): Dataset[WindowAggResult] = {
     import spark.implicits._
-    events
+    val keyed = events
       .withColumn("eventTime", timestamp_millis(col("tsMs")))
       .withWatermark("eventTime", watermarkDelay)
       .as[Event]
       .groupByKey(_.key)
-      .flatMapGroupsWithState[State, WindowAggResult](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[State]) =>
-          val st = state.getOption.getOrElse(State(Map.empty, 0L))
-          val wm = state.getCurrentWatermarkMs()
-          val (out, next) = advance(key, it.toSeq, st, wm, emitMs, windowsMs)
-          if (next.buckets.isEmpty) state.remove()
-          else {
-            state.update(next)
-            state.setTimeoutTimestamp(math.max(next.lastEmitMs + emitMs, wm + 1))
-          }
-          out.iterator
-      }
+    // wake at the next emit tick
+    KeyedTransition.flatMapGroups(keyed, State(Map.empty, 0L))(
+      _.buckets.isEmpty, (_, st) => Some(st.lastEmitMs + emitMs)) {
+      (key, rows, st, wm) => advance(key, rows, st, wm, emitMs, windowsMs)
+    }
   }
 }

@@ -2,19 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig,
-  ValueState}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.schema.WindowAggResult
 
-/** [[SlidingCounter]] on `transformWithState` — completes the tws ports of
-  * the stateful family (seen-gate, last-seen, inferred join, redundant
-  * reduce), so counter emission can CHAIN with further stateful stages in
-  * one query (e.g. sliding counts feeding a top-k threshold gate). The
-  * transition logic is [[SlidingCounter.advance]] verbatim; this wrapper
-  * maps it onto typed state (a bucket MapState instead of the FMGWS state
-  * case class — per-bucket point updates, no full-map rewrite per batch)
-  * and one [[KeyTimerProcessor]] timer per key at the emit cadence.
+/** [[SlidingCounter]] on `transformWithState`, so counter emission can
+  * CHAIN with further stateful stages in one query (sliding counts
+  * feeding a seen-gate in `StreamingJobs.counterQueryFamilies`). It is
+  * the same transition, [[SlidingCounter.advance]], on the
+  * [[TransitionProcessor]] harness: the key's whole state in one
+  * `counterState` value, as on FMGWS (see [[CounterState]]), and one
+  * timer per key at the next emit tick.
   *
   * Runs on the RocksDB state store that `GraftSession` sets for every
   * `transformWithState` operator. */
@@ -32,62 +30,34 @@ object SlidingCounterTws {
   case class ResultAt(key: String, windowStartMs: Long, windowSizeMs: Long,
       count: Long, emittedAt: java.sql.Timestamp)
 
+  /** `SlidingCounter.State` as stored: Spark 4.1 derives an Avro schema
+    * for every `transformWithState` state variable, and an Avro map takes
+    * only string keys, so the buckets are kept as (bucket, count) pairs. */
+  case class CounterState(buckets: Seq[(Long, Long)], lastEmitMs: Long)
+
+  /** Both entry points emit every tick the watermark has passed, so a
+    * continuously-hot key emits off its own input and the timer only
+    * covers keys that go quiet with live buckets. */
   class Processor(emitMs: Long, windowsMs: Seq[Long])
-      extends KeyTimerProcessor[String, Event, ResultAt] {
-    @transient private var buckets: MapState[Long, Long] = _
-    @transient private var lastEmit: ValueState[Long] = _
-
-    override protected def initState(): Unit = {
-      buckets = getHandle.getMapState[Long, Long]("buckets",
-        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      lastEmit = getHandle.getValueState[Long]("lastEmit",
-        Encoders.scalaLong, TTLConfig.NONE)
+      extends TransitionProcessor[String, Event, CounterState, WindowAggResult,
+        ResultAt] {
+    override protected def stateName = "counterState"
+    override protected def stateEncoder = Encoders.product[CounterState]
+    override protected def emptyState = CounterState(Nil, 0L)
+    override protected def isEmpty(s: CounterState): Boolean =
+      s.buckets.isEmpty
+    override protected def fireAt(key: String,
+        s: CounterState): Option[Long] = Some(s.lastEmitMs + emitMs)
+    override protected def advance(key: String, rows: Seq[Event],
+        s: CounterState, wmMs: Long): (Seq[WindowAggResult], CounterState) = {
+      val (out, next) = SlidingCounter.advance(key, rows,
+        State(s.buckets.toMap, s.lastEmitMs), wmMs, emitMs, windowsMs)
+      (out, CounterState(next.buckets.toSeq, next.lastEmitMs))
     }
-
-    private def ingest(rows: Iterator[Event]): Unit = {
-      var minBucket = Long.MaxValue
-      rows.foreach { e =>
-        val b = ((e.tsMs + emitMs - 1) / emitMs) * emitMs // ceil-aligned
-        buckets.updateValue(b,
-          (if (buckets.containsKey(b)) buckets.getValue(b) else 0L) + e.n)
-        if (b < minBucket) minBucket = b
-      }
-      // first sight of the key: anchor the cadence one tick before the
-      // earliest bucket (advance's lastEmitMs==0 convention)
-      if (!lastEmit.exists() && minBucket != Long.MaxValue)
-        lastEmit.update(minBucket - emitMs)
-    }
-
-    /** Emit every tick the watermark has passed and point-rewrite the
-      * bucket map (advance only ever drops buckets outside ingest). Both
-      * the input path and the timer path run this, so a continuously-hot
-      * key emits every batch off its own input processing — timers only
-      * cover keys that go QUIET with live buckets (input processing runs
-      * before timer expiry within a batch, so a due timer on a hot key is
-      * a no-op, never the only emission path). */
-    override protected def step(key: String, rows: Iterator[Event],
-        wmMs: Long): Iterator[ResultAt] = {
-      ingest(rows)
-      if (!lastEmit.exists()) return Iterator.empty
-      val st = State(buckets.iterator().map(kv => kv._1 -> kv._2).toMap,
-        lastEmit.get())
-      val (out, next) = SlidingCounter.advance(key, Nil, st, wmMs, emitMs, windowsMs)
-      st.buckets.keysIterator.filterNot(next.buckets.contains)
-        .foreach(buckets.removeKey)
-      lastEmit.update(next.lastEmitMs)
-      if (next.buckets.isEmpty) { buckets.clear(); lastEmit.clear() }
-      out.map(r => ResultAt(r.key, r.windowStartMs, r.windowSizeMs,
-        r.count, new java.sql.Timestamp(
-          math.max(r.windowStartMs + r.windowSizeMs, wmMs + 1)))).iterator
-    }
-
-    /** The next FUTURE tick (step has already fired everything <= wm,
-      * so lastEmit+emitMs > wm here — never delete-and-repark a due
-      * timer, the starvation failure mode for always-active keys); none
-      * once the key drained empty. */
-    override protected def nextTimer(wmMs: Long): Option[Long] =
-      if (!lastEmit.exists()) None
-      else Some(math.max(lastEmit.get() + emitMs, wmMs + 1))
+    override protected def stamp(r: WindowAggResult, wmMs: Long): ResultAt =
+      ResultAt(r.key, r.windowStartMs, r.windowSizeMs, r.count,
+        new java.sql.Timestamp(
+          math.max(r.windowStartMs + r.windowSizeMs, wmMs + 1)))
   }
 
   /** FMGWS-parity form (drops the chaining column). */

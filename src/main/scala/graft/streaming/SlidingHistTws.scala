@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.{MapState, OutputMode}
 
 /** Streaming EXACT sliding-window percentiles — the continuous form of
   * [[graft.agg.Windows.slidingPercentiles]] (the latency-SLO p50/p95/p99
@@ -34,22 +34,17 @@ object SlidingHistTws {
       quantile: Long, winN: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(sliceMs: Long, windowSlices: Int, percents: Seq[Int])
-      extends KeyTimerProcessor[String, Event, WindowQuantile] {
-    require(sliceMs > 0 && windowSlices >= 1)
+      extends SliceWindowProcessor[Event, WindowQuantile](sliceMs, windowSlices) {
     require(percents.nonEmpty && percents.forall(p => p > 0 && p <= 100))
-    private val spanMs = sliceMs * windowSlices
 
     // slice → rendered histogram "v:c;..." (parse/insert/render once per
     // key-batch, the SlidingMgTws discipline)
     @transient private var sliceHist: MapState[Long, String] = _
-    @transient private var pending: MapState[Long, Boolean] = _
 
-    override protected def initState(): Unit = {
-      sliceHist = getHandle.getMapState[Long, String]("sliceHist",
-        Encoders.scalaLong, Encoders.STRING, TTLConfig.NONE)
-      pending = getHandle.getMapState[Long, Boolean]("pending",
-        Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
-    }
+    override protected def initSlices(): Unit =
+      sliceHist = sliceMap("sliceHist", Encoders.STRING)
+
+    override protected def eventTimeMs(e: Event): Long = e.tsMs
 
     private def parse(s: String): mutable.HashMap[Long, Long] = {
       val m = mutable.HashMap.empty[Long, Long]
@@ -63,69 +58,36 @@ object SlidingHistTws {
     private def render(m: mutable.HashMap[Long, Long]): String =
       m.toSeq.sortBy(_._1).map { case (v, c) => s"$v:$c" }.mkString(";")
 
-    private def ingest(rows: Iterator[Event]): Unit =
-      rows.toSeq.groupBy(e => e.tsMs - math.floorMod(e.tsMs, sliceMs))
-        .foreach { case (slice, es) =>
-          val m = if (sliceHist.containsKey(slice))
-            parse(sliceHist.getValue(slice))
-          else mutable.HashMap.empty[Long, Long]
-          es.foreach(e => m.update(e.value, m.getOrElse(e.value, 0L) + 1L))
-          sliceHist.updateValue(slice, render(m))
-          var j = 0
-          while (j < windowSlices) {
-            val wStart = slice - j * sliceMs
-            if (!pending.containsKey(wStart)) pending.updateValue(wStart, true)
-            j += 1
-          }
-        }
-
-    /** Emit every pending window the watermark has closed; prune slices
-      * no future window needs. */
-    override protected def step(key: String, rows: Iterator[Event],
-        wmMs: Long): Iterator[WindowQuantile] = {
-      ingest(rows)
-      if (wmMs == Long.MinValue) return Iterator.empty
-      val due = pending.iterator().map(_._1)
-        .filter(w => w + spanMs <= wmMs).toArray.sorted
-      if (due.isEmpty) return Iterator.empty
-      val emitAt = new java.sql.Timestamp(wmMs)
-      val out = due.iterator.flatMap { w =>
-        val m = mutable.HashMap.empty[Long, Long]
-        var j = 0
-        while (j < windowSlices) {
-          val s = w + j * sliceMs
-          if (sliceHist.containsKey(s))
-            parse(sliceHist.getValue(s)).foreach { case (v, c) =>
-              m.update(v, m.getOrElse(v, 0L) + c)
-            }
-          j += 1
-        }
-        pending.removeKey(w)
-        val sorted = m.toArray.sortBy(_._1)
-        val n = sorted.map(_._2).sum
-        percents.iterator.map { p =>
-          val target = (n * p + 99L) / 100L
-          var cum = 0L
-          var ans = sorted.last._1
-          var i = 0
-          var found = false
-          while (i < sorted.length && !found) {
-            cum += sorted(i)._2
-            if (cum >= target) { ans = sorted(i)._1; found = true }
-            i += 1
-          }
-          WindowQuantile(key, w, p.toLong, ans, n, emitAt)
-        }
-      }.toArray
-      sliceHist.iterator().map(_._1).filter(_ + spanMs <= wmMs).toArray
-        .foreach(sliceHist.removeKey)
-      out.iterator
+    override protected def addToSlice(slice: Long, rows: Seq[Event]): Unit = {
+      val m = if (sliceHist.containsKey(slice)) parse(sliceHist.getValue(slice))
+        else mutable.HashMap.empty[Long, Long]
+      rows.foreach(e => m.update(e.value, m.getOrElse(e.value, 0L) + 1L))
+      sliceHist.updateValue(slice, render(m))
     }
 
-    /** Wake when the earliest open window can close. */
-    override protected def nextTimer(wmMs: Long): Option[Long] =
-      pending.iterator().map(_._1).minOption
-        .map(w => math.max(w + spanMs, wmMs + 1))
+    /** Add the window's slice histograms, then the rank rule per percent. */
+    override protected def merge(key: String, windowStartMs: Long,
+        live: Seq[Long], emittedAt: java.sql.Timestamp): Seq[WindowQuantile] = {
+      val m = mutable.HashMap.empty[Long, Long]
+      live.foreach(s => parse(sliceHist.getValue(s)).foreach { case (v, c) =>
+        m.update(v, m.getOrElse(v, 0L) + c)
+      })
+      val sorted = m.toArray.sortBy(_._1)
+      val n = sorted.map(_._2).sum
+      percents.map { p =>
+        val target = (n * p + 99L) / 100L
+        var cum = 0L
+        var ans = sorted.last._1
+        var i = 0
+        var found = false
+        while (i < sorted.length && !found) {
+          cum += sorted(i)._2
+          if (cum >= target) { ans = sorted(i)._1; found = true }
+          i += 1
+        }
+        WindowQuantile(key, windowStartMs, p.toLong, ans, n, emittedAt)
+      }
+    }
   }
 
   /** Per-key sliding exact percentiles: window = `windowSlices` slices of

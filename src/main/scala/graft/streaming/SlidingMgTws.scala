@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{MapState, OutputMode, TTLConfig}
+import org.apache.spark.sql.streaming.{MapState, OutputMode}
 
 import graft.agg.MisraGries
 
@@ -43,24 +43,20 @@ object SlidingMgTws {
       winN: Long, emittedAt: java.sql.Timestamp)
 
   class Processor(k: Int, sliceMs: Long, windowSlices: Int)
-      extends KeyTimerProcessor[String, Event, WindowSummary] {
-    require(k >= 1 && sliceMs > 0 && windowSlices >= 1)
-    private val spanMs = sliceMs * windowSlices
+      extends SliceWindowProcessor[Event, WindowSummary](sliceMs, windowSlices) {
+    require(k >= 1)
 
     // slice → rendered MG map (parse/insert/render once per key-batch,
     // not per event) and slice → exact row count
     @transient private var sliceMg: MapState[Long, String] = _
     @transient private var sliceN: MapState[Long, Long] = _
-    @transient private var pending: MapState[Long, Boolean] = _
 
-    override protected def initState(): Unit = {
-      sliceMg = getHandle.getMapState[Long, String]("sliceMg",
-        Encoders.scalaLong, Encoders.STRING, TTLConfig.NONE)
-      sliceN = getHandle.getMapState[Long, Long]("sliceN",
-        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      pending = getHandle.getMapState[Long, Boolean]("pending",
-        Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
+    override protected def initSlices(): Unit = {
+      sliceMg = sliceMap("sliceMg", Encoders.STRING)
+      sliceN = sliceMap("sliceN", Encoders.scalaLong)
     }
+
+    override protected def eventTimeMs(e: Event): Long = e.tsMs
 
     private def render(m: mutable.HashMap[String, Long]): String = {
       val sb = new java.lang.StringBuilder
@@ -71,68 +67,35 @@ object SlidingMgTws {
       sb.toString
     }
 
-    private def ingest(rows: Iterator[Event]): Unit =
-      rows.toSeq.groupBy(e => e.tsMs - math.floorMod(e.tsMs, sliceMs))
-        .foreach { case (slice, es) =>
-          val m = mutable.HashMap.empty[String, Long]
-          if (sliceMg.containsKey(slice))
-            MisraGries.parse(sliceMg.getValue(slice))
-              .foreach { case (s, c) => m.update(s, c) }
-          es.foreach { e =>
-            m.update(e.value, m.getOrElse(e.value, 0L) + 1L)
-            if (m.size > 2 * k) MisraGries.prune(m, k)
-          }
-          sliceMg.updateValue(slice, render(m))
-          sliceN.updateValue(slice,
-            (if (sliceN.containsKey(slice)) sliceN.getValue(slice) else 0L)
-              + es.size)
-          var j = 0
-          while (j < windowSlices) {
-            val wStart = slice - j * sliceMs
-            if (!pending.containsKey(wStart)) pending.updateValue(wStart, true)
-            j += 1
-          }
-        }
-
-    /** Emit every pending window the watermark has closed; prune slices
-      * no future window needs. */
-    override protected def step(key: String, rows: Iterator[Event],
-        wmMs: Long): Iterator[WindowSummary] = {
-      ingest(rows)
-      if (wmMs == Long.MinValue) return Iterator.empty
-      val due = pending.iterator().map(_._1)
-        .filter(w => w + spanMs <= wmMs).toArray.sorted
-      if (due.isEmpty) return Iterator.empty
-      val emitAt = new java.sql.Timestamp(wmMs)
-      val out = due.iterator.map { w =>
-        val m = mutable.HashMap.empty[String, Long]
-        var n = 0L
-        var j = 0
-        while (j < windowSlices) {
-          val s = w + j * sliceMs
-          if (sliceMg.containsKey(s)) {
-            MisraGries.parse(sliceMg.getValue(s)).foreach { case (v, c) =>
-              m.update(v, m.getOrElse(v, 0L) + c)
-            }
-            if (m.size > k) MisraGries.prune(m, k)
-            n += sliceN.getValue(s)
-          }
-          j += 1
-        }
-        pending.removeKey(w)
-        WindowSummary(key, w, render(m), n, emitAt)
-      }.toArray
-      // slice H serves windows starting in (H−span, H]; prune once the
-      // last one (start = H) has emitted
-      sliceMg.iterator().map(_._1).filter(_ + spanMs <= wmMs).toArray
-        .foreach { s => sliceMg.removeKey(s); sliceN.removeKey(s) }
-      out.iterator
+    override protected def addToSlice(slice: Long, rows: Seq[Event]): Unit = {
+      val m = mutable.HashMap.empty[String, Long]
+      if (sliceMg.containsKey(slice))
+        MisraGries.parse(sliceMg.getValue(slice))
+          .foreach { case (s, c) => m.update(s, c) }
+      rows.foreach { e =>
+        m.update(e.value, m.getOrElse(e.value, 0L) + 1L)
+        if (m.size > 2 * k) MisraGries.prune(m, k)
+      }
+      sliceMg.updateValue(slice, render(m))
+      sliceN.updateValue(slice,
+        (if (sliceN.containsKey(slice)) sliceN.getValue(slice) else 0L)
+          + rows.size)
     }
 
-    /** Wake when the earliest open window can close. */
-    override protected def nextTimer(wmMs: Long): Option[Long] =
-      pending.iterator().map(_._1).minOption
-        .map(w => math.max(w + spanMs, wmMs + 1))
+    /** Counter addition with the mergeable-MG prune; exact row count. */
+    override protected def merge(key: String, windowStartMs: Long,
+        live: Seq[Long], emittedAt: java.sql.Timestamp): Seq[WindowSummary] = {
+      val m = mutable.HashMap.empty[String, Long]
+      var n = 0L
+      live.foreach { s =>
+        MisraGries.parse(sliceMg.getValue(s)).foreach { case (v, c) =>
+          m.update(v, m.getOrElse(v, 0L) + c)
+        }
+        if (m.size > k) MisraGries.prune(m, k)
+        n += sliceN.getValue(s)
+      }
+      Seq(WindowSummary(key, windowStartMs, render(m), n, emittedAt))
+    }
   }
 
   /** Per-key sliding frequent-items summaries: window = `windowSlices`

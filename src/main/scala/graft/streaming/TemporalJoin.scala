@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming as-of (versioned temporal) join — reference
   * TemporalJoinFunction (P:common/functions/TemporalJoinFunction
@@ -85,22 +84,12 @@ object TemporalJoin {
       .withColumn("eventTime", timestamp_millis(col("tsMs")))
       .withWatermark("eventTime", watermarkDelay)
       .as[In]
-    tagged.groupByKey(_.key)
-      .flatMapGroupsWithState[State, Out](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, it, state: GroupState[State]) =>
-          val st = state.getOption.getOrElse(State(Nil, Nil))
-          val wm = state.getCurrentWatermarkMs()
-          val (out, next) = advance(key, it.toSeq, st, wm)
-          if (next.versions.isEmpty && next.pendingFacts.isEmpty) state.remove()
-          else {
-            state.update(next)
-            if (next.pendingFacts.nonEmpty) {
-              state.setTimeoutTimestamp(
-                math.max(next.pendingFacts.map(_._2).min, wm + 1))
-            }
-          }
-          out.iterator
-      }
+    // a fact resolves once the watermark passes it; versions alone wait
+    // for the key's next input
+    KeyedTransition.flatMapGroups(tagged.groupByKey(_.key), State(Nil, Nil))(
+      st => st.versions.isEmpty && st.pendingFacts.isEmpty,
+      (_, st) => st.pendingFacts.map(_._2).minOption) {
+      (key, rows, st, wm) => advance(key, rows, st, wm)
+    }
   }
 }

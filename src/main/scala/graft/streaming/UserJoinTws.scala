@@ -55,10 +55,10 @@ object UserJoinTws {
     override protected def isEmpty(s: JoinState): Boolean =
       s.updates.isEmpty && s.fastPending.isEmpty && s.slowPending.isEmpty
 
-    override protected def fireAt(s: JoinState): Long =
+    override protected def fireAt(key: String, s: JoinState): Option[Long] =
       (s.fastPending.map(_._1 + fastOooMs) ++
         s.slowPending.map(_._1 + maxOooMs) ++
-        s.updates.lastOption.map(_._1 + ttlMs)).min
+        s.updates.lastOption.map(_._1 + ttlMs)).minOption
 
     override protected def advance(key: String, rows: Seq[InAt],
         s: JoinState, wmMs: Long): (Seq[Enriched], JoinState) = {

@@ -1,12 +1,59 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
+  GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
+  TTLConfig, TimeMode, TimerValues, ValueState}
+
+/** The state-and-timer rule of every keyed transition here, on both Spark
+  * stateful APIs: after `advance(key, rows, state, wm) → (out, next)`, a
+  * key whose next state is empty drops it and owes no wake-up; otherwise
+  * it keeps `next` and wakes at `max(fireAt(key, next), wm + 1)` — never
+  * at or below the watermark, which `advance` has already fired through —
+  * or, when `fireAt` is None, only on its next input.
+  * [[TransitionProcessor]] runs it on `transformWithState`;
+  * [[KeyedTransition.flatMapGroups]] runs it on `flatMapGroupsWithState`
+  * (FMGWS), for operators that no further stateful stage follows: there
+  * the counters measured about half the `features_live` lag they have on
+  * `transformWithState`. */
+object KeyedTransition {
+
+  /** A wake-up owed at `fireMs`, parked above the watermark `wmMs`. */
+  private[streaming] def wakeAt(fireMs: Long, wmMs: Long): Long = math.max(fireMs, wmMs + 1)
+
+  /** The state to keep after a step at `wmMs` with its wake-up, or None
+    * when the key's state is dropped. */
+  private[streaming] def settle[K, S](key: K, next: S, wmMs: Long, isEmpty: S => Boolean,
+      fireAt: (K, S) => Option[Long]): Option[(S, Option[Long])] =
+    if (isEmpty(next)) None
+    else Some((next, fireAt(key, next).map(wakeAt(_, wmMs))))
+
+  /** The transition on `flatMapGroupsWithState` (append mode, event-time
+    * timeout): the state row carries its timeout, which Spark clears on
+    * every call, so a key with no wake-up simply sets none. */
+  def flatMapGroups[K, I, S: Encoder, O: Encoder](
+      grouped: KeyValueGroupedDataset[K, I], emptyState: S)(
+      isEmpty: S => Boolean, fireAt: (K, S) => Option[Long])(
+      advance: (K, Seq[I], S, Long) => (Seq[O], S)): Dataset[O] =
+    grouped.flatMapGroupsWithState[S, O](OutputMode.Append,
+        GroupStateTimeout.EventTimeTimeout) {
+      (key: K, rows: Iterator[I], state: GroupState[S]) =>
+        val wm = state.getCurrentWatermarkMs()
+        val (out, next) =
+          advance(key, rows.toSeq, state.getOption.getOrElse(emptyState), wm)
+        settle(key, next, wm, isEmpty, fireAt) match {
+          case None => state.remove()
+          case Some((s, wake)) =>
+            state.update(s)
+            wake.foreach(state.setTimeoutTimestamp)
+        }
+        out.iterator
+    }
+}
 
 /** One event-time timer per key, for `transformWithState` processors that
   * wake themselves on watermark progress (the watermark-ordered folds,
-  * the sliding slice operators and the join chain's transitions below).
+  * the slice windows and the transitions below).
   * Both entry points run `step` at the current watermark — input rows
   * with the key's new rows, an expired timer with none — then move the
   * key's single timer to `nextTimer`, or delete it when nothing more is
@@ -73,16 +120,16 @@ abstract class KeyTimerProcessor[K, I, O] extends StatefulProcessor[K, I, O] {
   }
 }
 
-/** Timer harness for a pure per-key transition
-  * `advance(key, rows, state, wm) → (out, next)` — the join chain's
-  * stages, whose batch forms and parity checks run the same `advance`.
-  * The harness owns the operator's one `ValueState` (its name and
-  * encoder are the operator's, so checkpoints keep their layout), clears
-  * it when the next state is empty, and keeps the key's single timer at
-  * `max(fireAt(next), wm + 1)`. Each operator supplies only `advance`,
-  * its emptiness test, `fireAt` (the earliest event time at which the
-  * state can change) and `stamp`, which turns a released value into an
-  * output row with its release time. */
+/** [[KeyedTransition]] on `transformWithState`, for a pure per-key
+  * transition `advance(key, rows, state, wm) → (out, next)` — the join
+  * chain's stages and the sliding counter, whose batch forms, FMGWS forms
+  * and parity checks run the same `advance`. The harness owns the
+  * operator's one `ValueState` (its name and encoder are the operator's,
+  * so checkpoints keep their layout) and the key's single timer. Each
+  * operator supplies only `advance`, its empty state and emptiness test,
+  * `fireAt` (the earliest event time at which the state can change) and
+  * `stamp`, which turns a released value into an output row with its
+  * release time. */
 abstract class TransitionProcessor[K, I, S, A, O]
     extends KeyTimerProcessor[K, I, O] {
   @transient private var state: ValueState[S] = _
@@ -92,7 +139,7 @@ abstract class TransitionProcessor[K, I, S, A, O]
   protected def stateEncoder: Encoder[S]
   protected def emptyState: S
   protected def isEmpty(s: S): Boolean
-  protected def fireAt(s: S): Long
+  protected def fireAt(key: K, s: S): Option[Long]
   protected def advance(key: K, rows: Seq[I], s: S, wmMs: Long): (Seq[A], S)
   protected def stamp(a: A, wmMs: Long): O
 
@@ -103,12 +150,96 @@ abstract class TransitionProcessor[K, I, S, A, O]
       wmMs: Long): Iterator[O] = {
     val cur = if (state.exists()) state.get() else emptyState
     val (out, next) = advance(key, rows.toSeq, cur, wmMs)
-    if (isEmpty(next)) { state.clear(); fire = None }
-    else { state.update(next); fire = Some(math.max(fireAt(next), wmMs + 1)) }
+    fire = KeyedTransition.settle(key, next, wmMs, isEmpty, fireAt) match {
+      case None => state.clear(); None
+      case Some((s, wake)) => state.update(s); wake
+    }
     out.iterator.map(stamp(_, wmMs))
   }
 
   override protected final def nextTimer(wmMs: Long): Option[Long] = fire
+}
+
+/** Sliding windows over event-time slices — the sketch operators' harness.
+  * Per key, rows fold into slices of `sliceMs` in arrival order (no
+  * reorder buffer: each operator's slice update tolerates any order), and
+  * each window of `windowSlices` slices, advancing per slice, emits once
+  * the watermark passes its end, stamped `emittedAt` = the release
+  * watermark. The
+  * harness owns the `pending` map of windows owed an emission (every
+  * window covering a slice that got rows), takes the due ones in start
+  * order, drops the slices no open window needs (slice H's last window
+  * starts at H), and wakes the key at the earliest pending window's end.
+  *
+  * Each operator registers its slice state through `sliceMap`, under its
+  * own names (the first map registered lists the live slices), and
+  * supplies `addToSlice` and `merge`. State per key is bounded by the
+  * window span plus the watermark delay. */
+abstract class SliceWindowProcessor[I, O](sliceMs: Long, windowSlices: Int)
+    extends KeyTimerProcessor[String, I, O] {
+  require(sliceMs > 0 && windowSlices >= 1)
+  private val spanMs = sliceMs * windowSlices
+  @transient private var sliceMaps: Vector[MapState[Long, _]] = _
+  @transient private var pending: MapState[Long, Boolean] = _
+
+  /** Register the slice state, each map through `sliceMap`. */
+  protected def initSlices(): Unit
+
+  /** Event time of a row. */
+  protected def eventTimeMs(row: I): Long
+
+  /** Fold one slice's new rows, in arrival order, into its state. */
+  protected def addToSlice(slice: Long, rows: Seq[I]): Unit
+
+  /** Output rows of the window starting at `windowStartMs`, from its live
+    * slices (in start order). */
+  protected def merge(key: String, windowStartMs: Long, slices: Seq[Long],
+      emittedAt: java.sql.Timestamp): Seq[O]
+
+  /** Register a map keyed by slice start. */
+  protected final def sliceMap[V](name: String,
+      valueEncoder: Encoder[V]): MapState[Long, V] = {
+    val m = getHandle.getMapState[Long, V](name, Encoders.scalaLong,
+      valueEncoder, TTLConfig.NONE)
+    sliceMaps :+= m
+    m
+  }
+
+  override protected final def initState(): Unit = {
+    sliceMaps = Vector.empty
+    initSlices()
+    pending = getHandle.getMapState[Long, Boolean]("pending",
+      Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
+  }
+
+  override protected final def step(key: String, rows: Iterator[I],
+      wmMs: Long): Iterator[O] = {
+    rows.toSeq
+      .groupBy { r => val t = eventTimeMs(r); t - math.floorMod(t, sliceMs) }
+      .foreach { case (slice, sliceRows) =>
+        addToSlice(slice, sliceRows)
+        for (j <- 0 until windowSlices) {
+          val w = slice - j * sliceMs
+          if (!pending.containsKey(w)) pending.updateValue(w, true)
+        }
+      }
+    val due = pending.keys().filter(_ + spanMs <= wmMs).toArray.sorted
+    if (due.isEmpty) return Iterator.empty
+    val emittedAt = new java.sql.Timestamp(wmMs)
+    val live = sliceMaps.head
+    val out = due.toSeq.flatMap { w =>
+      pending.removeKey(w)
+      merge(key, w, (0 until windowSlices).map(w + _ * sliceMs)
+        .filter(live.containsKey), emittedAt)
+    }
+    live.keys().filter(_ + spanMs <= wmMs).toArray
+      .foreach(s => sliceMaps.foreach(_.removeKey(s)))
+    out.iterator
+  }
+
+  override protected final def nextTimer(wmMs: Long): Option[Long] =
+    pending.keys().minOption
+      .map(w => KeyedTransition.wakeAt(w + spanMs, wmMs))
 }
 
 /** Watermark-ordered fold — the reorder buffer of every left-fold

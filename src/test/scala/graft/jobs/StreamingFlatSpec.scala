@@ -7,7 +7,8 @@ import graft.streaming.InferredJoin
 import org.apache.spark.sql.functions._
 
 /** End-to-end streaming slice of the join job: parquet file stream →
-  * envelope split → inferred join (FMGWS) → memory sink, compared against
+  * envelope split → inferred join (`InferredJoin.joinStream`, on
+  * `transformWithState`) → memory sink, compared against
   * the identical batch run — the readStream/writeStream counterpart of the
   * reference's streams-as-batch equivalence. */
 class StreamingFlatSpec extends SparkSpec {
@@ -95,7 +96,7 @@ class StreamingFlatSpec extends SparkSpec {
     }
 
     // phase 1: first half only — joins whose RHS is still pending stay
-    // in FMGWS state when the query stops
+    // in the join's state when the query stops
     staged.take(half).toSeq.toDS().repartition(1).write.parquet(s"$tmp/in/batch=0")
     run()
     // phase 2: RESTART from the same checkpoint with the rest + watermark

