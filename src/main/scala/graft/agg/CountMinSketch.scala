@@ -2,9 +2,7 @@ package graft.agg
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.RollingHash
 
@@ -27,61 +25,9 @@ import graft.functions.RollingHash
   * sparse, deterministic, storable. */
 case class CountMinAgg(child: Expression, depth: Int, width: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
-  require(depth >= 1 && depth <= 16, s"depth=$depth out of range")
-  require(width >= 2 && (width & (width - 1)) == 0, s"width=$width not a power of 2")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
+    extends SketchAggregate(CountMinSketch.Algebra(depth, width),
+      mergesRenders = false) {
   override def prettyName: String = "count_min"
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](depth * width)
-
-  override def update(buf: Array[Long], row: org.apache.spark.sql.catalyst.InternalRow)
-      : Array[Long] = {
-    val v = child.eval(row)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String].toString
-      var r = 0
-      while (r < depth) {
-        val h = RollingHash.polyHash64((r + ":" + s).getBytes("UTF-8"))
-        buf(r * width + (h & (width - 1)).toInt) += 1L
-        r += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = {
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < buf.length) {
-      if (buf(i) != 0L) {
-        if (sb.length > 0) sb.append(',')
-        sb.append(i).append(':').append(buf(i))
-      }
-      i += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong())
-  }
-
   override def withNewMutableAggBufferOffset(off: Int): CountMinAgg =
     copy(mutableAggBufferOffset = off)
   override def withNewInputAggBufferOffset(off: Int): CountMinAgg =
@@ -94,64 +40,14 @@ case class CountMinAgg(child: Expression, depth: Int, width: Int,
   * "idx:count" renderings ([[CountMinAgg]] output) cell-wise — counters
   * are sums, so slice sketches ADD into range sketches exactly (the
   * [[HllMergeAgg]] pattern with + instead of max): aggregate each
-  * hour/partition once, answer any window by adding its covering slices. */
+  * hour/partition once, answer any window by adding its covering slices.
+  * Same algebra and parameter range as [[CountMinAgg]], so any sketch it
+  * renders merges here. */
 case class CountMinMergeAgg(child: Expression, depth: Int, width: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
-  require(depth >= 1 && depth <= 8 && width >= 16)
-  private val cells = depth * width
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
+    extends SketchAggregate(CountMinSketch.Algebra(depth, width),
+      mergesRenders = true) {
   override def prettyName: String = "count_min_merge"
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](cells)
-
-  override def update(buf: Array[Long], row: org.apache.spark.sql.catalyst.InternalRow)
-      : Array[Long] = {
-    val v = child.eval(row)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String].toString
-      if (s.nonEmpty) s.split(',').foreach { kv =>
-        val c = kv.indexOf(':')
-        val idx = java.lang.Integer.parseInt(kv.substring(0, c))
-        require(idx < cells, s"cell $idx out of range for $depth x $width")
-        buf(idx) += java.lang.Long.parseLong(kv.substring(c + 1))
-      }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < cells) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = {
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < buf.length) {
-      if (buf(i) != 0L) {
-        if (sb.length > 0) sb.append(',')
-        sb.append(i).append(':').append(buf(i))
-      }
-      i += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong())
-  }
-
   override def withNewMutableAggBufferOffset(off: Int): CountMinMergeAgg =
     copy(mutableAggBufferOffset = off)
   override def withNewInputAggBufferOffset(off: Int): CountMinMergeAgg =
@@ -186,25 +82,89 @@ object CountMinSketch {
       org.apache.spark.sql.functions.lit(depth),
       org.apache.spark.sql.functions.lit(width))
 
+  /** Count-Min algebra for `depth` rows of `width` counters (a power of
+    * two): a value adds 1 to one cell per row, buffers add cell-wise, and
+    * the render lists the nonzero cells as "idx:count". */
+  case class Algebra(depth: Int, width: Int) extends SketchAlgebra[Array[Long]] {
+    require(depth >= 1 && depth <= 16, s"depth=$depth out of range")
+    require(width >= 2 && (width & (width - 1)) == 0, s"width=$width not a power of 2")
+    private val cells = depth * width
+
+    /** The cell of `value` in row `r`. */
+    def cell(r: Int, value: String): Int =
+      r * width + (RollingHash.polyHash64((r + ":" + value).getBytes("UTF-8"))
+        & (width - 1)).toInt
+
+    def empty(): Array[Long] = new Array[Long](cells)
+
+    def insert(buf: Array[Long], value: UTF8String): Array[Long] = {
+      val s = value.toString
+      var r = 0
+      while (r < depth) { buf(cell(r, s)) += 1L; r += 1 }
+      buf
+    }
+
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = addInto(a, b)
+
+    def render(buf: Array[Long]): String = {
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i < buf.length) {
+        if (buf(i) != 0L) {
+          if (sb.length > 0) sb.append(',')
+          sb.append(i).append(':').append(buf(i))
+        }
+        i += 1
+      }
+      sb.toString
+    }
+
+    def addRender(buf: Array[Long], render: String): Array[Long] = {
+      if (render.nonEmpty) render.split(',').foreach { kv =>
+        val c = kv.indexOf(':')
+        val idx = if (c > 0) kv.take(c).toIntOption.filter(i => i >= 0 && i < cells)
+          else None
+        (idx, if (c > 0) kv.drop(c + 1).toLongOption else None) match {
+          case (Some(i), Some(n)) => buf(i) += n
+          case _ => throw new IllegalArgumentException(
+            s"malformed Count-Min render ${SketchAlgebra.quote(render)} for " +
+              s"$depth x $width: cell '$kv'")
+        }
+      }
+      buf
+    }
+
+    def toBytes(buf: Array[Long]): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
+      buf.foreach(bb.putLong)
+      bb.array()
+    }
+
+    def fromBytes(bytes: Array[Byte]): Array[Long] = {
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      Array.fill(bytes.length / 8)(bb.getLong())
+    }
+  }
+
+  private def addInto(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
   /** Parses an `eval` render back into the dense counter array. */
   def parse(s: String, depth: Int, width: Int): Array[Long] = {
-    val buf = new Array[Long](depth * width)
-    if (s.nonEmpty) s.split(',').foreach { cell =>
-      val Array(i, v) = cell.split(':')
-      buf(i.toInt) = v.toLong
-    }
-    buf
+    val cm = Algebra(depth, width)
+    cm.addRender(cm.empty(), s)
   }
 
   /** Elementwise sum — slice sketches combine into range sketches. */
-  def add(a: Array[Long], b: Array[Long]): Array[Long] =
-    a.zip(b).map { case (x, y) => x + y }
+  def add(a: Array[Long], b: Array[Long]): Array[Long] = addInto(a.clone(), b)
 
   /** Point frequency estimate: min over the d cells — never an
     * underestimate. */
-  def query(buf: Array[Long], depth: Int, width: Int, value: String): Long =
-    (0 until depth).map { r =>
-      val h = RollingHash.polyHash64((r + ":" + value).getBytes("UTF-8"))
-      buf(r * width + (h & (width - 1)).toInt)
-    }.min
+  def query(buf: Array[Long], depth: Int, width: Int, value: String): Long = {
+    val cm = Algebra(depth, width)
+    (0 until depth).map(r => buf(cm.cell(r, value))).min
+  }
 }

@@ -2,9 +2,7 @@ package graft.agg
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.RollingHash
 
@@ -33,53 +31,8 @@ import graft.functions.RollingHash
   */
 case class HllRegistersAgg(child: Expression, p: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Byte]] {
-  require(p >= 4 && p <= 16, s"p=$p out of range")
-  private val m = 1 << p
-  private val windowBits = 64 - p
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
+    extends SketchAggregate(HllSketch.Algebra(p), mergesRenders = false) {
   override def prettyName: String = "hll_registers"
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(buf: Array[Byte], row: org.apache.spark.sql.catalyst.InternalRow)
-      : Array[Byte] = {
-    val v = child.eval(row)
-    if (v != null) {
-      val h = RollingHash.polyHash64Utf8(v.asInstanceOf[UTF8String])
-      val bucket = (h >>> windowBits).toInt
-      val w = if (windowBits == 64) h else h & ((1L << windowBits) - 1)
-      val rank =
-        if (w == 0L) windowBits + 1
-        else java.lang.Long.numberOfLeadingZeros(w) - p + 1
-      if (rank > buf(bucket)) buf(bucket) = rank.toByte
-    }
-    buf
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < m) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Byte]): Any = {
-    val sb = new java.lang.StringBuilder(2 * m)
-    var i = 0
-    while (i < m) {
-      val v = buf(i) & 0xff
-      sb.append(Character.forDigit(v >> 4, 16)).append(Character.forDigit(v & 15, 16))
-      i += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
   override def withNewMutableAggBufferOffset(off: Int): HllRegistersAgg =
     copy(mutableAggBufferOffset = off)
   override def withNewInputAggBufferOffset(off: Int): HllRegistersAgg =
@@ -93,58 +46,12 @@ case class HllRegistersAgg(child: Expression, p: Int,
   * production slice→range pattern — aggregate each hour/partition ONCE,
   * store the sketch next to the key, and answer any ad-hoc window by
   * merging the covering slices (m bytes each) instead of rescanning the
-  * events. Same state, same eval rendering, so slice-merged output is
-  * byte-identical to direct aggregation over the union of rows. */
+  * events. Same algebra, so slice-merged output is byte-identical to
+  * direct aggregation over the union of rows. */
 case class HllMergeAgg(child: Expression, p: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Byte]] {
-  require(p >= 4 && p <= 16, s"p=$p out of range")
-  private val m = 1 << p
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
+    extends SketchAggregate(HllSketch.Algebra(p), mergesRenders = true) {
   override def prettyName: String = "hll_merge"
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(buf: Array[Byte], row: org.apache.spark.sql.catalyst.InternalRow)
-      : Array[Byte] = {
-    val v = child.eval(row)
-    if (v != null) {
-      val hex = v.asInstanceOf[UTF8String].toString
-      require(hex.length == 2 * m, s"sketch length ${hex.length} != ${2 * m}")
-      var i = 0
-      while (i < m) {
-        val r = (Character.digit(hex.charAt(2 * i), 16) << 4 |
-          Character.digit(hex.charAt(2 * i + 1), 16)).toByte
-        if (r > buf(i)) buf(i) = r
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < m) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Byte]): Any = {
-    val sb = new java.lang.StringBuilder(2 * m)
-    var i = 0
-    while (i < m) {
-      val v = buf(i) & 0xff
-      sb.append(Character.forDigit(v >> 4, 16)).append(Character.forDigit(v & 15, 16))
-      i += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
   override def withNewMutableAggBufferOffset(off: Int): HllMergeAgg =
     copy(mutableAggBufferOffset = off)
   override def withNewInputAggBufferOffset(off: Int): HllMergeAgg =
@@ -175,14 +82,78 @@ object HllSketch {
     call_function("graft_hll_merge", c,
       org.apache.spark.sql.functions.lit(p))
 
+  /** HLL algebra with 2^p one-byte registers: a value's register is its
+    * top p hash bits, its rank the leading-zero count of the other 64−p
+    * bits + 1 (64−p+1 when they are all zero); buffers merge by register
+    * max; the render is 2m lowercase hex chars in register order. */
+  case class Algebra(p: Int) extends SketchAlgebra[Array[Byte]] {
+    require(p >= 4 && p <= 16, s"p=$p out of range")
+    private val m = 1 << p
+    private val maxRank = 64 - p + 1
+
+    def empty(): Array[Byte] = new Array[Byte](m)
+
+    def insert(buf: Array[Byte], value: UTF8String): Array[Byte] = {
+      val h = RollingHash.polyHash64Utf8(value)
+      val w = h & ((1L << (64 - p)) - 1)
+      val rank =
+        if (w == 0L) maxRank else java.lang.Long.numberOfLeadingZeros(w) - p + 1
+      val bucket = (h >>> (64 - p)).toInt
+      if (rank > buf(bucket)) buf(bucket) = rank.toByte
+      buf
+    }
+
+    def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+      var i = 0
+      while (i < m) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
+      a
+    }
+
+    def render(buf: Array[Byte]): String = {
+      val sb = new java.lang.StringBuilder(2 * m)
+      buf.foreach { r =>
+        sb.append(Character.forDigit(r >> 4, 16)).append(Character.forDigit(r & 15, 16))
+      }
+      sb.toString
+    }
+
+    def addRender(buf: Array[Byte], render: String): Array[Byte] = {
+      def bad(why: String) =
+        throw new IllegalArgumentException(
+          s"malformed HLL render ${SketchAlgebra.quote(render)} for p=$p: $why")
+      if (render.length != 2 * m) bad(s"length ${render.length} != ${2 * m}")
+      var i = 0
+      while (i < m) {
+        val hi = hexDigit(render.charAt(2 * i))
+        val lo = hexDigit(render.charAt(2 * i + 1))
+        val r = hi << 4 | lo
+        if (hi < 0 || lo < 0 || r > maxRank)
+          bad(s"register $i is '${render.substring(2 * i, 2 * i + 2)}', " +
+            s"not a hex rank in 0..$maxRank")
+        if (r > buf(i)) buf(i) = r.toByte
+        i += 1
+      }
+      buf
+    }
+
+    private def hexDigit(c: Char): Int = if (c < 128) Character.digit(c, 16) else -1
+
+    def toBytes(buf: Array[Byte]): Array[Byte] = buf
+    def fromBytes(bytes: Array[Byte]): Array[Byte] = bytes
+  }
+
+  /** The algebra of a sketch with `m` registers. */
+  private def algebra(m: Int) = Algebra(Integer.numberOfTrailingZeros(m))
+
   /** Parses an `hllRegisters` hex string back to registers. */
-  def parseRegisters(hexStr: String): Array[Int] =
-    Array.tabulate(hexStr.length / 2)(i =>
-      Integer.parseInt(hexStr.substring(2 * i, 2 * i + 2), 16))
+  def parseRegisters(hexStr: String): Array[Int] = {
+    val hll = algebra(hexStr.length / 2)
+    hll.addRender(hll.empty(), hexStr).map(_.toInt)
+  }
 
   /** Register-max union of sketches (same p). */
   def union(a: Array[Int], b: Array[Int]): Array[Int] =
-    a.zip(b).map { case (x, y) => math.max(x, y) }
+    algebra(a.length).merge(a.map(_.toByte), b.map(_.toByte)).map(_.toInt)
 
   /** Standard HLL estimate with the small-range linear-counting branch
     * (Flajolet et al. 2007 §4; no empirical bias table). Approximate BY

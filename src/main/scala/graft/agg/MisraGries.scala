@@ -4,9 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Misra–Gries frequent-items summary (Misra & Gries 1982; mergeable form
@@ -34,68 +32,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class MisraGriesAgg(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[mutable.HashMap[String, Long]] {
-  require(k >= 1 && k <= 65536, s"k=$k out of range")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
+    extends SketchAggregate(MisraGries.Algebra(k), mergesRenders = false) {
   override def prettyName: String = "misra_gries"
-
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
-
-  override def update(buf: mutable.HashMap[String, Long],
-      row: org.apache.spark.sql.catalyst.InternalRow): mutable.HashMap[String, Long] = {
-    val v = child.eval(row)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String].toString
-      buf.update(s, buf.getOrElse(s, 0L) + 1L)
-      if (buf.size > 2 * k) MisraGries.prune(buf, k)
-    }
-    buf
-  }
-
-  override def merge(a: mutable.HashMap[String, Long],
-      b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
-    b.foreach { case (s, c) => a.update(s, a.getOrElse(s, 0L) + c) }
-    if (a.size > k) MisraGries.prune(a, k)
-    a
-  }
-
-  override def eval(buf: mutable.HashMap[String, Long]): Any = {
-    val m = if (buf.size > k) { MisraGries.prune(buf, k); buf } else buf
-    val sb = new java.lang.StringBuilder
-    m.toSeq.sortBy(_._1).foreach { case (s, c) =>
-      if (sb.length > 0) sb.append('\u001e')
-      sb.append(MisraGries.escape(s)).append('\u001f').append(c)
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (s, c) =>
-      val b = s.getBytes("UTF-8")
-      out.writeInt(b.length); out.write(b); out.writeLong(c)
-    }
-    out.flush(); bos.toByteArray
-  }
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val m = mutable.HashMap.empty[String, Long]
-    var i = 0
-    while (i < n) {
-      val b = new Array[Byte](in.readInt()); in.readFully(b)
-      m.update(new String(b, "UTF-8"), in.readLong())
-      i += 1
-    }
-    m
-  }
-
   override def withNewMutableAggBufferOffset(off: Int): MisraGriesAgg =
     copy(mutableAggBufferOffset = off)
   override def withNewInputAggBufferOffset(off: Int): MisraGriesAgg =
@@ -115,69 +53,8 @@ case class MisraGriesAgg(child: Expression, k: Int,
   * completeness [[MisraGries.slidingHeavyHitters]] builds on. */
 case class MisraGriesMergeAgg(child: Expression, k: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[mutable.HashMap[String, Long]] {
-  require(k >= 1 && k <= 65536, s"k=$k out of range")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
+    extends SketchAggregate(MisraGries.Algebra(k), mergesRenders = true) {
   override def prettyName: String = "misra_gries_merge"
-
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
-
-  override def update(buf: mutable.HashMap[String, Long],
-      row: org.apache.spark.sql.catalyst.InternalRow): mutable.HashMap[String, Long] = {
-    val v = child.eval(row)
-    if (v != null) {
-      MisraGries.parse(v.asInstanceOf[UTF8String].toString).foreach {
-        case (s, c) => buf.update(s, buf.getOrElse(s, 0L) + c)
-      }
-      if (buf.size > 2 * k) MisraGries.prune(buf, k)
-    }
-    buf
-  }
-
-  override def merge(a: mutable.HashMap[String, Long],
-      b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
-    b.foreach { case (s, c) => a.update(s, a.getOrElse(s, 0L) + c) }
-    if (a.size > k) MisraGries.prune(a, k)
-    a
-  }
-
-  override def eval(buf: mutable.HashMap[String, Long]): Any = {
-    val m = if (buf.size > k) { MisraGries.prune(buf, k); buf } else buf
-    val sb = new java.lang.StringBuilder
-    m.toSeq.sortBy(_._1).foreach { case (s, c) =>
-      if (sb.length > 0) sb.append('\u001e')
-      sb.append(MisraGries.escape(s)).append('\u001f').append(c)
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (s, c) =>
-      val b = s.getBytes("UTF-8")
-      out.writeInt(b.length); out.write(b); out.writeLong(c)
-    }
-    out.flush(); bos.toByteArray
-  }
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val m = mutable.HashMap.empty[String, Long]
-    var i = 0
-    while (i < n) {
-      val b = new Array[Byte](in.readInt()); in.readFully(b)
-      m.update(new String(b, "UTF-8"), in.readLong())
-      i += 1
-    }
-    m
-  }
-
   override def withNewMutableAggBufferOffset(off: Int): MisraGriesMergeAgg =
     copy(mutableAggBufferOffset = off)
   override def withNewInputAggBufferOffset(off: Int): MisraGriesMergeAgg =
@@ -187,6 +64,75 @@ case class MisraGriesMergeAgg(child: Expression, k: Int,
 }
 
 object MisraGries {
+  /** MG(k) algebra over a value → counter map. Its content depends on
+    * where it prunes, so each prune point is part of the output: `insert`
+    * and `addRender` prune above 2k entries (amortized O(1) per value),
+    * `merge` above k, `result` to k before it renders, and `render`
+    * never. The render is `value<US>count` pairs sorted by value, joined
+    * by `<RS>` (0x1f / 0x1e). */
+  case class Algebra(k: Int) extends SketchAlgebra[mutable.HashMap[String, Long]] {
+    require(k >= 1 && k <= 65536, s"k=$k out of range")
+    private type Buf = mutable.HashMap[String, Long]
+
+    def empty(): Buf = mutable.HashMap.empty
+
+    def insert(buf: Buf, value: UTF8String): Buf = {
+      add(buf, value.toString, 1L)
+      if (buf.size > 2 * k) prune(buf, k)
+      buf
+    }
+
+    def merge(a: Buf, b: Buf): Buf = {
+      b.foreach { case (s, c) => add(a, s, c) }
+      prune(a, k)
+      a
+    }
+
+    def render(buf: Buf): String = {
+      val sb = new java.lang.StringBuilder
+      buf.toSeq.sortBy(_._1).foreach { case (s, c) =>
+        if (sb.length > 0) sb.append('\u001e')
+        sb.append(escape(s)).append('\u001f').append(c)
+      }
+      sb.toString
+    }
+
+    def addRender(buf: Buf, render: String): Buf = {
+      parse(render).foreach { case (s, c) => add(buf, s, c) }
+      if (buf.size > 2 * k) prune(buf, k)
+      buf
+    }
+
+    override def result(buf: Buf): String = { prune(buf, k); render(buf) }
+
+    private def add(buf: Buf, s: String, c: Long): Unit =
+      buf.update(s, buf.getOrElse(s, 0L) + c)
+
+    def toBytes(buf: Buf): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bos)
+      out.writeInt(buf.size)
+      buf.foreach { case (s, c) =>
+        val b = s.getBytes("UTF-8")
+        out.writeInt(b.length); out.write(b); out.writeLong(c)
+      }
+      out.flush(); bos.toByteArray
+    }
+
+    def fromBytes(bytes: Array[Byte]): Buf = {
+      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+      val n = in.readInt()
+      val m = empty()
+      var i = 0
+      while (i < n) {
+        val b = new Array[Byte](in.readInt()); in.readFully(b)
+        m.update(new String(b, "UTF-8"), in.readLong())
+        i += 1
+      }
+      m
+    }
+  }
+
   /** Mergeable-MG prune to ≤ k entries: subtract the (k+1)-th largest
     * counter from all, drop the non-positive. No-op at ≤ k entries. */
   private[graft] def prune(m: mutable.HashMap[String, Long], k: Int): Unit = {

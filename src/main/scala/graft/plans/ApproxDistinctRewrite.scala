@@ -12,8 +12,9 @@ import graft.agg.{HllRegistersAgg, HllSketch}
 
 /** Scalar finisher for the rewrite: hex registers → rounded HLL estimate.
   * Runs once per GROUP (not per row), so CodegenFallback costs nothing
-  * measurable; the per-row work stays inside the codegen'd
-  * [[HllRegistersAgg]] update path. */
+  * measurable; the per-row work is the [[HllRegistersAgg]] update, which
+  * runs in `ObjectHashAggregate` with map-side partials (no whole-stage
+  * codegen for a `TypedImperativeAggregate`). */
 case class HllEstimateExpr(child: Expression, p: Int)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = LongType

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{MapState, OutputMode}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.RollingHash
+import graft.agg.HllSketch
 
 /** Streaming sliding-window distinct counts over HLL register slices —
   * the continuous form of the q108 batch gate: per key, each event
@@ -35,9 +35,7 @@ object SlidingHllTws {
 
   class Processor(p: Int, sliceMs: Long, windowSlices: Int)
       extends SliceWindowProcessor[Event, WindowSketch](sliceMs, windowSlices) {
-    require(p >= 4 && p <= 16)
-    private val m = 1 << p
-    private val windowBits = 64 - p
+    private val hll = HllSketch.Algebra(p)
 
     @transient private var slices: MapState[Long, Array[Byte]] = _
 
@@ -47,37 +45,16 @@ object SlidingHllTws {
     override protected def eventTimeMs(e: Event): Long = e.tsMs
 
     override protected def addToSlice(slice: Long, rows: Seq[Event]): Unit = {
-      val buf = if (slices.containsKey(slice)) slices.getValue(slice)
-        else new Array[Byte](m)
-      rows.foreach { e =>
-        val h = RollingHash.polyHash64Utf8(UTF8String.fromString(e.value))
-        val bucket = (h >>> windowBits).toInt
-        val w = h & ((1L << windowBits) - 1)
-        val rank = if (w == 0L) windowBits + 1
-          else java.lang.Long.numberOfLeadingZeros(w) - p + 1
-        if (rank > buf(bucket)) buf(bucket) = rank.toByte
-      }
+      val buf = if (slices.containsKey(slice)) slices.getValue(slice) else hll.empty()
+      rows.foreach(e => hll.insert(buf, UTF8String.fromString(e.value)))
       slices.updateValue(slice, buf)
     }
 
     /** Register max over the window's slices, as hex. */
     override protected def merge(key: String, windowStartMs: Long,
         live: Seq[Long], emittedAt: java.sql.Timestamp): Seq[WindowSketch] = {
-      val buf = new Array[Byte](m)
-      live.foreach { s =>
-        val sl = slices.getValue(s)
-        var i = 0
-        while (i < m) { if (sl(i) > buf(i)) buf(i) = sl(i); i += 1 }
-      }
-      val sb = new java.lang.StringBuilder(2 * m)
-      var i = 0
-      while (i < m) {
-        val v = buf(i) & 0xff
-        sb.append(Character.forDigit(v >> 4, 16))
-          .append(Character.forDigit(v & 15, 16))
-        i += 1
-      }
-      Seq(WindowSketch(key, windowStartMs, sb.toString, emittedAt))
+      val buf = live.foldLeft(hll.empty())((b, s) => hll.merge(b, slices.getValue(s)))
+      Seq(WindowSketch(key, windowStartMs, hll.render(buf), emittedAt))
     }
   }
 

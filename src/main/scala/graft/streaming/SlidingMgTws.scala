@@ -1,10 +1,9 @@
 package graft.streaming
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{MapState, OutputMode}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.agg.MisraGries
 
@@ -44,9 +43,9 @@ object SlidingMgTws {
 
   class Processor(k: Int, sliceMs: Long, windowSlices: Int)
       extends SliceWindowProcessor[Event, WindowSummary](sliceMs, windowSlices) {
-    require(k >= 1)
+    private val mg = MisraGries.Algebra(k)
 
-    // slice → rendered MG map (parse/insert/render once per key-batch,
+    // slice → unpruned MG render (parse/insert/render once per key-batch,
     // not per event) and slice → exact row count
     @transient private var sliceMg: MapState[Long, String] = _
     @transient private var sliceN: MapState[Long, Long] = _
@@ -58,43 +57,24 @@ object SlidingMgTws {
 
     override protected def eventTimeMs(e: Event): Long = e.tsMs
 
-    private def render(m: mutable.HashMap[String, Long]): String = {
-      val sb = new java.lang.StringBuilder
-      m.toSeq.sortBy(_._1).foreach { case (s, c) =>
-        if (sb.length > 0) sb.append('\u001e')
-        sb.append(MisraGries.escape(s)).append('\u001f').append(c)
-      }
-      sb.toString
-    }
+    private def stored(slice: Long) = mg.addRender(mg.empty(), sliceMg.getValue(slice))
 
     override protected def addToSlice(slice: Long, rows: Seq[Event]): Unit = {
-      val m = mutable.HashMap.empty[String, Long]
-      if (sliceMg.containsKey(slice))
-        MisraGries.parse(sliceMg.getValue(slice))
-          .foreach { case (s, c) => m.update(s, c) }
-      rows.foreach { e =>
-        m.update(e.value, m.getOrElse(e.value, 0L) + 1L)
-        if (m.size > 2 * k) MisraGries.prune(m, k)
-      }
-      sliceMg.updateValue(slice, render(m))
+      val buf = if (sliceMg.containsKey(slice)) stored(slice) else mg.empty()
+      rows.foreach(e => mg.insert(buf, UTF8String.fromString(e.value)))
+      sliceMg.updateValue(slice, mg.render(buf))
       sliceN.updateValue(slice,
         (if (sliceN.containsKey(slice)) sliceN.getValue(slice) else 0L)
           + rows.size)
     }
 
-    /** Counter addition with the mergeable-MG prune; exact row count. */
+    /** Buffer merge of the window's slices (counter addition with the
+      * mergeable-MG prune); exact row count. */
     override protected def merge(key: String, windowStartMs: Long,
         live: Seq[Long], emittedAt: java.sql.Timestamp): Seq[WindowSummary] = {
-      val m = mutable.HashMap.empty[String, Long]
-      var n = 0L
-      live.foreach { s =>
-        MisraGries.parse(sliceMg.getValue(s)).foreach { case (v, c) =>
-          m.update(v, m.getOrElse(v, 0L) + c)
-        }
-        if (m.size > k) MisraGries.prune(m, k)
-        n += sliceN.getValue(s)
-      }
-      Seq(WindowSummary(key, windowStartMs, render(m), n, emittedAt))
+      val buf = live.foldLeft(mg.empty())((b, s) => mg.merge(b, stored(s)))
+      Seq(WindowSummary(key, windowStartMs, mg.render(buf),
+        live.map(sliceN.getValue).sum, emittedAt))
     }
   }
 

@@ -67,31 +67,6 @@ object StreamOps {
       .where(col("n") >= minCount)
       .select(col(keyCol), col("window_start_ms"), col("n"))
 
-  /** Streaming top-N emitter (reference A8 TopNEmitter/TopNFilter,
-    * P:job/counter/TopNEmitter.java:26-175): per micro-batch, rank the
-    * aggregated counts per group and deliver the top N to `sink` — the
-    * foreachBatch + rank + broadcast-downstream pattern. `counts` must be
-    * a streaming aggregate in update/complete mode semantics. */
-  def topNPerBatch(counts: DataFrame, groupCols: Seq[String],
-      orderCol: String, n: Int)(sink: DataFrame => Unit) = {
-    import org.apache.spark.sql.expressions.Window
-    counts.writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val w = Window.partitionBy(groupCols.map(col): _*)
-          .orderBy(col(orderCol).desc)
-        sink(batch.withColumn("rank", row_number().over(w))
-          .where(col("rank") <= n))
-      }
-  }
-
-  /** Delay operator (reference P:common/functions/Delay.java:20-64):
-    * hold events back `delayMs` in event time — emitted once the watermark
-    * passes tsMs + delayMs. Spark shape: shift the event-time column and
-    * let the downstream watermark do the buffering. */
-  def delayed(df: DataFrame, tsCol: String, delayMs: Long): DataFrame =
-    df.withColumn(tsCol,
-      timestamp_millis(unix_millis(col(tsCol)) + delayMs))
-
   /** Session windows (reference J7 gap semantics) in streaming form via
     * Spark's native session_window.
     *

@@ -76,6 +76,29 @@ class CountMinSketchSpec extends SparkSpec {
     assert(merged7 == direct, "merge must be partition-order independent")
   }
 
+  test("a depth-12 x width-8 countMin renders merge to the direct aggregate") {
+    CountMinSketch.register(spark)
+    val rows = (0 until 400).map(i => (i % 5L, s"u${(i * 7) % 40}"))
+      .toDF("hour", "v")
+    val merged = rows.groupBy(col("hour"))
+      .agg(CountMinSketch.countMin(col("v"), 12, 8).as("cm"))
+      .agg(CountMinSketch.countMinMerge(col("cm"), 12, 8))
+      .collect().head.getString(0)
+    val direct = rows.agg(CountMinSketch.countMin(col("v"), 12, 8))
+      .collect().head.getString(0)
+    assert(merged == direct)
+  }
+
+  test("countMinMerge rejects a width that is not a power of two") {
+    CountMinSketch.register(spark)
+    val e = intercept[Exception] {
+      Seq("0:1").toDF("cm").agg(CountMinSketch.countMinMerge(col("cm"), 4, 24))
+        .collect()
+    }
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("width=24")), e)
+  }
+
   test("map-side partial aggregation appears in the plan") {
     CountMinSketch.register(spark)
     val df = spark.range(5000).select((col("id") % 5).as("g"),

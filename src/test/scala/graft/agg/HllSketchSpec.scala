@@ -115,6 +115,20 @@ class HllSketchSpec extends SparkSpec {
     assert(merged13 == merged)
   }
 
+  test("a stored render with a non-hex char or an impossible rank is rejected") {
+    HllSketch.register(spark)
+    // 'zz' is no hex byte; 0x40 = 64 exceeds the largest rank 64 - p + 1
+    for (bad <- Seq("zz" + "00" * (m - 1), "0040" + "00" * (m - 2))) {
+      val e = intercept[Exception] {
+        Seq("00" * m, bad).toDF("hll").agg(HllSketch.hllMerge(col("hll"), p))
+          .collect()
+      }
+      assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage)
+          .contains(s"malformed HLL render '${bad.take(48)}")), e)
+    }
+  }
+
   test("null inputs are ignored; empty group renders all-zero registers") {
     HllSketch.register(spark)
     val df = Seq(Some("x"), None, Some("y"), None).toDF("v")
