@@ -93,13 +93,4 @@ object CounterFeatures {
     df => df.select(
       lit("HSET").as("cmd"), key.as("key"), field.cast("string").as("field"),
       value.cast("string").as("value"), ttlSec.cast("long").as("ttlSec"))
-
-  /** One key family: group `counts` (pre-aggregated rows with metric/window
-    * cols) by the family's key columns and emit HSETs. */
-  def familyCommands(counts: DataFrame, countType: Long, keyParts: Seq[Column],
-      aggMetric: Column, window: Column, count: Column, ttlSec: Long): DataFrame =
-    hsetCommand(
-      redisKey((lit(countType.toString) +: keyParts): _*),
-      featureIdCol(lit(countType), aggMetric, window),
-      count, ttlSec)(counts)
 }

@@ -38,12 +38,6 @@ object Windows {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Tumbling-window counts per key. */
-  def tumblingCount(df: DataFrame, keys: Seq[String], tsMs: String,
-      sizeMs: Long): DataFrame =
-    df.groupBy((bucket(col(tsMs), sizeMs).as("window_start_ms") +: keys.map(col)): _*)
-      .agg(count(lit(1)).as("n"))
-
   /** CUMULATE analogue: per (keys, span) running totals stepped by `stepMs`.
     * Output rows: one per (keys, span_start, step_end) with the cumulative
     * count from span start through that step. */

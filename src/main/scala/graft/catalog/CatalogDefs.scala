@@ -107,7 +107,7 @@ object CatalogDefs {
     // empty input yields an empty command frame instead of an NPE
     val nowRow = base.agg(max("tsMs")).head()
     val nowMs = if (nowRow.isNullAt(0)) 0L else nowRow.getLong(0)
-    graft.jobs.CounterJob.runAll(base, q36MinQueryCount, nowMs)
+    graft.jobs.CounterJob.run(base, q36MinQueryCount, nowMs)
   }
 
   /** q35: the flagship chain in batch form. views=view events,

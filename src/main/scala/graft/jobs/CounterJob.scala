@@ -1,34 +1,39 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.agg.{CounterFeatures => CF, Windows}
 import graft.functions.GraftFunctions
 
 /** Counter Job, batch form (reference P:job/counter/CounterJob.java,
-  * SURVEY §3.2): consume joined events, count along the key families
-  * (global/content/logUser/user/query/device × metric × window), and encode
-  * the counts as Redis HSET command frames for the online feature store.
+  * SURVEY §3.2): consume joined events, count along the reference's ten key
+  * families, and encode the counts as Redis HSET command frames for the
+  * online feature store. [[run]] is the one batch path; q36 pins its output
+  * against the oracle.
   *
-  * Input contract: a DataFrame of joined events with columns
-  * platformId, logUserId, userId, contentId, actionType (0 = impression),
-  * tsMs; optionally queryHash (nullable BIGINT, see [[queryHashCol]]),
-  * userAgent (string), quantity (cart quantity, CounterUtil.getCount —
-  * callers pre-explode carts into per-item rows).
+  * Input contract: [[run]] reads exactly these columns, and all of them must
+  * be present — platformId, logUserId, userId, contentId, actionType
+  * (0 = impression), tsMs, queryHash (BIGINT, NULL for an event without a
+  * search query; see [[queryHashCol]]), osFamily and agentFamily (the
+  * parsed [[graft.functions.UserAgents]] families), and quantity (BIGINT
+  * cart quantity, NULL counts as 1; CounterUtil.getCount — callers
+  * pre-explode carts into per-item rows).
   *
   * The ten key families mirror P:job/counter/CounterKeys.java:40-365:
   * global-device, content-device, user, logUser (windowed counts over
   * HOUR/DAY/DAY_7/DAY_30), query, content×query (same windows, gated by the
-  * top-query threshold stream), and the four last-seen families
+  * top-query threshold), and the four last-seen families
   * (user/logUser × content/query), each emitting a timestamp field and a
   * 90-day-count field (P:common/counter/FeatureId.java:36-57). Batch rows
   * stay distinct across emit windows by appending the window start to the
   * Redis key (the streaming form overwrites in place instead).
   *
-  * Scale: each family is one partial-aggregated groupBy over the shared
-  * projected frame (map-side combine before its shuffle); the top-query
-  * gate is a broadcast left-semi join (the thresholded hash set is tiny by
+  * Scale: the input is projected once and persisted; five fine aggregates
+  * over that projection feed the ten families, the coarser family of each
+  * pair rolling up from the finer one's partials; the top-query gate is a
+  * broadcast left-semi join (the thresholded hash set is tiny by
   * construction). Commands are idempotent HSETs, so at-least-once delivery
   * via foreachBatch is safe (reference relies on the same property,
   * SURVEY K3).
@@ -37,6 +42,7 @@ object CounterJob {
 
   private val HourMs = 3600 * 1000L
   private val DayMs = 24 * HourMs
+  private val LastSeenTtlSec = 90 * 86400L
 
   /** One emit window: bucket size, packed window tag, command TTL. */
   final case class Win(sizeMs: Long, tag: Long, ttlSec: Long)
@@ -67,55 +73,45 @@ object CounterJob {
 
   /** Normalized search-query hash: lower → blank/over-length → NULL →
     * seed-0 xxhash64 (reference CounterJob.java:399-408 lower + length
-    * filter + FlatUtil.getQueryHash). */
+    * filter + FlatUtil.getQueryHash). Requires
+    * `GraftFunctions.register(spark)` first. */
   def queryHashCol(query: Column, maxLen: Int = 100): Column =
     when(length(lower(query)).between(1, maxLen),
       GraftFunctions.xxhash64Seed0(lower(query)))
 
-  /** ALL four emit windows in ONE aggregation: each input row explodes
+  /** ALL four emit windows in ONE aggregation: each projected row explodes
     * into its 4 (windowStart, window-tag, ttl) cells before the shuffle,
     * grouped once — 1 exchange per family instead of 4. The shuffled byte
     * volume is the same (4 cells per row either way); what's saved is 3
-    * scans of the input and 3 stage round-trips per family, which is what
-    * dominates with 10 families at any scale. Inputs either carry raw
-    * `actionType` (mapped through [[metricCol]]) or are cube partials that
-    * already carry `metric`/pre-summed `quantity`. */
-  private def windowedAll(events: DataFrame, dims: Seq[(String, Column)]): DataFrame = {
-    val m = if (events.columns.contains("metric")) col("metric") else metricCol
-    val cells = StandardWindows.map(w =>
+    * scans of the input and 3 stage round-trips per family. */
+  private def windowedAll(cells: DataFrame, dims: Seq[(String, Column)]): DataFrame = {
+    val wins = StandardWindows.map(w =>
       struct(Windows.bucket(col("tsMs"), w.sizeMs).as("ws"),
         lit(w.tag).as("wtag"), lit(w.ttlSec).as("wttl")))
-    events
-      .select((m.as("metric") +: coalesce(col("quantity"), lit(1L)).as("__nq") +:
-        explode(array(cells: _*)).as("__w") +: dims.map { case (n, c) => c.as(n) }): _*)
+    cells
+      .select((col("metric") +: col("nq") +: explode(array(wins: _*)).as("__w") +:
+        dims.map { case (n, c) => c.as(n) }): _*)
       .groupBy((col("__w.ws").as("windowStart") +: col("__w.wtag").as("wtag") +:
         col("__w.wttl").as("wttl") +: col("metric") +: dims.map(d => col(d._1))): _*)
-      .agg(sum(col("__nq")).as("n"))
+      .agg(sum(col("nq")).as("n"))
   }
 
   private val wsCol = col("windowStart").cast("string")
 
   /** Encode a (pid, u, windowStart, wtag, wttl, metric, n) grouped frame
-    * as user-keyed HSET commands. */
+    * as user-keyed HSET commands (CounterKeys USER_EVENT_KEY /
+    * LOG_USER_EVENT_KEY: key=(pid, ␝u, user), field=fid). */
   private def userEncode(g: DataFrame, countType: Long): DataFrame =
     CF.hsetCommandC(
       CF.redisKey(col("pid"), lit(CF.UserType), col("u"), wsCol),
       CF.featureIdCol(lit(countType), col("metric"), col("wtag")),
       col("n"), col("wttl"))(g)
 
-  /** User / logUser event counts (CounterKeys USER_EVENT_KEY /
-    * LOG_USER_EVENT_KEY: key=(pid, ␝u, user), field=fid). */
-  def userCommands(events: DataFrame, userCol: String, countType: Long): DataFrame =
-    userEncode(windowedAll(events,
-      Seq("pid" -> col("platformId"), "u" -> col(userCol))), countType)
-
-  /** Global- and content-device counts (CounterKeys
-    * GLOBAL_EVENT_DEVICE_KEY / CONTENT_EVENT_DEVICE_KEY: the parsed
-    * os/agent families ride in the hash *field*, not the key; the global
-    * family intentionally never expires). `osFamily`/`agentFamily` are the
-    * pre-parsed [[graft.functions.UserAgents]] columns. */
   /** Encode a device-grouped frame (pid[, cid], os, agent, windowStart,
-    * wtag, wttl, metric, n) as device-keyed HSET commands. */
+    * wtag, wttl, metric, n) as device-keyed HSET commands (CounterKeys
+    * GLOBAL_EVENT_DEVICE_KEY / CONTENT_EVENT_DEVICE_KEY: the os/agent
+    * families ride in the hash *field*, not the key; the global family
+    * intentionally never expires). */
   private def deviceEncode(g: DataFrame, withContent: Boolean): DataFrame = {
     val keyParts =
       if (withContent) Seq(col("pid"), col("cid"), wsCol) else Seq(col("pid"), wsCol)
@@ -126,20 +122,10 @@ object CounterJob {
       col("n"), if (withContent) col("wttl") else lit(-1L))(g)
   }
 
-  def deviceCommands(events: DataFrame, withContent: Boolean): DataFrame = {
-    val keyDims =
-      if (withContent) Seq("pid" -> col("platformId"), "cid" -> col("contentId"))
-      else Seq("pid" -> col("platformId"))
-    deviceEncode(windowedAll(events,
-      keyDims ++ Seq("os" -> col("osFamily"), "agent" -> col("agentFamily"))),
-      withContent)
-  }
-
-  /** Query and content×query counts (CounterKeys QUERY_EVENT_KEY /
-    * CONTENT_QUERY_EVENT_KEY), gated to the thresholded top queries via a
-    * broadcast left-semi join. Key carries the hex-encoded hash. */
   /** Encode a query-grouped frame (pid, qh[, cid], windowStart, wtag,
-    * wttl, metric, n) as query-keyed HSET commands. */
+    * wttl, metric, n) as query-keyed HSET commands (CounterKeys
+    * QUERY_EVENT_KEY / CONTENT_QUERY_EVENT_KEY; the key carries the
+    * hex-encoded hash). */
   private def queryEncode(g: DataFrame, withContent: Boolean): DataFrame = {
     val hexQ = CF.hexLong(col("qh"))
     val keyParts =
@@ -153,126 +139,52 @@ object CounterJob {
       col("n"), col("wttl"))(g)
   }
 
-  def queryCommands(events: DataFrame, topQueries: DataFrame,
-      withContent: Boolean): DataFrame = {
-    val gated = events.where(col("queryHash").isNotNull)
-      .join(broadcast(topQueries), Seq("queryHash"), "left_semi")
-    val keyDims = ("pid" -> col("platformId")) +: ("qh" -> col("queryHash")) +:
-      (if (withContent) Seq("cid" -> col("contentId")) else Nil)
-    queryEncode(windowedAll(gated, keyDims), withContent)
-  }
-
-  /** Legacy simplified families (global/content/logUser/user × hour/day)
-    * kept for the q29 gate shape. */
-  private def family(events: DataFrame, countType: Long, keyParts: Seq[String],
-      windowMs: Long, windowTag: Long, ttlSec: Long): DataFrame = {
-    val counts = events
-      .groupBy((Windows.bucket(col("tsMs"), windowMs).as("windowStart") +:
-        lit(metricCol).as("metric") +: keyParts.map(col)): _*)
-      .agg(sum(coalesce(col("quantity"), lit(1L))).as("n"))
-    CF.familyCommands(counts, countType,
-      keyParts.map(col) :+ col("windowStart").cast("string"),
-      col("metric"), lit(windowTag), col("n"), ttlSec)
-  }
-
-  /** The simplified command stream across key families and windows. */
-  def commands(events: DataFrame): DataFrame = {
-    Seq(
-      family(events, CF.CountType.Global, Seq("platformId"), HourMs, CF.CountWindow.Hour, 4 * 3600),
-      family(events, CF.CountType.Global, Seq("platformId"), DayMs, CF.CountWindow.Day, 2 * 86400),
-      family(events, CF.CountType.Content, Seq("platformId", "contentId"), HourMs, CF.CountWindow.Hour, 4 * 3600),
-      family(events, CF.CountType.Content, Seq("platformId", "contentId"), DayMs, CF.CountWindow.Day, 2 * 86400),
-      family(events, CF.CountType.LogUser, Seq("platformId", "logUserId"), DayMs, CF.CountWindow.Day, 2 * 86400),
-      family(events, CF.CountType.User, Seq("platformId", "userId"), DayMs, CF.CountWindow.Day, 2 * 86400),
-    ).reduce(_ unionByName _)
-  }
-
-  /** Hourly pre-aggregate cube: ONE scan of the raw joined events (one UA
-    * parse, one query-hash, one JSON extraction per row), partial-aggregated
-    * to the finest granularity every family needs. All emit windows are
-    * epoch-aligned multiples of an hour, so every windowed-count family is
-    * an exact rollup of `cnt`/`nq`; the last-seen families roll up
-    * `last_ts`/`nq90` (the 90-day membership test is decided per-ROW here —
-    * nowMs is fixed — so the hour-granular cube stays exact at the cutoff
-    * boundary). At 100 TB this is the difference between 28 scans of the
-    * fact table and 1 scan + 28 rollups of a frame that is orders of
-    * magnitude smaller. */
-  private def hourlyCube(events: DataFrame, nowMs: Long): DataFrame =
-    events.groupBy(
-        Windows.bucket(col("tsMs"), HourMs).as("hourStart"),
-        metricCol.as("metric"), col("platformId"), col("logUserId"),
-        col("userId"), col("contentId"), col("queryHash"),
-        col("osFamily"), col("agentFamily"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(coalesce(col("quantity"), lit(1L))).as("nq"),
-        max(col("tsMs")).as("last_ts"),
-        sum(when(col("tsMs") > nowMs - 90 * DayMs,
-          coalesce(col("quantity"), lit(1L))).otherwise(0L)).as("nq90"))
-
-  /** Row-level cells with the same schema as [[hourlyCube]] (cnt=1 per
-    * row) — one projection pass, NO pre-shuffle. */
+  /** The one projection pass over the input: the metric mapping, the
+    * per-event weight `nq` and its 90-day share `nq90` (the 90-day
+    * membership test is decided per row, since `nowMs` is fixed). */
   private def rowCells(events: DataFrame, nowMs: Long): DataFrame = {
     val nq = coalesce(col("quantity"), lit(1L))
     events.select(
-      Windows.bucket(col("tsMs"), HourMs).as("hourStart"),
       metricCol.as("metric"), col("platformId"), col("logUserId"),
       col("userId"), col("contentId"), col("queryHash"),
-      col("osFamily"), col("agentFamily"),
-      lit(1L).as("cnt"), nq.as("nq"), col("tsMs").as("last_ts"),
+      col("osFamily"), col("agentFamily"), col("tsMs"), nq.as("nq"),
       when(col("tsMs") > nowMs - 90 * DayMs, nq).otherwise(0L).as("nq90"))
   }
 
-  /** The full ten-family command stream, wired like the reference's
-    * defineJob (CounterJob.java:389-500): the four windowed-count families
+  /** The ten-family command stream, wired like the reference's defineJob
+    * (CounterJob.java:389-500): the four windowed-count families
     * unconditionally, the query-gated families through the top-query
-    * threshold, the last-seen families emitting ts + 90d-count pairs.
+    * threshold (a query hash with at least `minQueryCount` events), the
+    * last-seen families emitting ts + 90d-count pairs counted back from
+    * `nowMs`.
     *
-    * The input is scanned ONCE: the projected frame (UA parse, query hash,
-    * metric mapping — the expensive per-row work) is cached and every
-    * family partial-aggregates from the cache. With `preAggregate = true`
-    * the cache is the [[hourlyCube]] instead — the scale lever when event
-    * dims repeat within an hour (real traffic: many events per
-    * user×content×hour), where the cube is orders of magnitude smaller
-    * than the rows; with unique-ish dims per event (no compression) the
-    * cube's extra shuffle is pure cost, so row-level cache is the default. */
-  def runAll(events: DataFrame, minQueryCount: Long, nowMs: Long,
-      preAggregate: Boolean = false): DataFrame = {
-    val cube =
-      (if (preAggregate) hourlyCube(events, nowMs)
-       else rowCells(events, nowMs))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // cube rows carry pre-summed weights: re-aggregate with sum, count-of-
-    // rows becomes sum(cnt), and the per-event quantity coalesce is done
-    val ev = cube
-      .withColumn("tsMs", col("hourStart")) // windowed() re-buckets; hour-aligned
-      .withColumn("quantity", col("nq"))
-    val top = topQueryGate(cube, minQueryCount)
-    // r16 (guide §2.6 — share the grouping work): each family PAIR on a
-    // grouping hierarchy aggregates the cached frame ONCE at its finer
-    // grain and the coarser family rolls up from those grouped partials
-    // instead of re-scanning the cube; the two query-gated families also
-    // share one gated frame instead of rebuilding the filter+semi-join.
-    // Every rollup is an exact integer sum/max over a partition of the
-    // same rows, so it equals the direct aggregate it replaces; ten
-    // full-input aggregations become five + five small rollups (the
-    // shared fine exchanges dedup via ReuseExchange inside the one
-    // union plan).
+    * The input is scanned ONCE: the projected frame is persisted and every
+    * family partial-aggregates from it. Each family PAIR on a grouping
+    * hierarchy aggregates the projection once at its finer grain, and the
+    * coarser family rolls up from those grouped partials (guide §2.6,
+    * share the grouping work); the two query-gated families share one
+    * gated frame. Every rollup is an exact integer sum/max over a
+    * partition of the same rows, so ten full-input aggregations become
+    * five plus five small rollups (the shared fine exchanges dedup via
+    * ReuseExchange inside the one union plan). */
+  def run(events: DataFrame, minQueryCount: Long, nowMs: Long): DataFrame = {
+    val cells = rowCells(events, nowMs).persist(StorageLevel.MEMORY_AND_DISK)
+    val top = topQueryGate(cells, minQueryCount)
+    val gated = cells.where(col("queryHash").isNotNull)
+      .join(broadcast(top), Seq("queryHash"), "left_semi")
     val wKeys = Seq(col("windowStart"), col("wtag"), col("wttl"), col("metric"))
-    val devFine = windowedAll(ev, Seq("pid" -> col("platformId"),
+    val devFine = windowedAll(cells, Seq("pid" -> col("platformId"),
       "cid" -> col("contentId"), "os" -> col("osFamily"),
       "agent" -> col("agentFamily")))
     val devCoarse = devFine
       .groupBy(wKeys ++ Seq(col("pid"), col("os"), col("agent")): _*)
       .agg(sum(col("n")).as("n"))
-    val userFine = windowedAll(ev, Seq("pid" -> col("platformId"),
+    val userFine = windowedAll(cells, Seq("pid" -> col("platformId"),
       "lu" -> col("logUserId"), "uu" -> col("userId")))
     def userRoll(u: Column) = userFine
       .groupBy(wKeys ++ Seq(col("pid"), u.as("u")): _*)
       .agg(sum(col("n")).as("n"))
-    val gatedEv = ev.where(col("queryHash").isNotNull)
-      .join(broadcast(top), Seq("queryHash"), "left_semi")
-    val qFine = windowedAll(gatedEv, Seq("pid" -> col("platformId"),
+    val qFine = windowedAll(gated, Seq("pid" -> col("platformId"),
       "qh" -> col("queryHash"), "cid" -> col("contentId")))
     val qCoarse = qFine
       .groupBy(wKeys ++ Seq(col("pid"), col("qh")): _*)
@@ -280,14 +192,12 @@ object CounterJob {
     def lastFine(src: DataFrame, dimCol: Column) = src
       .groupBy(col("platformId").as("pid"), col("logUserId").as("lu"),
         col("userId").as("uu"), dimCol.as("dim"), col("metric"))
-      .agg(max(col("last_ts")).as("last_ts_ms"), sum(col("nq90")).as("n90"))
+      .agg(max(col("tsMs")).as("last_ts_ms"), sum(col("nq90")).as("n90"))
     def lastRoll(fine: DataFrame, u: Column) = fine
       .groupBy(col("pid"), u.as("u"), col("dim"), col("metric"))
       .agg(max(col("last_ts_ms")).as("last_ts_ms"), sum(col("n90")).as("n90"))
-    val lcFine = lastFine(cube, col("contentId"))
-    val gatedCube = cube.where(col("queryHash").isNotNull)
-      .join(broadcast(top), Seq("queryHash"), "left_semi")
-    val lqFine = lastFine(gatedCube, col("queryHash"))
+    val lcFine = lastFine(cells, col("contentId"))
+    val lqFine = lastFine(gated, col("queryHash"))
     val qDimKey = (d: Column) => Seq(lit(CF.QueryType), CF.hexLong(d))
     Seq(
       deviceEncode(devCoarse, withContent = false),
@@ -297,35 +207,29 @@ object CounterJob {
       queryEncode(qCoarse, withContent = false),
       queryEncode(qFine, withContent = true),
       lastSeenEncode(lastRoll(lcFine, col("lu")), d => Seq(d),
-        CF.CountType.LogUserItemHoursAgo, CF.CountType.LogUserItemCount,
-        90 * 86400),
+        CF.CountType.LogUserItemHoursAgo, CF.CountType.LogUserItemCount),
       lastSeenEncode(lastRoll(lcFine, col("uu")), d => Seq(d),
-        CF.CountType.UserItemHoursAgo, CF.CountType.UserItemCount,
-        90 * 86400),
+        CF.CountType.UserItemHoursAgo, CF.CountType.UserItemCount),
       lastSeenEncode(lastRoll(lqFine, col("lu")), qDimKey,
-        CF.CountType.LogUserQueryHoursAgo, CF.CountType.LogUserQueryCount,
-        90 * 86400),
+        CF.CountType.LogUserQueryHoursAgo, CF.CountType.LogUserQueryCount),
       lastSeenEncode(lastRoll(lqFine, col("uu")), qDimKey,
-        CF.CountType.UserQueryHoursAgo, CF.CountType.UserQueryCount,
-        90 * 86400),
+        CF.CountType.UserQueryHoursAgo, CF.CountType.UserQueryCount),
     ).reduce(_ unionByName _)
   }
 
-  /** Top-query threshold over cube partials (sum of per-cell counts). */
-  private def topQueryGate(cube: DataFrame, minCount: Long): DataFrame =
-    cube.where(col("queryHash").isNotNull)
-      .groupBy(col("queryHash")).agg(sum(col("cnt")).as("n"))
+  /** Query hashes with at least `minCount` events. */
+  private def topQueryGate(cells: DataFrame, minCount: Long): DataFrame =
+    cells.where(col("queryHash").isNotNull)
+      .groupBy(col("queryHash")).agg(count(lit(1)).as("n"))
       .where(col("n") >= minCount)
       .select("queryHash")
 
-  /** Last-seen rollup from cube partials (max of last_ts, sum of nq90).
-    * The timestamp field and the 90d-count field both come off ONE
-    * aggregation — each group row explodes into its two (featureId, value)
-    * cells after the agg, instead of running the agg twice. */
-  /** Encode a (pid, u, dim, metric, last_ts_ms, n90) grouped frame as
-    * the two last-seen cells (timestamp + 90d count) per group. */
+  /** Encode a (pid, u, dim, metric, last_ts_ms, n90) grouped frame as the
+    * two last-seen cells (timestamp + 90d count) per group: both fields
+    * come off ONE aggregation — each group row explodes into its two
+    * (featureId, value) cells after the agg, instead of running it twice. */
   private def lastSeenEncode(g0: DataFrame, dimKeyParts: Column => Seq[Column],
-      tsType: Long, countType: Long, ttlSec: Long): DataFrame = {
+      tsType: Long, countType: Long): DataFrame = {
     val g = g0
       .select(col("pid"), col("u"), col("dim"), explode(array(
         struct(CF.featureIdCol(lit(tsType), col("metric"),
@@ -334,38 +238,6 @@ object CounterJob {
           lit(CF.CountWindow.Day90)).as("fid"), col("n90").as("v")))).as("__fv"))
     val key = CF.redisKey(
       (col("pid") +: lit(CF.UserType) +: col("u") +: dimKeyParts(col("dim"))): _*)
-    CF.hsetCommand(key, col("__fv.fid"), col("__fv.v"), ttlSec)(g)
+    CF.hsetCommand(key, col("__fv.fid"), col("__fv.v"), LastSeenTtlSec)(g)
   }
-
-  private def lastSeenCube(cube: DataFrame, dimCol: Column,
-      dimKeyParts: Column => Seq[Column], userCol: String, tsType: Long,
-      countType: Long, ttlSec: Long): DataFrame =
-    lastSeenEncode(cube
-      .groupBy(col("platformId").as("pid"), col(userCol).as("u"),
-        dimCol.as("dim"), col("metric"))
-      .agg(max(col("last_ts")).as("last_ts_ms"), sum(col("nq90")).as("n90")),
-      dimKeyParts, tsType, countType, ttlSec)
-
-  private def lastContentCube(cube: DataFrame, userCol: String, tsType: Long,
-      countType: Long): DataFrame =
-    lastSeenCube(cube, col("contentId"), d => Seq(d), userCol, tsType,
-      countType, 90 * 86400)
-
-  private def lastQueryCube(cube: DataFrame, topQueries: DataFrame,
-      userCol: String, tsType: Long, countType: Long): DataFrame =
-    lastSeenCube(
-      cube.where(col("queryHash").isNotNull)
-        .join(broadcast(topQueries), Seq("queryHash"), "left_semi"),
-      col("queryHash"), d => Seq(lit(CF.QueryType), CF.hexLong(d)),
-      userCol, tsType, countType, 90 * 86400)
-
-  def run(events: DataFrame)(implicit spark: SparkSession): DataFrame =
-    commands(events).unionByName {
-      val last = Windows.lastTimeAndCount(events,
-        Seq("platformId", "logUserId", "contentId"), "tsMs")
-      CF.hsetCommand(
-        CF.redisKey(lit(CF.CountType.LogUser.toString), col("platformId"), col("logUserId")),
-        concat_ws(CF.Sep, col("contentId"), lit("last")),
-        col("last_ts_ms"), 90 * 86400)(last)
-    }
 }

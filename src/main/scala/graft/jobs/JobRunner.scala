@@ -1,7 +1,9 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{coalesce, col, lit, max}
 
+import graft.functions.UserAgents
 import graft.sources.FakeLogGenerator
 
 /** Run the four reference-shaped pipelines end-to-end over the
@@ -34,11 +36,19 @@ object JobRunner {
       s"joinedActions=${flat.joinedActions.count()} " +
       s"validationErrors=${flat.validationErrors.count()}")
 
+    // a joined action carries neither a search query nor a user agent:
+    // the query families stay empty, and the device families count under
+    // the parser's family for a missing agent
     val events = flat.joinedActions.selectExpr("platformId",
       "userInfo.logUserId AS logUserId", "'u' AS userId", "contentId",
       "actionType", "timing.eventApiTimestamp AS tsMs",
+      "CAST(NULL AS BIGINT) AS queryHash",
+      s"'${UserAgents.OtherFamily}' AS osFamily",
+      s"'${UserAgents.OtherFamily}' AS agentFamily",
       "CAST(NULL AS BIGINT) AS quantity")
-    println(s"JOBS counter: commands=${CounterJob.run(events).count()}")
+    val nowMs = events.agg(coalesce(max(col("tsMs")), lit(0L))).head().getLong(0)
+    println(s"JOBS counter: commands=" +
+      s"${CounterJob.run(events, minQueryCount = 3L, nowMs).count()}")
 
     println(s"JOBS contentmetrics: hourlyRows=${ContentMetricsJob.hourly(envelopes).count()} " +
       s"dailyRows=${ContentMetricsJob.daily(envelopes).count()}")

@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.schema.JoinSideEvent
 import graft.sinks.Sinks
@@ -290,10 +291,11 @@ object StreamingJobs {
     *
     * A checkpoint written before `SlidingCounterTws` kept its state in one
     * `counterState` value holds the counts in a `buckets` map state and a
-    * `lastEmit` long, which this version no longer reads. Spark restarts
-    * on such a checkpoint without an error and the old counts are lost,
-    * so a deployment that ran the earlier layout must start on a new
-    * checkpoint directory. */
+    * `lastEmit` long, which this version no longer reads. Spark would
+    * restart on such a checkpoint without an error and lose the old
+    * counts, so this method refuses it before the query starts
+    * ([[refuseRetiredCounterState]]); a deployment that ran the earlier
+    * layout must start on a new checkpoint directory. */
   def counterQueryFamilies(events: DataFrame, client: Sinks.CommandClient,
       checkpointDir: String, watermarkDelay: String = "1 minute",
       emitMs: Long = 86400000L, windowMs: Long = 86400000L,
@@ -302,6 +304,8 @@ object StreamingJobs {
     import spark.implicits._
     import graft.agg.{CounterFeatures => CF}
     import graft.streaming.{SeenGateTws, SlidingCounter, SlidingCounterTws}
+    val queryCheckpoint = s"$checkpointDir/query_families"
+    refuseRetiredCounterState(queryCheckpoint)
     val windowCode =
       if (windowMs >= 86400000L) CF.CountWindow.Day else CF.CountWindow.Hour
     // stage 1a: per-(platform, queryHash, metric) family counts
@@ -350,8 +354,32 @@ object StreamingJobs {
         cmd.getItem(4)).as("key"),
       cmd.getItem(3).as("field"), cmd.getItem(6).as("value"),
       lit(2L * windowMs / 1000L).as("ttlSec"), col("tsMs"))
-    Sinks.streamCommands(commands, client, s"$checkpointDir/query_families")
+    Sinks.streamCommands(commands, client, queryCheckpoint)
       .queryName("counter_query_families").start()
+  }
+
+  /** Fail when a `transformWithState` operator in the checkpoint at
+    * `checkpoint` declares a state variable of the earlier
+    * `SlidingCounterTws` layout (`buckets`, `lastEmit`). Reads the
+    * operators' declared state variables through Spark's `state-metadata`
+    * source; a checkpoint with no state yet passes. */
+  private def refuseRetiredCounterState(checkpoint: String)(
+      implicit spark: SparkSession): Unit = {
+    import spark.implicits._
+    val stateDir = new org.apache.hadoop.fs.Path(checkpoint, "state")
+    if (stateDir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(stateDir)) {
+      val vars = spark.read.format("state-metadata").load(checkpoint)
+        .select(explode(from_json(col("operatorProperties"),
+          StructType.fromDDL("stateVariables ARRAY<STRUCT<stateName: STRING>>"))
+          .getField("stateVariables")).as("v"))
+        .select(col("v.stateName")).as[String].collect().toSet
+      val retired = vars.intersect(Set("buckets", "lastEmit"))
+      if (retired.nonEmpty)
+        throw new IllegalStateException(s"checkpoint $checkpoint holds the " +
+          "earlier SlidingCounterTws state layout " +
+          s"(${retired.toSeq.sorted.mkString(", ")}), which this version " +
+          "cannot read; start the query on a new checkpoint directory")
+    }
   }
 
   /** Counter job last-seen families: per (user, content) last timestamp +

@@ -379,14 +379,6 @@ object AudioHeaders {
         .when(fmt === "aac", dur(aac)))
   }
 
-  def audioChannels(bytes: Column): Column = metaColumns(bytes)(1)._2
-  def audioSampleRate(bytes: Column): Column = metaColumns(bytes)(2)._2
-  def audioBitsPerSample(bytes: Column): Column = metaColumns(bytes)(3)._2
-
-  /** Stream duration in milliseconds (NULL when unknown — including a WAV
-    * missing its data chunk and a FLAC with total-samples = 0). */
-  def audioDurationMs(bytes: Column): Column = metaColumns(bytes)(4)._2
-
   /** Attach (format, channels, sample_rate, bits_per_sample, duration_ms)
     * metadata columns parsed from the binary column. */
   def withAudioMeta(df: DataFrame, bytesCol: String): DataFrame =

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 private[multimodal] object ByteCols {
   def u8(c: Column, i: Int): Column =
     conv(hex(substring(c, i, 1)), 16, 10).cast("int")
-  def beU16(c: Column, i: Int): Column = u8(c, i) * 256 + u8(c, i + 1)
   def leU16(c: Column, i: Int): Column = u8(c, i) + u8(c, i + 1) * 256
   def beU32(c: Column, i: Int): Column =
     ((u8(c, i) * 256L + u8(c, i + 1)) * 256L + u8(c, i + 2)) * 256L + u8(c, i + 3)

@@ -93,11 +93,6 @@ object Multimodal {
       .select(col("mediaId"), col("frame_ms"))
   }
 
-  /** Resize metadata propagation (the codec does the pixels; the plan
-    * tracks the typed metadata so downstream schemas stay exact). */
-  def withResizedMeta(items: DataFrame, w: Int, h: Int): DataFrame =
-    items.withColumn("width", lit(w)).withColumn("height", lit(h))
-
   /** Perceptual difference-hash (Krawetz's dHash) per media item: the
     * decoder resamples to a 9×8 luma grid (featureDim must be 72) and
     * bit r·8+c of the 64-bit hash is grid(r,c+1) > grid(r,c) — the

@@ -227,10 +227,6 @@ object VideoHeaders {
       "video_height" -> field(3))
   }
 
-  def videoDurationMs(bytes: Column): Column = metaColumns(bytes)(1)._2
-  def videoWidth(bytes: Column): Column = metaColumns(bytes)(2)._2
-  def videoHeight(bytes: Column): Column = metaColumns(bytes)(3)._2
-
   /** Attach (format, duration_ms, width, height) metadata columns parsed
     * from the binary column. */
   def withVideoMeta(df: DataFrame, bytesCol: String): DataFrame =

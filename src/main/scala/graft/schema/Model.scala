@@ -83,12 +83,3 @@ case class WindowAggResult(
     windowStartMs: Long,
     windowSizeMs: Long,
     count: Long)
-
-/** Redis feature-store command (reference RedisSink.Command,
-  * P:common/functions/sink/RedisSink.java:27). */
-case class RedisCommand(
-    cmd: String, // HSET | HDEL | EXPIRE
-    key: String,
-    field: String,
-    value: String,
-    ttlSec: Long)

@@ -20,8 +20,6 @@ object WatermarkDelays {
     /** Delay the CURRENT stage must declare: everything buffered above it. */
     def currentDelayMs: Long = sourceOutOfOrderMs + upstreamBufferMs
 
-    def currentDelay: String = s"$currentDelayMs milliseconds"
-
     /** Register this stage's own buffering for downstream stages. */
     def thenBuffered(stageWindowMs: Long): Builder =
       copy(upstreamBufferMs = upstreamBufferMs + stageWindowMs)

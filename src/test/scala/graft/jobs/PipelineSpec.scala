@@ -170,25 +170,59 @@ class PipelineSpec extends SparkSpec {
   private val GoldenFlatImpressions = 620L
 
   test("CounterJob emits HSET command frames with packed feature ids") {
-    val flat = FlatOutputJob.run(envelopes)
-    val events = flat.joinedActions.select(col("platformId"),
-      col("userInfo.logUserId").as("logUserId"),
-      lit("u").as("userId"), col("contentId"), col("actionType"),
-      col("timing.eventApiTimestamp").as("tsMs"), lit(null).cast("long").as("quantity"))
-    val cmds = CounterJob.run(events)
-    val rows = cmds.collect()
+    import graft.agg.CounterFeatures.{QueryType, Sep}
+    import graft.functions.{GraftFunctions, UserAgents}
+    GraftFunctions.register(spark)
+    val chrome = "Mozilla/5.0 (Windows NT 10.0) Chrome/120.0 Safari/537.36"
+    val iphone = "Mozilla/5.0 (iPhone; CPU iPhone OS 17_0) Mobile Safari/604.1"
+    val hour = 3600000L
+    // "shoes" reaches minQueryCount = 3 (the query is lower-cased before
+    // hashing); "socks" stays below it
+    val events = Seq(
+      ("lu1", "u1", "c1", 0, 1000L, Some("Shoes"), Some(chrome), None),
+      ("lu1", "u1", "c2", 2, 2000L, Some("shoes"), Some(chrome), None),
+      ("lu2", "u2", "c1", 3, hour + 5L, Some("SHOES"), Some(iphone), Some(2L)),
+      ("lu2", "u2", "c1", 0, 4000L, Some("socks"), Some(iphone), None),
+      ("lu3", "u3", "c3", 4, 5000L, None, None, None))
+      .toDF("logUserId", "userId", "contentId", "actionType", "tsMs",
+        "query", "userAgent", "quantity")
+      .select(lit(1L).as("platformId"), col("logUserId"), col("userId"),
+        col("contentId"), col("actionType"), col("tsMs"),
+        CounterJob.queryHashCol(col("query")).as("queryHash"),
+        UserAgents.osFamily(col("userAgent")).as("osFamily"),
+        UserAgents.agentFamily(col("userAgent")).as("agentFamily"),
+        col("quantity"))
+    val rows = CounterJob.run(events, minQueryCount = 3L, nowMs = hour + 5L)
+      .collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getAs[String]("cmd") == "HSET"))
-    // key families present: global (1) and content (2) keys
-    val keys = rows.map(_.getAs[String]("key"))
-    assert(keys.exists(_.startsWith("1\u001f")))
-    assert(keys.exists(_.startsWith("2\u001f")))
-    // counter-family fields decode: countType<<24 | metric<<8 | window
-    // (last-seen features use a contentId-scoped field instead)
-    val fields = rows.map(_.getAs[String]("field"))
-      .filter(_.forall(_.isDigit)).map(_.toLong)
-    assert(fields.nonEmpty)
-    assert(fields.forall(f => (f >> 24) >= 1 && (f >> 24) <= 6))
+    // field = countType<<24 | metric<<8 | window; the device families
+    // prefix it with the os and agent families
+    val cells = rows.map(r => (r.getAs[String]("key").split(Sep),
+      r.getAs[String]("field").split(Sep).last.toLong))
+    val types = cells.map(_._2 >> 24).toSet
+    assert(types == Set(3L, 4L, 5L, 6L, 7L) ++ (9L to 16L))
+    // each windowed family carries the four standard windows (the global
+    // and content device families share type 7; the key tells them apart)
+    val windowed: Map[String, (Array[String], Long) => Boolean] = Map(
+      "global-device" -> ((k, t) => t == 7 && k.length == 2),
+      "content-device" -> ((k, t) => t == 7 && k.length == 3),
+      "logUser" -> ((_, t) => t == 3), "user" -> ((_, t) => t == 4),
+      "query" -> ((_, t) => t == 5), "content-query" -> ((_, t) => t == 6))
+    val tags = CounterJob.StandardWindows.map(_.tag).toSet
+    windowed.foreach { case (family, in) =>
+      assert(cells.collect { case (k, f) if in(k, f >> 24) => f & 0xff }.toSet == tags,
+        family)
+    }
+    // only the top query reaches the query and last-query families
+    val Seq(hot, cold) = Seq("shoes", "socks").toDF("q")
+      .select(lower(hex(CounterJob.queryHashCol(col("q"))))).as[String].collect().toSeq
+    def queriesOf(k: Array[String]) =
+      k.sliding(2).collect { case Array(QueryType, h) => h }.toSet
+    val queryCells = cells.filter(c => Set(5L, 6L, 13L, 14L, 15L, 16L)(c._2 >> 24))
+    assert(queryCells.nonEmpty)
+    assert(queryCells.forall(c => queriesOf(c._1) == Set(hot)))
+    assert(!cells.exists(c => queriesOf(c._1).contains(cold)))
   }
 
   test("ContentMetricsJob rolls up metric columns per content and hour") {
