@@ -34,7 +34,8 @@ object JobRunner {
     println(s"JOBS flat: joinedImpressions=$impsByType " +
       s"droppedImps=${flat.droppedImpressions.count()} " +
       s"joinedActions=${flat.joinedActions.count()} " +
-      s"validationErrors=${flat.validationErrors.count()}")
+      s"validationErrors=${flat.validationErrors.count()} " +
+      s"flatResponseInsertions=${flat.flatResponseInsertions.count()}")
 
     // a joined action carries neither a search query nor a user agent:
     // the query families stay empty, and the device families count under

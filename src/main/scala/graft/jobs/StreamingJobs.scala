@@ -1,23 +1,25 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-import graft.schema.JoinSideEvent
+import graft.schema.ScopedEvent
 import graft.sinks.Sinks
 import graft.sources.{LogRequestSplit, Validation}
-import graft.streaming.{InferredJoin, LastSeen, LatestImpressions,
-  SlidingCounter, StreamOps, WatermarkDelays}
+import graft.streaming.{FlatChainTws, InferredJoinTws, LastSeen,
+  LatestImpressions, RedundantReduceTws, SlidingCounter, StreamOps}
 
 /** Streaming entry points for the four pipelines — the `readStream` →
-  * transform → `writeStream` forms of the batch jobs, sharing the same
-  * stage functions (the batch/streaming equivalence is pinned by
-  * StreamingFlatSpec). Sources are file streams here; a Kafka deployment
-  * swaps in `sources/KafkaSeam.reader` + `KafkaSeam.decode` (the wire
-  * contract and codec are pinned broker-free by KafkaSeamSpec) without
-  * touching the stages.
+  * transform → `writeStream` forms of the batch jobs. [[flagshipOutput]]
+  * composes the batch Flat Output Job's own stage table
+  * ([[FlatOutputJob]]), and FlatJobParitySpec pins that both forms emit
+  * the same pairs and sessions; StreamingFlatSpec pins the inferred join
+  * itself, stream against batch. Sources are file streams here; a Kafka
+  * deployment swaps in `sources/KafkaSeam.reader` + `KafkaSeam.decode`
+  * (the wire contract and codec are pinned broker-free by KafkaSeamSpec)
+  * without touching the stages.
   *
   * Checkpointing: one checkpoint dir per query, stable query names —
   * never reorder stateful stages within a query (SURVEY §2.10 state-
@@ -54,38 +56,6 @@ object StreamingJobs {
         Seq("impressionId")),
       one("action", withMs(LogRequestSplit.actions(envelopes).toDF()),
         Seq("actionId")))
-  }
-
-  /** Flat job slice: insertion→impression inferred join as a stream
-    * ([[InferredJoin.joinStream]], the `transformWithState` join), joined
-    * and dropped pairs (`matchType`) to one dt/hour parquet table.
-    *
-    * A checkpoint written by the earlier FMGWS form of
-    * this join cannot restart the `transformWithState` operator: a
-    * deployment that ran that form starts on a new checkpoint directory. */
-  def flatOutput(envelopes: DataFrame, outDir: String, checkpointDir: String)(
-      implicit spark: SparkSession): StreamingQuery = {
-    import spark.implicits._
-    val delays = WatermarkDelays.referenceChain()
-    val ins = LogRequestSplit.deliveryLogs(envelopes).toDF()
-      .select(col("platformId"), col("userInfo.logUserId").as("logUserId"),
-        col("timing.eventApiTimestamp").as("tsMs"),
-        explode(col("insertions")).as("i"))
-      .select(col("platformId"), col("logUserId"), lit(0).as("side"),
-        col("i.insertionId").as("id"), lit("").as("parentId"), col("tsMs"))
-    val imp = LogRequestSplit.impressions(envelopes).toDF()
-      .select(col("platformId"), col("userInfo.logUserId").as("logUserId"),
-        lit(1).as("side"), col("impressionId").as("id"),
-        col("insertionId").as("parentId"),
-        col("timing.eventApiTimestamp").as("tsMs"))
-    val joined = InferredJoin.joinStream(
-      ins.unionByName(imp).as[JoinSideEvent],
-      s"${delays("insertionImpressionJoin")} milliseconds",
-      maxTimeMs = 30 * 60 * 1000L, outOfOrderMs = 1000L)
-    Sinks.streamPartitioned(
-        joined.toDF().withColumn("eventApiTs", col("rightTs")),
-        "eventApiTs", s"$outDir/joined", s"$checkpointDir/joined")
-      .queryName("flat_joined").start()
   }
 
   /** Flat job tail: actions get their latest-impressions list attached
@@ -166,100 +136,78 @@ object StreamingJobs {
     * `FlatResponseInsertion` rows out of ONE query with FIVE chained
     * stateful stages (the reference's whole FlatOutputJob program,
     * FlatOutputJob.java:368-641 joins + :712-754 merge + :998-1044
-    * cogroup):
+    * cogroup). It composes the batch job's stage table with the
+    * `transformWithState` stages:
     *
-    *   views ∪ insertions → inferred join 1 (view→insertion, right-outer)
-    *     → enrich via `insertionMeta` → ∪ impressions → inferred join 2
-    *     → self-pair fusion → ∪ actions → inferred join 3 + D3 redundant
-    *     reduce (FlatChainTws.joinAndReduce) → stateless JoinedEvent
-    *     detail merge → J7 session cogroup → dt/hour parquet.
+    *   [[FlatOutputJob.gate]] → views ∪ insertions → inferred join 1
+    *     (right-outer) → ∪ impressions → inferred join 2 → self-pair
+    *     fusion → ∪ cart-split actions → inferred join 3 + D3 redundant
+    *     reduce (FlatChainTws.joinAndReduce) → stateless JoinedEvent detail
+    *     merge → J7 session cogroup → dt/hour parquet.
     *
-    * `insertionMeta` / `impressionDetails` / `actionDetails` are STATIC
-    * dimension frames (in production: read-optimized views of the
-    * compacted raw tables — the reference reads its Hudi tables the same
-    * way); stream-static joins keep the chain's watermark intact. For the
-    * JoinedEvent stream as a SEPARATE deliverable, run the two-query
-    * production split spec'd in StreamingFlagshipSpec instead.
+    * So its sessions equal `FlatOutputJob.run(...).flatResponseInsertions`
+    * with every window set to `maxTimeMs` (FlatJobParitySpec); no
+    * other-content snapshot is applied. `insertionMeta` /
+    * `impressionDetails` / `actionDetails` are STATIC detail frames for the
+    * merge, in `FlatOutputJob.detailFrames`' shapes (in production:
+    * read-optimized views of the compacted raw tables, as the reference
+    * reads its Hudi tables); stream-static joins keep the chain's
+    * watermark intact. For the JoinedEvent stream as a SEPARATE
+    * deliverable, run the two-query production split spec'd in
+    * StreamingFlagshipSpec instead.
     *
     * State sizing derives from `maxTimeMs`/`oooMs` per the documented
     * chain rules (reduce ooo ≥ W + 2·ooo; cleanup ≥ 2W + ooo; session ooo
-    * ≥ reduce ooo — see RedundantReduceTws.advance / SessionCogroupTws). */
+    * ≥ reduce ooo — see RedundantReduceTws.advance / SessionCogroupTws).
+    * A checkpoint written before the join state held each LHS's scopes is
+    * refused by Spark's state-schema check (FlagshipCheckpointGuardSpec):
+    * a deployment of the earlier form starts on a new directory. */
   def flagshipOutput(envelopes: DataFrame, insertionMeta: DataFrame,
       impressionDetails: DataFrame, actionDetails: DataFrame,
       outDir: String, checkpointDir: String,
       maxTimeMs: Long = 30L * 60 * 1000, oooMs: Long = 1000L,
-      gapMs: Long = 86400000L, watermarkDelay: String = "1 minute")(
+      gapMs: Long = FlatOutputJob.SessionGapMs,
+      watermarkDelay: String = "1 minute")(
       implicit spark: SparkSession): StreamingQuery = {
-    import spark.implicits._
-    import graft.streaming.{FlatChainTws, InferredJoinTws, SessionCogroupTws}
-    val redOoo = maxTimeMs + 2 * oooMs + 3000L
-    val redCleanup = 2 * maxTimeMs + oooMs + 9000L
-    val sessOoo = redOoo + 3000L
-    val noIds = array().cast("array<string>")
-    val views = LogRequestSplit.views(envelopes).toDF().select(
-      col("platformId"), col("userInfo.logUserId").as("logUserId"),
-      lit(0).as("side"), col("viewId").as("id"), lit("").as("parentId"),
-      col("timing.eventApiTimestamp").as("tsMs"),
-      array(col("userInfo.logUserId")).as("scopes"), noIds.as("contentIds"))
-    val ins = LogRequestSplit.deliveryLogs(envelopes).toDF().select(
-        col("platformId"), col("userInfo.logUserId").as("logUserId"),
-        col("timing.eventApiTimestamp").as("tsMs"),
-        col("request.viewId").as("fkView"), explode(col("insertions")).as("i"))
-      .select(col("platformId"), col("logUserId"), lit(1).as("side"),
-        col("i.insertionId").as("id"), col("fkView").as("parentId"),
-        col("tsMs"), array(col("logUserId")).as("scopes"), noIds.as("contentIds"))
-    val stage1 = InferredJoinTws.joinScopedStream(
-      views.unionByName(ins).as[graft.schema.ScopedEvent],
-      watermarkDelay, maxTimeMs, oooMs, rightOuter = true)
-    // stage-2 LHS enrichment: the matched insertion's request/content ids
-    // from the static meta frame (scopes = requestId, viewId, contentId)
-    val meta = insertionMeta.select(col("insertionId").as("rightId"),
-      col("requestId"), col("contentId"), col("tsMs").as("insTs"))
-    def toStage2Left(pairs: DataFrame): DataFrame =
-      pairs.join(meta, Seq("rightId"))
-        .select(col("platformId"), col("logUserId"), lit(0).as("side"),
-          col("rightId").as("id"), lit("").as("parentId"),
-          col("insTs").as("tsMs"),
-          array(col("requestId"), col("leftId"), col("contentId")).as("scopes"),
-          array(col("contentId")).as("contentIds"), col("emittedAt"))
-    val imps = LogRequestSplit.impressions(envelopes).toDF().select(
-      col("platformId"), col("userInfo.logUserId").as("logUserId"),
-      lit(1).as("side"), col("impressionId").as("id"),
-      col("insertionId").as("parentId"),
-      col("timing.eventApiTimestamp").as("tsMs"),
-      array(col("requestId"), col("viewId")).as("scopes"),
-      array(col("contentId")).as("contentIds"))
-    val p2 = FlatChainTws.nextStage(stage1, toStage2Left,
-      imps.as[graft.schema.ScopedEvent], watermarkDelay, maxTimeMs, oooMs,
-      rightOuter = false)
-    def toStage3Left(pairs: DataFrame): DataFrame =
-      pairs.select(col("platformId"), col("logUserId"), lit(0).as("side"),
-        col("rightId").as("id"), lit("").as("parentId"),
-        col("rightTs").as("tsMs"), array(col("leftId")).as("scopes"),
-        noIds.as("contentIds"), col("emittedAt"),
-        col("leftId").as("selfRef"))
-    val acts = LogRequestSplit.actions(envelopes).toDF().select(
-      col("platformId"), col("userInfo.logUserId").as("logUserId"),
-      lit(1).as("side"), col("actionId").as("id"),
-      col("impressionId").as("parentId"),
-      col("timing.eventApiTimestamp").as("tsMs"),
-      array(col("insertionId")).as("scopes"),
-      array(col("contentId")).as("contentIds"))
-    // the cart-item pk separator: no plain action id contains \u0001, so
-    // unpacked actions pass through; a cart explode upstream would pack
-    // actionId\u0001contentId ids exactly as q35 does
-    val reduced = FlatChainTws.joinAndReduce(p2, toStage3Left,
-      acts.as[graft.schema.ScopedEvent], watermarkDelay, maxTimeMs, oooMs,
-      sep = "\u0001", redOoo, replaceTtlMs = Long.MaxValue / 4, redCleanup)
-    val sessions = FlatChainTws.flagshipSessions(reduced,
+    val sessions = FlatChainTws.flagshipSessions(
+      flagshipChain(envelopes, maxTimeMs, oooMs, watermarkDelay),
       insertionMeta.select(col("insertionId"), col("requestId"),
         col("contentId").as("ins_content")),
-      impressionDetails, actionDetails, gapMs, sessOoo)
+      impressionDetails, actionDetails, gapMs,
+      reduceOooMs(maxTimeMs, oooMs) + 3000L)
     Sinks.streamPartitioned(
         sessions.toDF().withColumn("eventApiTs", col("sessionStartMs")),
         "eventApiTs", s"$outDir/flat_response_insertion",
         s"$checkpointDir/flagship")
       .queryName("flagship_flat_response_insertion").start()
+  }
+
+  /** The D3 reduce's reorder bound behind a join stage of window
+    * `maxTimeMs` (see RedundantReduceTws.advance). */
+  private def reduceOooMs(maxTimeMs: Long, oooMs: Long): Long =
+    maxTimeMs + 2 * oooMs + 3000L
+
+  /** [[flagshipOutput]]'s first four stateful stages: the stage table's
+    * three inferred joins and the D3 redundant reduce, whose rows carry
+    * every matched impression pair (kinds `impression` and `redundant`)
+    * and every matched action pair (`action`, re-pointed to the root). */
+  def flagshipChain(envelopes: DataFrame, maxTimeMs: Long, oooMs: Long,
+      watermarkDelay: String)(
+      implicit spark: SparkSession): Dataset[RedundantReduceTws.Reduced] = {
+    import spark.implicits._
+    import FlatOutputJob._
+    val g = gate(envelopes)
+    val p1 = InferredJoinTws.joinScopedStream(
+      viewSide(g.views).unionByName(insertionSide(g.deliveryLogs)).as[ScopedEvent],
+      watermarkDelay, maxTimeMs, oooMs, rightOuter = true)
+    val p2 = FlatChainTws.nextStage(p1, insertionLeft,
+      impressionSide(g.impressions).as[ScopedEvent], watermarkDelay,
+      maxTimeMs, oooMs, rightOuter = false)
+    FlatChainTws.joinAndReduce(p2,
+      pairs => impressionLeft(pairs.withColumn("selfRef", col("leftId")), None),
+      actionSide(g.actions, None).as[ScopedEvent], watermarkDelay, maxTimeMs,
+      oooMs, PkSep, reduceOooMs(maxTimeMs, oooMs), ReplaceTtlMs,
+      cleanupMs = 2 * maxTimeMs + oooMs + 9000L)
   }
 
   /** Counter job QUERY families END-TO-END in ONE query — the reference's

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *    within event-time sessions (reference FlatResponseInsertion cogroup,
   *    P:job/join/FlatOutputJob.java:998-1044 — impressions+actions per
   *    insertion in 1-day-gap session windows).
-  *  - `attachLatest`: up to K most recent prior right-side events attached
-  *    to each left event within a lookback window (reference
+  *  - `attachLatestExcluding`: up to K most recent prior right-side events
+  *    attached to each left event within a lookback window (reference
   *    AddLatestImpressions, P:common/functions/AddLatestImpressions
   *    .java:45-386 — ≤25 impressions, 6h session).
   *  - `redundantRepoint`: collapse repeated right-side events per
@@ -22,30 +22,22 @@ import org.apache.spark.sql.functions._
   */
 object Cogroup {
 
-  /** Tag + union + sessionize + pivot counts: one pass, one shuffle.
-    * Output: keys, session_start_ms, n_left, n_right. */
+  /** [[sessionPayloadCogroup]] without the id lists (column pruning drops
+    * their collection). Output: keys, session_start_ms, n_left, n_right. */
   def sessionCogroup(left: DataFrame, right: DataFrame, keys: Seq[String],
-      tsMs: String, gapMs: Long, leftTie: String, rightTie: String): DataFrame = {
-    val l = left.select((keys.map(col) :+ col(tsMs) :+
-      col(leftTie).cast("long").as("__tie") :+ lit(1).as("__isLeft")): _*)
-    val r = right.select((keys.map(col) :+ col(tsMs) :+
-      col(rightTie).cast("long").as("__tie") :+ lit(0).as("__isLeft")): _*)
-    Sessionize.assignSessions(l.unionByName(r), keys, tsMs, gapMs, "__tie")
-      .groupBy((keys.map(col) :+ col("__session")): _*)
-      .agg(min(col(tsMs)).as("session_start_ms"),
-        sum(col("__isLeft")).cast("long").as("n_left"),
-        (count(lit(1)) - sum(col("__isLeft"))).cast("long").as("n_right"))
-      .drop("__session")
-  }
+      tsMs: String, gapMs: Long, leftTie: String, rightTie: String): DataFrame =
+    sessionPayloadCogroup(left, right, keys, tsMs, gapMs, leftTie, rightTie)
+      .drop("left_ids", "right_ids")
 
-  /** [[sessionCogroup]] with the reference's full payload: per session,
-    * the COLLECTED left/right id lists (FlatResponseInsertion =
-    * insertion + repeated impression + repeated action records,
+  /** Tag + union + sessionize + pivot, one shuffle: per session its start,
+    * the side counts and the reference's full payload, the COLLECTED
+    * left/right id lists (FlatResponseInsertion = insertion + repeated
+    * impression + repeated action records,
     * P:job/join/FlatOutputJob.java:1016-1025), sorted by (ts, id) for a
-    * total order and serialized comma-joined for cross-engine compare.
-    * Still one shuffle: tag + union + sessionize + one groupBy; the
-    * collected lists are bounded by session size (the reference holds the
-    * same per-session state in its window cogroup). */
+    * total order and serialized comma-joined for cross-engine compare. The
+    * lists are bounded by session size (the reference holds the same
+    * per-session state in its window cogroup). Output: keys,
+    * session_start_ms, n_left, n_right, left_ids, right_ids. */
   def sessionPayloadCogroup(left: DataFrame, right: DataFrame, keys: Seq[String],
       tsMs: String, gapMs: Long, leftTie: String, rightTie: String,
       tieType: String = "long"): DataFrame = {
@@ -66,28 +58,8 @@ object Cogroup {
       .drop("__session")
   }
 
-  /** For each left row, the K most recent right rows with
-    * rightTs <= leftTs (strictly within lookbackMs), exploded as
-    * (left cols, rank, right id/ts). One equi+range join, one window. */
-  def attachLatest(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTsMs: String, rightTsMs: String, leftId: String, rightId: String,
-      k: Int, lookbackMs: Long): DataFrame = {
-    val l = left.as("l"); val r = right.as("r")
-    val keyCond = keys.map(c => col(s"l.$c") === col(s"r.$c")).reduce(_ && _)
-    val range = col(s"r.$rightTsMs") <= col(s"l.$leftTsMs") &&
-      col(s"r.$rightTsMs") >= col(s"l.$leftTsMs") - lookbackMs
-    val w = Window.partitionBy(col(s"l.$leftId"))
-      .orderBy(col(s"r.$rightTsMs").desc, col(s"r.$rightId").desc)
-    l.join(r, keyCond && range, "inner")
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select((keys.map(c => col(s"l.$c").as(c)) :+
-        col(s"l.$leftId").as(leftId) :+ col(s"l.$leftTsMs").as(leftTsMs) :+
-        col("rank") :+ col(s"r.$rightId").as(rightId) :+
-        col(s"r.$rightTsMs").as(rightTsMs)): _*)
-  }
-
-  /** [[attachLatest]] with the reference's full exclusion semantics
+  /** Up to K most recent prior right rows attached to each left row, with
+    * the reference's full exclusion semantics
     * (P:common/functions/AddLatestImpressions.java:355-374): for each left
     * (action) row at time `at`,
     *   1. candidate right (impression) rows have ts in [at − lookback, at];

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** J6: merge full entity details back onto tiny id streams, TRACKING what
@@ -25,9 +25,10 @@ object MergeDetails {
 
   /** One detail source: `details` must carry `refCol` (the id the tiny
     * stream references) plus uniquely-named payload columns.
-    * `label` mirrors the reference's MissingEvent enum values. */
+    * `label` mirrors the reference's MissingEvent enum values; the detail
+    * is required on the rows where `requiredWhen` holds. */
   final case class DetailSource(details: DataFrame, refCol: String,
-      label: String, required: Boolean = true)
+      label: String, requiredWhen: Column = lit(true))
 
   /** Left-join every source onto `tiny`, then label rows by which
     * REQUIRED details are missing: `missing` = comma-joined labels
@@ -40,16 +41,12 @@ object MergeDetails {
       acc.join(s.details.withColumn(s"__has_${s.label}", lit(1)),
         Seq(s.refCol), "left")
     }
-    val missingLabels = sources.filter(_.required).map(s =>
-      when(col(s"__has_${s.label}").isNull, lit(s.label)))
+    val missingLabels = sources.map(s =>
+      when(col(s"__has_${s.label}").isNull && s.requiredWhen, lit(s.label)))
     joined
       .withColumn("missing", concat_ws(",", missingLabels: _*))
       .withColumn("status",
         when(col("missing") === "", lit("ok")).otherwise(lit("dropped")))
       .drop(sources.map(s => s"__has_${s.label}"): _*)
   }
-
-  /** The dropped side channel (DroppedMergeDetailsEvent analogue). */
-  def dropped(merged: DataFrame): DataFrame =
-    merged.where(col("status") === "dropped")
 }

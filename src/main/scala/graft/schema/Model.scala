@@ -1,24 +1,12 @@
 package graft.schema
 
-/** Reference-shaped event model (SURVEY §1, FIXTURES.md), narrowed to the
-  * fields the join/aggregation chain exercises. Timestamps are epoch millis
-  * (the reference's data-plane convention).
-  *
-  * TinyEvent mirrors the reference's state-minimizing join skeleton
-  * (P:job/join/FlatOutputJob.java:756-767): only ids + event time cross the
-  * stateful operators; full payloads are re-attached afterwards (J6) — the
-  * pattern that keeps 100 TB of state out of the join.
-  */
-case class TinyEvent(
-    platformId: Long,
-    logUserId: String,
-    logTimestamp: Long,
-    viewId: String = "",
-    requestId: String = "",
-    insertionId: String = "",
-    impressionId: String = "",
-    actionId: String = "",
-    contentId: String = "")
+// Reference-shaped event model (SURVEY §1, FIXTURES.md), narrowed to the
+// fields the join/aggregation chain exercises. Timestamps are epoch millis
+// (the reference's data-plane convention). The join sides below carry the
+// reference's TinyEvent skeleton (P:job/join/FlatOutputJob.java:756-767):
+// only ids + event time cross the stateful operators; full payloads are
+// re-attached afterwards (J6) — the pattern that keeps 100 TB of state out
+// of the join.
 
 /** One side of an inferred-reference join: `id` is this event's pk within
   * the join, `parentId` the (possibly absent = "") foreign key to the LHS. */
@@ -55,7 +43,9 @@ case class ScopedEvent(
 
 /** Output of an inferred-reference join. matchType: exact | inferred |
   * outer (right-outer emission with empty left) | dropped (side-output
-  * channel — reference emits these to etl_side/, SURVEY K6). */
+  * channel — reference emits these to etl_side/, SURVEY K6). `leftScopes`
+  * = the matched LHS's scopes in order (empty when none matched): the
+  * TinyEvent merge, from which a later stage's LHS reads its ids. */
 case class JoinedPair(
     platformId: Long,
     logUserId: String,
@@ -63,7 +53,8 @@ case class JoinedPair(
     rightId: String,
     leftTs: Long,
     rightTs: Long,
-    matchType: String)
+    matchType: String,
+    leftScopes: Seq[String] = Nil)
 
 /** DeliveryLog essentials for CombineDeliveryLog (J5): API- and SDK-produced
   * logs sharing clientRequestId merge within a short window, preferring the

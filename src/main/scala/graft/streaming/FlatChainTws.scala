@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.MergeDetails
+import graft.operators.MergeDetails.DetailSource
 import graft.schema.ScopedEvent
 import InferredJoinTws.JoinedPairAt
 
@@ -10,10 +12,10 @@ import InferredJoinTws.JoinedPairAt
   * view→insertion→impression→action as a single Flink program
   * (FlatOutputJob.java:368-641); with `transformWithState` chaining, the
   * Spark form is likewise a single streaming query: each stage's pairs are
-  * enriched (stream-static) into the next stage's LHS, the next stage's
-  * RHS stream unions in under its own watermark (global watermark = min
-  * across sources), and the next inferred join consumes the union keyed by
-  * (platformId, logUserId).
+  * projected into the next stage's LHS, the next stage's RHS stream unions
+  * in under its own watermark (global watermark = min across sources), and
+  * the next inferred join consumes the union keyed by (platformId,
+  * logUserId).
   *
   * Stage plumbing rules (the two that make chaining work at all):
   *  - the inter-stage event-time column is the upstream stage's
@@ -39,18 +41,22 @@ object FlatChainTws {
       toLeft: DataFrame => DataFrame,
       rhs: Dataset[ScopedEvent], rhsWatermarkDelay: String,
       maxTimeMs: Long, outOfOrderMs: Long, rightOuter: Boolean)(
+      implicit spark: SparkSession): Dataset[JoinedPairAt] =
+    join(toLeft(upstream.toDF()), rhs.toDF(), rhsWatermarkDelay, maxTimeMs,
+      outOfOrderMs, rightOuter)
+
+  /** LHS rows (carrying `emittedAt`) ∪ the raw RHS stream under its own
+    * watermark on `emittedAt` = its event time → the chained inferred join. */
+  private def join(left: DataFrame, rhs: DataFrame, rhsWatermarkDelay: String,
+      maxTimeMs: Long, outOfOrderMs: Long, rightOuter: Boolean)(
       implicit spark: SparkSession): Dataset[JoinedPairAt] = {
     import spark.implicits._
-    val left = toLeft(upstream.toDF())
-    val right = rhs.toDF()
-      .withColumn("emittedAt", timestamp_millis(col("tsMs")))
+    val right = rhs.withColumn("emittedAt", timestamp_millis(col("tsMs")))
       .withWatermark("emittedAt", rhsWatermarkDelay)
     val cols = Seq("platformId", "logUserId", "side", "id", "parentId",
-      "tsMs", "scopes", "contentIds", "emittedAt")
+      "tsMs", "scopes", "contentIds", "emittedAt").map(col)
     InferredJoinTws.joinScopedChained(
-      left.select(cols.map(col): _*)
-        .unionByName(right.select(cols.map(col): _*))
-        .as[ScopedEvent],
+      left.select(cols: _*).unionByName(right.select(cols: _*)).as[ScopedEvent],
       maxTimeMs, outOfOrderMs, rightOuter)
   }
 
@@ -116,10 +122,7 @@ object FlatChainTws {
           concat(lit(SelfMarker), col("id"), lit(sep), col("selfRef")).as("id"),
           col("id").as("parentId"),
           noIds.as("scopes"), noIds.as("contentIds")))).as("r"))
-      .select(col("platformId"), col("logUserId"), col("r.side").as("side"),
-        col("r.id").as("id"), col("r.parentId").as("parentId"), col("tsMs"),
-        col("r.scopes").as("scopes"), col("r.contentIds").as("contentIds"),
-        col("emittedAt"))
+      .select("platformId", "logUserId", "tsMs", "emittedAt", "r.*")
     val right = actRhs.toDF()
       // enforce the reserved-prefix contract documented on [[SelfMarker]]:
       // an adversarial action id starting with it would be silently
@@ -128,15 +131,8 @@ object FlatChainTws {
         raise_error(concat(
           lit("action id begins with the reserved SelfMarker prefix: "),
           col("id")))).otherwise(col("id")))
-      .withColumn("emittedAt", timestamp_millis(col("tsMs")))
-      .withWatermark("emittedAt", rhsWatermarkDelay)
-    val cols = Seq("platformId", "logUserId", "side", "id", "parentId",
-      "tsMs", "scopes", "contentIds", "emittedAt")
-    val joined = InferredJoinTws.joinScopedChained(
-      both.select(cols.map(col): _*)
-        .unionByName(right.select(cols.map(col): _*))
-        .as[ScopedEvent],
-      maxTimeMs, outOfOrderMs, rightOuter = false)
+    val joined = join(both, right, rhsWatermarkDelay, maxTimeMs,
+      outOfOrderMs, rightOuter = false)
     // one-pass output mapping, for the same no-self-union reason as above:
     // self-pair rows (id = marker + impressionId + sep + insertionId)
     // become impression inputs, everything else action inputs
@@ -178,25 +174,15 @@ object FlatChainTws {
     * must carry uniquely-named payload columns. In streaming mode they are
     * static (stream-static left equi-joins — watermark-preserving,
     * broadcast when dimension-sized); at 100 TB each is one equi-join with
-    * no state, exactly like the batch `MergeDetails`. */
+    * no state. It is the batch J6, `MergeDetails.mergeWithDropTracking`,
+    * with the action detail required on action rows only. */
   def mergeFlagshipDetails(reduced: DataFrame, insertionDetails: DataFrame,
-      impressionDetails: DataFrame, actionDetails: DataFrame): DataFrame = {
-    val j = reduced
-      .join(insertionDetails.withColumn("__has_ins", lit(1)),
-        Seq("insertionId"), "left")
-      .join(impressionDetails.withColumn("__has_imp", lit(1)),
-        Seq("impressionId"), "left")
-      .join(actionDetails.withColumn("__has_act", lit(1)),
-        Seq("actionId"), "left")
-    j.withColumn("missing", concat_ws(",",
-        when(col("__has_ins").isNull, lit("DELIVERY_LOG")),
-        when(col("__has_imp").isNull, lit("IMPRESSION")),
-        when(col("kind") === "action" && col("__has_act").isNull,
-          lit("ACTION"))))
-      .withColumn("status",
-        when(col("missing") === "", lit("ok")).otherwise(lit("dropped")))
-      .drop("__has_ins", "__has_imp", "__has_act")
-  }
+      impressionDetails: DataFrame, actionDetails: DataFrame): DataFrame =
+    MergeDetails.mergeWithDropTracking(reduced, Seq(
+      DetailSource(insertionDetails, "insertionId", "DELIVERY_LOG"),
+      DetailSource(impressionDetails, "impressionId", "IMPRESSION"),
+      DetailSource(actionDetails, "actionId", "ACTION",
+        requiredWhen = col("kind") === "action")))
 
   /** The COMPLETE streaming flagship as one query: the fused four-stage
     * chain's `Reduced` output → stateless JoinedEvent merge

@@ -35,7 +35,7 @@ import graft.schema.{JoinSideEvent, JoinedPair, ScopedEvent}
 object InferredJoin {
 
   case class ScopedState(
-      lefts: Map[String, (Long, Seq[String])], // LHS pk → (ts, contentIds)
+      lefts: Map[String, (Long, Seq[String], Seq[String])], // LHS pk → (ts, contentIds, scopes)
       scopeIdx: Map[String, List[(Long, String)]], // scope key → ts-sorted (ts, pk)
       pendingFk: List[ScopedEvent], // RHS awaiting LHS by exact FK
       pendingInfer: List[ScopedEvent]) // RHS awaiting inference
@@ -57,8 +57,10 @@ object InferredJoin {
     var scopeIdx = st.scopeIdx
     val out = Seq.newBuilder[JoinedPair]
 
-    def emit(leftId: String, leftTs: Long, rightId: String, rightTs: Long, how: String): Unit =
-      out += JoinedPair(platformId, logUserId, leftId, rightId, leftTs, rightTs, how)
+    def emit(leftId: String, leftTs: Long, rightId: String, rightTs: Long,
+        how: String): Unit =
+      out += JoinedPair(platformId, logUserId, leftId, rightId, leftTs, rightTs,
+        how, lefts.get(leftId).fold(Seq.empty[String])(_._3))
 
     // 1. ingest LHS first (same-batch RHS may reference them); FIFO-dedupe
     //    by pk (BaseInferred.java:337-352), register ancestor scopes sorted
@@ -66,7 +68,7 @@ object InferredJoin {
     var flushFks = Set.empty[String]
     events.foreach { e =>
       if (e.side == 0 && e.id.nonEmpty && !lefts.contains(e.id)) {
-        lefts += (e.id -> ((e.tsMs, e.contentIds)))
+        lefts += (e.id -> ((e.tsMs, e.contentIds, e.scopes)))
         flushFks += e.id
         e.scopes.foreach { sk =>
           if (sk.nonEmpty) {
@@ -94,7 +96,7 @@ object InferredJoin {
       if (e.side == 1) {
         if (e.parentId.nonEmpty) {
           lefts.get(e.parentId) match {
-            case Some((lts, _)) => emit(e.parentId, lts, e.id, e.tsMs, "exact")
+            case Some((lts, _, _)) => emit(e.parentId, lts, e.id, e.tsMs, "exact")
             case None => pendingFk ::= e
           }
         } else if (!pendingInferIds.contains(e.id)) {
@@ -107,7 +109,7 @@ object InferredJoin {
     // 3. out-of-order FK joins: LHS may have arrived in this batch
     pendingFk = pendingFk.filter { e =>
       if (flushFks.contains(e.parentId)) {
-        val (lts, _) = lefts(e.parentId)
+        val lts = lefts(e.parentId)._1
         emit(e.parentId, lts, e.id, e.tsMs, "exact"); false
       } else if (e.tsMs + outOfOrderMs <= watermarkMs) { // LHS will never come
         if (rightOuter) emit("", -1L, e.id, e.tsMs, "outer")
@@ -126,7 +128,7 @@ object InferredJoin {
           lts >= e.tsMs - maxTimeMs && lts <= e.tsMs + outOfOrderMs }
         .flatMap { case (lts, pk) =>
           lefts.get(pk) match {
-            case Some((_, lContents)) if e.contentIds.isEmpty ||
+            case Some((_, lContents, _)) if e.contentIds.isEmpty ||
                 e.contentIds.exists(c => c.nonEmpty && lContents.contains(c)) =>
               Some((pk, lts))
             case _ => None
@@ -153,7 +155,7 @@ object InferredJoin {
     //    lts + maxTime, which resolves at rts + outOfOrder.
     if (watermarkMs != Long.MaxValue) {
       val expired = lefts.collect {
-        case (pk, (lts, _)) if lts + maxTimeMs + outOfOrderMs <= watermarkMs => pk
+        case (pk, (lts, _, _)) if lts + maxTimeMs + outOfOrderMs <= watermarkMs => pk
       }.toSet
       if (expired.nonEmpty) {
         lefts --= expired

@@ -28,7 +28,8 @@ object InferredJoinTws {
     * why original event times cannot re-emerge as the time column). */
   case class JoinedPairAt(platformId: Long, logUserId: String,
       leftId: String, rightId: String, leftTs: Long, rightTs: Long,
-      matchType: String, emittedAt: java.sql.Timestamp)
+      matchType: String, leftScopes: Seq[String],
+      emittedAt: java.sql.Timestamp)
 
   class Processor(maxTimeMs: Long, outOfOrderMs: Long, rightOuter: Boolean)
       extends TransitionProcessor[(Long, String), ScopedEvent, ScopedState,
@@ -51,7 +52,7 @@ object InferredJoinTws {
         rightOuter)
     override protected def stamp(p: JoinedPair, wmMs: Long): JoinedPairAt =
       JoinedPairAt(p.platformId, p.logUserId, p.leftId, p.rightId, p.leftTs,
-        p.rightTs, p.matchType, new java.sql.Timestamp(
+        p.rightTs, p.matchType, p.leftScopes, new java.sql.Timestamp(
           math.max(math.max(p.leftTs, p.rightTs), wmMs + 1)))
   }
 

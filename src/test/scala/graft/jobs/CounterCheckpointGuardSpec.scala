@@ -1,10 +1,11 @@
 package graft.jobs
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.util.Try
 
 import graft.SparkSpec
+import graft.jobs.StreamingJobsSpec.copyTree
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** `StreamingJobs.counterQueryFamilies` on a checkpoint of the earlier
@@ -18,13 +19,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class CounterCheckpointGuardSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark
-
-  private def copyTree(from: Path, to: Path): Unit =
-    Files.walk(from).forEach { p =>
-      val dst = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(dst)
-      else Files.copy(p, dst)
-    }
 
   test("counterQueryFamilies refuses a checkpoint of the bucket-map layout") {
     val fixture = Paths.get(getClass.getResource(

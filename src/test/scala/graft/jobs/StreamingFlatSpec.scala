@@ -6,11 +6,11 @@ import graft.sources.{FakeLogGenerator, LogRequestSplit}
 import graft.streaming.InferredJoin
 import org.apache.spark.sql.functions._
 
-/** End-to-end streaming slice of the join job: parquet file stream →
-  * envelope split → inferred join (`InferredJoin.joinStream`, on
-  * `transformWithState`) → memory sink, compared against
-  * the identical batch run — the readStream/writeStream counterpart of the
-  * reference's streams-as-batch equivalence. */
+/** The join job's core as a stream: parquet file stream → envelope split
+  * → inferred join (`InferredJoin.joinStream`, on `transformWithState`)
+  * → memory sink, compared against the identical batch run — the
+  * readStream/writeStream counterpart of the reference's streams-as-batch
+  * equivalence. FlatJobParitySpec compares the whole job's two forms. */
 class StreamingFlatSpec extends SparkSpec {
   import spark.implicits._
   implicit lazy val s = spark

@@ -1,18 +1,19 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.Cogroup
+import graft.jobs.FlatOutputJob
 import graft.schema.ScopedEvent
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming flagship END-TO-END: the reference's join job deliverables
   * are JoinedEvent (tiny pairs + merged details, FlatOutputJob.java:712-754)
   * and FlatResponseInsertion (per-insertion session cogroup, :998-1044).
-  * This spec pins, against batch compositions built from INDEPENDENT
-  * operators (joinScopedBatch × 3 + advance, mergeFlagshipDetails,
-  * Cogroup.sessionPayloadCogroup):
+  * This spec pins, against the batch job's flagship tail
+  * (`FlatOutputJob.redundantReduce` / `flatResponseInsertions`) over the
+  * batch joins (joinScopedBatch × 3) of the same stage inputs:
   *   - the single-query form: 3 joins + D3 reduce + J7 session cogroup =
   *     FIVE chained stateful operators emitting FlatResponseInsertion;
   *   - checkpoint kill-and-restart of that five-stage query;
@@ -22,39 +23,18 @@ import org.apache.spark.sql.functions._
   *     tables and enriches downstream). */
 class StreamingFlagshipSpec extends SparkSpec {
   import spark.implicits._
+  import FlagshipFixture._
   implicit lazy val s = spark
 
-  private val W = 10000L
-  private val OOO = 1000L
-  private val SEP = "\u0001"
-  private val RedOoo = W + 2 * OOO + 3000L
-  private val RedTtl = 1000000L
-  private val RedCleanup = 2 * W + OOO + 9000L
   private val Gap = 2000L
   private val SessOoo = RedOoo + 3000L
 
-  // ---- fixture ------------------------------------------------------
-  // u1: view v1 → insertion i1 → impressions mI (inferred, event-time
-  // root) and mE (exact, redundant) → actions a1 (on mE, re-points to mI,
+  // ---- fixture: FlagshipFixture's stages 1-2, plus -----------------
+  // u1: actions a1 (on the redundant mE, re-points to the root mI,
   // session 1), a3 (on mI, 5s later — gap 2s splits it into session 2).
-  // u3: v3 → i3 → impression m4 → action a2 (cart-packed content) in one
-  // session, plus a5 whose action details are MISSING (dropped at the
-  // merge, never enters a session).
-  private val stage1 = Seq(
-    ScopedEvent(0, "u1", 0, "v1", "", 1000L, Seq("u1")),
-    ScopedEvent(0, "u1", 1, "i1", "", 2000L, Seq("u1")),
-    ScopedEvent(0, "u3", 0, "v3", "", 1500L, Seq("u3")),
-    ScopedEvent(0, "u3", 1, "i3", "", 1400L, Seq("u3")))
-
-  private def insStatic = Seq(
-    ("i1", "R1", "C1", 2000L), ("i3", "R3", "C3", 1400L))
-    .toDF("iid", "rid", "content", "its")
-
-  private val stage2Rhs = Seq(
-    ScopedEvent(0, "u1", 1, "mI", "", 3000L, Seq("R1", ""), Seq("C1")),
-    ScopedEvent(0, "u1", 1, "mE", "i1", 3500L, Seq("", "")),
-    ScopedEvent(0, "u3", 1, "m4", "i3", 2500L, Seq("", "")))
-
+  // u3: action a2 (cart-packed content) in i3's one session, plus a5
+  // whose action details are MISSING (dropped at the merge, never enters
+  // a session).
   private val stage3Rhs = Seq(
     ScopedEvent(0, "u1", 1, "a1", "mE", 4000L, Seq("")),
     ScopedEvent(0, "u1", 1, "a3", "mI", 9000L, Seq("")),
@@ -69,58 +49,6 @@ class StreamingFlagshipSpec extends SparkSpec {
   private def actDetails = Seq(("a1", "AD1"), ("a2", "AD2"), ("a3", "AD3"))
     .toDF("actionId", "act_payload")
 
-  private def toStage2Left(pairs: DataFrame): DataFrame =
-    pairs.join(insStatic.withColumnRenamed("iid", "rightId"), "rightId")
-      .select(col("platformId"), col("logUserId"), lit(0).as("side"),
-        col("rightId").as("id"), lit("").as("parentId"), col("its").as("tsMs"),
-        array(col("rid"), col("leftId"), col("content")).as("scopes"),
-        array(col("content")).as("contentIds"), col("emittedAt"))
-
-  private def toStage3Left(pairs: DataFrame): DataFrame =
-    pairs.select(col("platformId"), col("logUserId"), lit(0).as("side"),
-      col("rightId").as("id"), lit("").as("parentId"),
-      col("rightTs").as("tsMs"), array(col("leftId")).as("scopes"),
-      array().cast("array<string>").as("contentIds"), col("emittedAt"),
-      col("leftId").as("selfRef"))
-
-  // ---- batch composition (independent operators) --------------------
-
-  /** Three batch join stages + the shared reduce transition → Reduced. */
-  private def batchReduced: Seq[RedundantReduceTws.Reduced] = {
-    def pseudoEmitted(df: DataFrame) =
-      df.withColumn("emittedAt", timestamp_millis(col("rightTs")))
-    val p1 = InferredJoin.joinScopedBatch(stage1.toDS(), W, OOO, rightOuter = true)
-    val l2 = toStage2Left(pseudoEmitted(p1.toDF()))
-      .drop("emittedAt").as[ScopedEvent]
-    val p2 = InferredJoin.joinScopedBatch(
-      l2.union(stage2Rhs.toDS()), W, OOO, rightOuter = false)
-    val l3 = toStage3Left(pseudoEmitted(
-        p2.toDF().where(col("matchType").isin("exact", "inferred"))))
-      .drop("emittedAt", "selfRef").as[ScopedEvent]
-    val p3 = InferredJoin.joinScopedBatch(
-      l3.union(stage3Rhs.toDS()), W, OOO, rightOuter = false)
-    def matched(df: DataFrame) =
-      df.where(col("matchType").isin("exact", "inferred"))
-        .select("platformId", "logUserId", "leftId", "rightId", "rightTs")
-        .as[(Long, String, String, String, Long)].collect().toSeq
-    val tiny =
-      matched(p2.toDF()).map { case (pid, luid, iid, mid, ts) =>
-        RedundantReduceTws.TinyJoined(pid, luid, iid, mid, "", "", ts,
-          new java.sql.Timestamp(ts))
-      } ++
-      matched(p3.toDF()).map { case (pid, luid, mid, rid, ts) =>
-        val (aid, content) =
-          if (rid.contains(SEP)) (rid.split(SEP)(0), rid.split(SEP)(1))
-          else (rid, "")
-        RedundantReduceTws.TinyJoined(pid, luid, "", mid, aid, content, ts,
-          new java.sql.Timestamp(ts))
-      }
-    tiny.groupBy(t => (t.platformId, t.logUserId)).flatMap { case (k, evs) =>
-      RedundantReduceTws.advance(k, evs, RedundantReduceTws.emptyReduceState,
-        Long.MaxValue, RedOoo, RedTtl, RedCleanup)._1
-    }.toSeq
-  }
-
   /** (luid, kind, insertionId, impressionId, actionId, insP, impP, actP,
     * missing, status, tsMs) — the JoinedEvent signature. */
   private type JoinedSig = (String, String, String, String, String,
@@ -133,55 +61,23 @@ class StreamingFlagshipSpec extends SparkSpec {
       col("missing"), col("status"), col("tsMs"))
     .as[JoinedSig].collect().toSet
 
-  private def batchMerged: DataFrame =
+  private def batchMerged: DataFrame = {
+    val (p2, p3) = batchPairs(stage3Rhs)
     FlatChainTws.mergeFlagshipDetails(
-      spark.createDataset(batchReduced).toDF()
+      FlatOutputJob.redundantReduce(p2, p3).toDF()
         .where(col("kind").isin("impression", "action")),
       insDetails, impDetails, actDetails)
+  }
 
   /** (luid, insertionId, startMs, nImps, nActs, impIds, actIds) */
   private type SessSig = (String, String, Long, Long, Long, String, String)
 
-  /** Batch sessions via the INDEPENDENT batch operator (one shuffle
-    * gaps-and-islands), not via SessionCogroupTws.advance. */
+  /** The batch job's flagship tail over the batch pairs. */
   private def batchSessions: Set[SessSig] = {
-    val ok = batchMerged.where(col("status") === "ok")
-    val imps = ok.where(col("kind") === "impression")
-      .select(col("platformId"), col("logUserId"), col("insertionId"),
-        col("impressionId").as("id"), col("tsMs"))
-    val acts = ok.where(col("kind") === "action")
-      .select(col("platformId"), col("logUserId"), col("insertionId"),
-        col("actionId").as("id"), col("tsMs"))
-    Cogroup.sessionPayloadCogroup(imps, acts,
-        Seq("platformId", "logUserId", "insertionId"), "tsMs", Gap,
-        "id", "id", tieType = "string")
-      .select(col("logUserId"), col("insertionId"), col("session_start_ms"),
-        col("n_left"), col("n_right"), col("left_ids"), col("right_ids"))
-      .as[SessSig].collect().toSet
+    val (p2, p3) = batchPairs(stage3Rhs)
+    sessSig(FlatOutputJob.flatResponseInsertions(p2, p3, insDetails,
+      impDetails, actDetails, Gap))
   }
-
-  // ---- streaming chain ---------------------------------------------
-
-  private def reducedStream(mem1: MemoryStream[ScopedEvent],
-      mem2: MemoryStream[ScopedEvent], mem3: MemoryStream[ScopedEvent]) = {
-    val s1 = InferredJoinTws.joinScopedStream(
-      mem1.toDS(), "1 second", W, OOO, rightOuter = true)
-    val p2 = FlatChainTws.nextStage(s1, toStage2Left,
-      mem2.toDS(), "1 second", W, OOO, rightOuter = false)
-    FlatChainTws.joinAndReduce(p2, toStage3Left, mem3.toDS(), "1 second",
-      W, OOO, SEP, RedOoo, RedTtl, RedCleanup)
-  }
-
-  private def sentinels(mem1: MemoryStream[ScopedEvent],
-      mem2: MemoryStream[ScopedEvent], mem3: MemoryStream[ScopedEvent],
-      q: org.apache.spark.sql.streaming.StreamingQuery, from: Long): Unit =
-    for (r <- 0 until 8) { // five stateful stages → more cascade rounds
-      val ts = from + r * 600000L
-      mem1.addData(ScopedEvent(0, "zz", 1, s"z1_$ts", "", ts, Seq("zz")))
-      mem2.addData(ScopedEvent(0, "zz", 1, s"z2_$ts", "", ts, Seq("zz")))
-      mem3.addData(ScopedEvent(0, "zz", 1, s"z3_$ts", "", ts, Seq("zz")))
-      q.processAllAvailable()
-    }
 
   private def sessSig(df: DataFrame): Set[SessSig] = df
     .where(col("logUserId") =!= "zz")
@@ -203,7 +99,7 @@ class StreamingFlagshipSpec extends SparkSpec {
     mem2.addData(stage2Rhs: _*)
     mem3.addData(stage3Rhs: _*)
     q.processAllAvailable()
-    sentinels(mem1, mem2, mem3, q, 600000L)
+    sentinels(mem1, mem2, mem3, q, 600000L, rounds = 8)
     q.stop()
     val got = sessSig(spark.table("flagship_sessions"))
     assert(got == batchSessions)
@@ -243,7 +139,7 @@ class StreamingFlagshipSpec extends SparkSpec {
     val q2 = start()
     mem3.addData(stage3Rhs: _*)
     q2.processAllAvailable()
-    sentinels(mem1, mem2, mem3, q2, 600000L)
+    sentinels(mem1, mem2, mem3, q2, 600000L, rounds = 8)
     q2.stop()
     assert(sessSig(spark.read.parquet(outDir)) == batchSessions)
   }
@@ -302,11 +198,8 @@ class StreamingFlagshipSpec extends SparkSpec {
     mem3.addData(stage3Rhs: _*)
     q1.processAllAvailable()
     def round(ts: Long): Unit = {
-      mem1.addData(ScopedEvent(0, "zz", 1, s"z1_$ts", "", ts, Seq("zz")))
-      mem2.addData(ScopedEvent(0, "zz", 1, s"z2_$ts", "", ts, Seq("zz")))
-      mem3.addData(ScopedEvent(0, "zz", 1, s"z3_$ts", "", ts, Seq("zz")))
       memU.addData(("zz", "", ts, ts))
-      q1.processAllAvailable()
+      sentinels(mem1, mem2, mem3, q1, ts, rounds = 1)
     }
     round(600000L); round(1200000L)
     // u3's record arrives LATE (old effective time, current stamp):
@@ -353,5 +246,111 @@ class StreamingFlagshipSpec extends SparkSpec {
     q2.processAllAvailable()
     q2.stop()
     assert(sessSig(spark.table("flagship_split_sessions")) == batchSessions)
+  }
+}
+
+/** The hand-built flagship stages StreamingFlagshipSpec and FlatChainTwsSpec
+  * share: stage-1 views × insertions, the static insertion enrichment,
+  * stage-2 impressions, the stage-2/3 LHS projections, the streaming
+  * chain up to the D3 reduce and the batch joins of the same inputs. */
+object FlagshipFixture {
+  val W = 10000L
+  val OOO = 1000L
+  val SEP = "\u0001" // cart-item pk split, as q35
+  // reduce sizing per RedundantReduceTws.advance: ooo ≥ W + 2*OOO,
+  // cleanup ≥ 2*W + OOO
+  val RedOoo = W + 2 * OOO + 3000L
+  val RedCleanup = 2 * W + OOO + 9000L
+
+  // u1: view v1 → insertion i1; u2: insertion i2 with no view (outer);
+  // u3: view v3 → insertion i3 (slight OOO)
+  val stage1 = Seq(
+    ScopedEvent(0, "u1", 0, "v1", "", 1000L, Seq("u1")),
+    ScopedEvent(0, "u1", 1, "i1", "", 2000L, Seq("u1")),
+    ScopedEvent(0, "u2", 1, "i2", "", 2000L, Seq("u2")),
+    ScopedEvent(0, "u3", 0, "v3", "", 1500L, Seq("u3")),
+    ScopedEvent(0, "u3", 1, "i3", "", 1400L, Seq("u3")))
+
+  // i1 gets an INFERRED impression mI@3000 (rid scope, matching content —
+  // held in stage-2 state until its window closes) and an EXACT impression
+  // mE@3500 (releasable on arrival): the event-time root is mI even though
+  // mE can release first — the case a first-arrival election gets wrong.
+  // i3 gets one exact impression m4.
+  val stage2Rhs = Seq(
+    ScopedEvent(0, "u1", 1, "mI", "", 3000L, Seq("R1", ""), Seq("C1")),
+    ScopedEvent(0, "u1", 1, "mE", "i1", 3500L, Seq("", "")),
+    ScopedEvent(0, "u3", 1, "m4", "i3", 2500L, Seq("", "")))
+
+  /** Static enrichment: iid → (request id, content, insertion ts). */
+  def insStatic(implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(("i1", "R1", "C1", 2000L), ("i2", "R2", "C2", 2000L),
+      ("i3", "R3", "C3", 1400L)).toDF("iid", "rid", "content", "its")
+  }
+
+  /** Upstream pairs (+ emittedAt) → stage-2 LHS rows, the q35 enrichment
+    * shape: scopes = (request id, view id, content), content ids carried
+    * for the ContentId filter. Shared verbatim by batch and streaming. */
+  def toStage2Left(ins: DataFrame)(pairs: DataFrame): DataFrame =
+    pairs.join(ins.withColumnRenamed("iid", "rightId"), "rightId")
+      .select(col("platformId"), col("logUserId"), lit(0).as("side"),
+        col("rightId").as("id"), lit("").as("parentId"), col("its").as("tsMs"),
+        array(col("rid"), col("leftId"), col("content")).as("scopes"),
+        array(col("content")).as("contentIds"), col("emittedAt"))
+
+  /** Stage-3 LHS from the matched stage-2 pairs (joinAndReduce filters);
+    * selfRef = the insertion id the self-pair carries to the reduction. */
+  def toStage3Left(pairs: DataFrame): DataFrame =
+    pairs.select(col("platformId"), col("logUserId"), lit(0).as("side"),
+      col("rightId").as("id"), lit("").as("parentId"),
+      col("rightTs").as("tsMs"), array(col("leftId")).as("scopes"),
+      array().cast("array<string>").as("contentIds"), col("emittedAt"),
+      col("leftId").as("selfRef"))
+
+  /** The fused program up to the reduce: joins 1-2 via nextStage, join 3
+    * + D3 fused by joinAndReduce — four stateful operators, one chain. */
+  def reducedStream(mem1: MemoryStream[ScopedEvent],
+      mem2: MemoryStream[ScopedEvent], mem3: MemoryStream[ScopedEvent])(
+      implicit spark: SparkSession) = {
+    val s1 = InferredJoinTws.joinScopedStream(
+      mem1.toDS(), "1 second", W, OOO, rightOuter = true)
+    val p2 = FlatChainTws.nextStage(s1, toStage2Left(insStatic),
+      mem2.toDS(), "1 second", W, OOO, rightOuter = false)
+    FlatChainTws.joinAndReduce(p2, toStage3Left, mem3.toDS(), "1 second",
+      W, OOO, SEP, RedOoo, FlatOutputJob.ReplaceTtlMs, RedCleanup)
+  }
+
+  /** Push all three source watermarks forward, one round at a time, so
+    * each bump cascades through the chained stateful operators. */
+  def sentinels(mem1: MemoryStream[ScopedEvent],
+      mem2: MemoryStream[ScopedEvent], mem3: MemoryStream[ScopedEvent],
+      q: StreamingQuery, from: Long, rounds: Int): Unit =
+    for (r <- 0 until rounds) {
+      val ts = from + r * 600000L
+      mem1.addData(ScopedEvent(0, "zz", 1, s"z1_$ts", "", ts, Seq("zz")))
+      mem2.addData(ScopedEvent(0, "zz", 1, s"z2_$ts", "", ts, Seq("zz")))
+      mem3.addData(ScopedEvent(0, "zz", 1, s"z3_$ts", "", ts, Seq("zz")))
+      q.processAllAvailable()
+    }
+
+  /** Three batch join stages over the same stage inputs through the same
+    * projections: the stage-2 (impression) and stage-3 (action) pairs. */
+  def batchPairs(stage3Rhs: Seq[ScopedEvent],
+      stage2Rhs: Seq[ScopedEvent] = FlagshipFixture.stage2Rhs)(
+      implicit spark: SparkSession): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    def pseudoEmitted(df: DataFrame) =
+      df.withColumn("emittedAt", timestamp_millis(col("rightTs")))
+    val p1 = InferredJoin.joinScopedBatch(stage1.toDS(), W, OOO, rightOuter = true)
+    val l2 = toStage2Left(insStatic)(pseudoEmitted(p1.toDF()))
+      .drop("emittedAt").as[ScopedEvent]
+    val p2 = InferredJoin.joinScopedBatch(
+      l2.union(stage2Rhs.toDS()), W, OOO, rightOuter = false)
+    val l3 = toStage3Left(pseudoEmitted(
+        p2.toDF().where(col("matchType").isin("exact", "inferred"))))
+      .drop("emittedAt", "selfRef").as[ScopedEvent]
+    val p3 = InferredJoin.joinScopedBatch(
+      l3.union(stage3Rhs.toDS()), W, OOO, rightOuter = false)
+    (p2.toDF(), p3.toDF())
   }
 }
