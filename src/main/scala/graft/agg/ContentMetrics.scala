@@ -3,11 +3,11 @@ package graft.agg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Content-metrics pipeline: sparse metric-column encoding + time rollups.
-  *
-  * Reproduces the reference ContentMetrics job's shape: each event type maps
-  * to sparse metric columns which a UNION-ALL stream feeds into tumbling
-  * hourly/daily/cumulative aggregates per content key
+import graft.jobs.ContentMetricsJob
+
+/** Content-metrics shape over the catalog's `events` table: each event
+  * type maps to sparse metric columns, summed per hour by the Content
+  * Metrics Job's own [[ContentMetricsJob.rollup]]
   * (P:job/contentmetrics/resources/1_create_unified_event_stream.sql:1-84,
   * 2_create_view_hourly_content_metrics.sql; SURVEY §2.6 A9-A11).
   *
@@ -20,6 +20,10 @@ object ContentMetrics {
 
   /** Dollars-double → integer cents (exact for 2-decimal money columns). */
   def cents(dollars: Column): Column = round(dollars * 100).cast("long")
+
+  private val metricCols =
+    Seq("view_count", "click_count", "signup_count", "error_count",
+      "purchase_count", "gmv_cents")
 
   /** Sparse metric encoding of the `events` table (SURVEY A11 analogue). */
   def unifiedMetrics(events: DataFrame): DataFrame = {
@@ -34,26 +38,12 @@ object ContentMetrics {
       when(t === "purchase", cents(col("value"))).otherwise(0L).as("gmv_cents"))
   }
 
-  private val metricCols =
-    Seq("view_count", "click_count", "signup_count", "error_count",
-      "purchase_count", "gmv_cents")
-
-  /** Tumbling rollup of the unified metric stream. */
-  def rollup(unified: DataFrame, tsMs: Column, sizeMs: Long,
-      extraKeys: Seq[String] = Nil): DataFrame = {
-    val bucketCol = Windows.bucket(tsMs, sizeMs).as("window_start_ms")
-    unified
-      .groupBy((bucketCol +: extraKeys.map(col)): _*)
-      .agg(sum(col(metricCols.head)).as(metricCols.head),
-        metricCols.tail.map(c => sum(col(c)).as(c)): _*)
-  }
-
   // cast("timestamp") is a no-op for session-TZ inputs and converts
-  // TIMESTAMP_NTZ wall-clocks under the UTC session TZ — keeps these
-  // rollups working over either parquet timestamp flavor.
+  // TIMESTAMP_NTZ wall-clocks under the UTC session TZ — keeps the
+  // rollup working over either parquet timestamp flavor.
   def hourly(events: DataFrame): DataFrame =
-    rollup(unifiedMetrics(events), unix_millis(col("ts").cast("timestamp")), 3600 * 1000L)
-
-  def daily(events: DataFrame): DataFrame =
-    rollup(unifiedMetrics(events), unix_millis(col("ts").cast("timestamp")), 86400 * 1000L)
+    ContentMetricsJob.rollup(unifiedMetrics(events),
+      Windows.bucket(unix_millis(col("ts").cast("timestamp")), 3600 * 1000L)
+        .as("window_start_ms"),
+      keys = Nil, metrics = metricCols)
 }

@@ -1,73 +1,80 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.agg.Windows
 import graft.schema.ActionType
+import graft.sinks.Sinks
 import graft.sources.LogRequestSplit
 
-/** Content Metrics Job, batch form (reference
-  * P:job/contentmetrics/ContentMetricsJob.java, SURVEY §3.3, A9-A11):
-  * union the typed streams into a sparse metric-column stream and roll up
-  * hourly and daily per (platformId, contentId), with dt/hour partition
-  * strings derived from the window start.
+/** Content Metrics Job (reference
+  * P:job/contentmetrics/ContentMetricsJob.java, SURVEY §3.3, A9-A11),
+  * stated once for batch and stream: union the typed streams into a
+  * sparse metric-column stream ([[unifiedEvents]], the [[MetricCols]])
+  * and sum it per (platformId, contentId) per time bucket ([[rollup]]).
+  * The batch buckets with `Windows.bucket`; `StreamingJobs.contentMetrics`
+  * buckets with an event-time `window`, which append mode requires.
+  * ContentMetricsParitySpec pins that both give the same hourly rows.
   */
 object ContentMetricsJob {
 
-  /** A11: per-event sparse metric columns. */
-  def unifiedEvents(envelopes: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    val views = LogRequestSplit.views(envelopes).toDF().select(
-      col("platformId"), col("contentId"),
-      col("timing.eventApiTimestamp").as("tsMs"),
-      lit(1L).as("view_count"), lit(0L).as("impression_count"),
-      lit(0L).as("navigate_count"), lit(0L).as("add_to_cart_count"),
-      lit(0L).as("checkout_count"), lit(0L).as("purchase_count"),
-      lit(0L).as("gmv_usd_micros"))
-    val imps = LogRequestSplit.impressions(envelopes).toDF().select(
-      col("platformId"), col("contentId"),
-      col("timing.eventApiTimestamp").as("tsMs"),
-      lit(0L).as("view_count"), lit(1L).as("impression_count"),
-      lit(0L).as("navigate_count"), lit(0L).as("add_to_cart_count"),
-      lit(0L).as("checkout_count"), lit(0L).as("purchase_count"),
-      lit(0L).as("gmv_usd_micros"))
-    val t = col("actionType")
-    // cart actions contribute per cart item with quantity × unit price
-    val acts = LogRequestSplit.actions(envelopes).toDF()
-      .withColumn("cartItem", explode_outer(col("cart")))
-      .select(col("platformId"),
-        coalesce(when(col("cartItem.contentId") =!= "", col("cartItem.contentId")),
-          col("contentId")).as("contentId"),
-        col("timing.eventApiTimestamp").as("tsMs"),
-        lit(0L).as("view_count"), lit(0L).as("impression_count"),
-        when(t === ActionType.Navigate, 1L).otherwise(0L).as("navigate_count"),
-        when(t === ActionType.AddToCart, 1L).otherwise(0L).as("add_to_cart_count"),
-        when(t === ActionType.Checkout, 1L).otherwise(0L).as("checkout_count"),
-        when(t === ActionType.Purchase, 1L).otherwise(0L).as("purchase_count"),
-        when(t === ActionType.Purchase,
-          coalesce(col("cartItem.quantity") * col("cartItem.priceMicrosPerUnit"), lit(0L)))
-          .otherwise(0L).as("gmv_usd_micros"))
-    views.unionByName(imps).unionByName(acts)
-  }
-
-  private val metricCols = Seq("view_count", "impression_count",
+  /** The seven A11 metric columns, in output order. */
+  val MetricCols: Seq[String] = Seq("view_count", "impression_count",
     "navigate_count", "add_to_cart_count", "checkout_count",
     "purchase_count", "gmv_usd_micros")
 
-  /** A9: tumbling rollup with dt/hour partition columns. */
-  def rollup(unified: DataFrame, sizeMs: Long): DataFrame = {
-    val start = Windows.bucket(col("tsMs"), sizeMs)
-    unified
-      .groupBy(start.as("window_start_ms"), col("platformId"), col("contentId"))
-      .agg(sum(col(metricCols.head)).as(metricCols.head),
-        metricCols.tail.map(c => sum(col(c)).as(c)): _*)
-      .withColumn("dt", date_format(timestamp_millis(col("window_start_ms")), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(timestamp_millis(col("window_start_ms")), "HH"))
+  /** The rollup key. */
+  val Keys: Seq[String] = Seq("platformId", "contentId")
+
+  /** A11: per-event sparse metric columns. */
+  def unifiedEvents(envelopes: DataFrame)(implicit spark: SparkSession): DataFrame = {
+    // one metric column per name, the given ones set and the rest 0
+    def metrics(set: (String, Column)*): Seq[Column] =
+      MetricCols.map(m => set.toMap.getOrElse(m, lit(0L)).as(m))
+    def typed(df: DataFrame, contentId: Column, set: (String, Column)*) =
+      df.select(col("platformId") +: contentId.as("contentId") +:
+        col("timing.eventApiTimestamp").as("tsMs") +: metrics(set: _*): _*)
+    val t = col("actionType")
+    def isType(a: Int) = when(t === a, 1L).otherwise(0L)
+    // cart actions contribute per cart item with quantity × unit price
+    val acts = LogRequestSplit.actions(envelopes).toDF()
+      .withColumn("cartItem", explode_outer(col("cart")))
+    typed(LogRequestSplit.views(envelopes).toDF(), col("contentId"),
+        "view_count" -> lit(1L))
+      .unionByName(typed(LogRequestSplit.impressions(envelopes).toDF(),
+        col("contentId"), "impression_count" -> lit(1L)))
+      .unionByName(typed(acts,
+        coalesce(when(col("cartItem.contentId") =!= "", col("cartItem.contentId")),
+          col("contentId")),
+        "navigate_count" -> isType(ActionType.Navigate),
+        "add_to_cart_count" -> isType(ActionType.AddToCart),
+        "checkout_count" -> isType(ActionType.Checkout),
+        "purchase_count" -> isType(ActionType.Purchase),
+        "gmv_usd_micros" -> when(t === ActionType.Purchase,
+          coalesce(col("cartItem.quantity") * col("cartItem.priceMicrosPerUnit"),
+            lit(0L))).otherwise(0L)))
   }
 
+  /** A9: sum each of `metrics` per `bucket` and `keys`. The batch passes
+    * `Windows.bucket(tsMs, size)`, the stream an event-time `window`. */
+  def rollup(unified: DataFrame, bucket: Column, keys: Seq[String],
+      metrics: Seq[String] = MetricCols): DataFrame =
+    unified.groupBy(bucket +: keys.map(col): _*)
+      .agg(sum(col(metrics.head)).as(metrics.head),
+        metrics.tail.map(c => sum(col(c)).as(c)): _*)
+
+  /** Tumbling batch rollup with dt/hour partition columns from the
+    * window start. */
+  private def tumbling(envelopes: DataFrame, sizeMs: Long)(
+      implicit spark: SparkSession): DataFrame =
+    Sinks.withDtHour(rollup(unifiedEvents(envelopes),
+      Windows.bucket(col("tsMs"), sizeMs).as("window_start_ms"), Keys),
+      "window_start_ms")
+
   def hourly(envelopes: DataFrame)(implicit spark: SparkSession): DataFrame =
-    rollup(unifiedEvents(envelopes), 3600 * 1000L)
+    tumbling(envelopes, 3600 * 1000L)
 
   def daily(envelopes: DataFrame)(implicit spark: SparkSession): DataFrame =
-    rollup(unifiedEvents(envelopes), 24 * 3600 * 1000L).drop("hour")
+    tumbling(envelopes, 24 * 3600 * 1000L).drop("hour")
 }

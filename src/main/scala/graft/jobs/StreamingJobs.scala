@@ -360,22 +360,27 @@ object StreamingJobs {
       .queryName("counter_last_seen").start()
   }
 
-  /** Content metrics: unified metric stream → hourly windowed rollup. */
+  /** Content metrics: the batch job's unified metric stream and rollup
+    * ([[ContentMetricsJob]]) over a 1-hour event-time window, all seven
+    * metric columns, the window start written as `eventApiTs`.
+    * ContentMetricsParitySpec pins its rows against
+    * `ContentMetricsJob.hourly`.
+    *
+    * The streams before this one summed four of the seven metrics. A
+    * checkpoint they wrote is refused on restart by Spark 4.1.2's
+    * state-schema check (the aggregation state value gains three sums):
+    * the query fails with `STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE`, as
+    * ContentMetricsParitySpec pins, so no guard of its own is needed. */
   def contentMetrics(envelopes: DataFrame, outDir: String,
       checkpointDir: String)(implicit spark: SparkSession): StreamingQuery = {
+    import ContentMetricsJob.{Keys, MetricCols}
     val unified = ContentMetricsJob.unifiedEvents(envelopes)
       .withColumn("eventTime", timestamp_millis(col("tsMs")))
       .withWatermark("eventTime", "1 minute")
-    val hourly = unified
-      .groupBy(window(col("eventTime"), "1 hour"),
-        col("platformId"), col("contentId"))
-      .agg(sum("view_count").as("view_count"),
-        sum("impression_count").as("impression_count"),
-        sum("purchase_count").as("purchase_count"),
-        sum("gmv_usd_micros").as("gmv_usd_micros"))
-      .select(unix_millis(col("window.start")).as("eventApiTs"),
-        col("platformId"), col("contentId"), col("view_count"),
-        col("impression_count"), col("purchase_count"), col("gmv_usd_micros"))
+    val hourly = ContentMetricsJob.rollup(unified,
+        window(col("eventTime"), "1 hour"), Keys)
+      .select(unix_millis(col("window.start")).as("eventApiTs") +:
+        (Keys ++ MetricCols).map(col): _*)
     Sinks.streamPartitioned(hourly, "eventApiTs", s"$outDir/hourly",
         s"$checkpointDir/hourly")
       .outputMode("append").queryName("content_metrics_hourly").start()

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -52,38 +51,13 @@ class DerivedAggTable(source: UpsertTable, derived: UpsertTable,
   require(derived.deleteCol.isDefined,
     "derived table needs a delete column to tombstone vanished groups")
 
-  private def fc(spark: SparkSession) = {
-    val f = new Path(markerPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    org.apache.hadoop.fs.FileContext.getFileContext(
-      f.getUri, spark.sparkContext.hadoopConfiguration)
-  }
-
   /** Last fully-applied source commit seq (0 = never refreshed). Torn or
     * absent markers read as 0 — the refresh replays, which is safe. */
-  def checkpoint(spark: SparkSession): Long = {
-    val c = fc(spark)
-    val p = c.makeQualified(new Path(markerPath))
-    if (!c.util.exists(p)) 0L
-    else {
-      val in = c.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      scala.util.Try(s.trim.toLong).getOrElse(0L)
-    }
-  }
+  def checkpoint(spark: SparkSession): Long =
+    MarkerFile.readLong(spark, markerPath).getOrElse(0L)
 
-  private def writeCheckpoint(spark: SparkSession, v: Long): Unit = {
-    val c = fc(spark)
-    val tmp = c.makeQualified(new Path(markerPath + ".tmp"))
-    val out = c.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    c.rename(tmp, c.makeQualified(new Path(markerPath)),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def writeCheckpoint(spark: SparkSession, v: Long): Unit =
+    MarkerFile.write(spark, markerPath, v.toString)
 
   /** One maintenance step; returns the new checkpoint (= the old one when
     * the source has no new commits — nothing is read or written then). */

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -55,42 +54,18 @@ class DerivedJoinTable(fact: UpsertTable, dim: UpsertTable,
   require(view.deleteCol.isDefined,
     "view needs a delete column to tombstone vanished join rows")
 
-  private def fc(spark: SparkSession) = {
-    val f = new Path(markerPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    org.apache.hadoop.fs.FileContext.getFileContext(
-      f.getUri, spark.sparkContext.hadoopConfiguration)
-  }
-
-  /** (fact seq, dim seq) both fully applied; (0,0) = never refreshed. */
+  /** (fact seq, dim seq) both fully applied; (0,0) = never refreshed.
+    * A torn side reads as 0. */
   def checkpoint(spark: SparkSession): (Long, Long) = {
-    val c = fc(spark)
-    val p = c.makeQualified(new Path(markerPath))
-    if (!c.util.exists(p)) (0L, 0L)
-    else {
-      val in = c.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      s.trim.split(",") match {
-        case Array(a, b) =>
-          (scala.util.Try(a.toLong).getOrElse(0L),
-            scala.util.Try(b.toLong).getOrElse(0L))
-        case _ => (0L, 0L)
-      }
+    def seq(s: String) = scala.util.Try(s.toLong).getOrElse(0L)
+    MarkerFile.read(spark, markerPath).map(_.trim.split(",")) match {
+      case Some(Array(a, b)) => (seq(a), seq(b))
+      case _ => (0L, 0L)
     }
   }
 
-  private def writeCheckpoint(spark: SparkSession, f0: Long, d0: Long): Unit = {
-    val c = fc(spark)
-    val tmp = c.makeQualified(new Path(markerPath + ".tmp"))
-    val out = c.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(s"$f0,$d0".getBytes("UTF-8")) finally out.close()
-    c.rename(tmp, c.makeQualified(new Path(markerPath)),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def writeCheckpoint(spark: SparkSession, f0: Long, d0: Long): Unit =
+    MarkerFile.write(spark, markerPath, s"$f0,$d0")
 
   /** One maintenance step; returns the new checkpoint. */
   def refresh(spark: SparkSession): (Long, Long) = {

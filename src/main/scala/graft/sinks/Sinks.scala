@@ -101,20 +101,6 @@ object Sinks {
             .where(col("__rn") === 1).drop("__rn"), client)
       }
 
-  /** Bucketed+sorted table write — the co-located-join lever at 100 TB:
-    * two tables bucketed the same way on the join key join WITHOUT a
-    * shuffle (Spark reads matching buckets pairwise; SinksSpec asserts
-    * the exchange-free plan). Worth one up-front shuffle per table for
-    * any key joined repeatedly (fact-to-fact chains, daily snapshots). */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-      bucketCols: Seq[String], nBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite").option("path", path)
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .format("parquet").saveAsTable(table)
-  }
-
   /** K5 CSV SQL sink (reference exports counter/metrics frames as CSV
     * alongside Kinesis; Kinesis itself is a format/connector swap on the
     * streaming writer, like Kafka — no connector in this container). */

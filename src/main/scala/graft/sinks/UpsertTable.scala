@@ -73,53 +73,12 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
   private def fs(spark: SparkSession) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readSmallFile(spark: SparkSession, p: String): Option[String] = {
-    val f = fs(spark)
-    val hp = new Path(p)
-    if (!f.exists(hp)) None
-    else {
-      val in = f.open(hp)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
-  private def writeSmallFile(spark: SparkSession, p: String, s: String): Unit = {
-    // temp-then-OVERWRITING-rename: a concurrent reader sees the old
-    // content or the new content, never a half-written file and never a
-    // no-file window (a delete-then-rename publish would let a reader of
-    // _base_max_commit observe "absent" → horizon 0 and silently pass an
-    // as-of pin that should fail). FileContext.rename(OVERWRITE) is the
-    // atomic-replace rename; plain FileSystem.rename refuses existing
-    // destinations.
-    // create AND rename both go through FileContext (the raw, non-checksum
-    // fs): creating via FileSystem would drop a .crc sidecar that the
-    // FileContext rename leaves behind, accumulating stale checksums next
-    // to the markers.
-    val f = fs(spark)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      f.getUri, spark.sparkContext.hadoopConfiguration)
-    val tmp = fc.makeQualified(new Path(p + ".tmp"))
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-    fc.rename(tmp, fc.makeQualified(new Path(p)),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Tolerant numeric marker read: an absent, empty or torn file reads as
-    * None — callers fall back to recomputable state instead of throwing. */
-  private def readSmallLong(spark: SparkSession, p: String): Option[Long] =
-    readSmallFile(spark, p).flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-
   /** Stored record schema (incl. partition cols + commit col), written at
     * the first upsert. Supplying it to every read keeps partition-column
     * TYPES stable — directory-value inference would e.g. turn a
     * "dt=2024-01-01" string column into a date. */
   private def recordedSchema(spark: SparkSession): Option[StructType] =
-    readSmallFile(spark, schemaPath)
+    MarkerFile.read(spark, schemaPath)
       .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Fail fast on schema drift: every commit after the first must carry
@@ -161,7 +120,7 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
     * already stamped on base rows and break later-commit-wins ties.
     * [[compact]] also heals the counter for the same reason. */
   def lastCommitSeq(spark: SparkSession): Long =
-    Seq(readSmallLong(spark, seqPath).getOrElse(0L),
+    Seq(MarkerFile.readLong(spark, seqPath).getOrElse(0L),
       commits(spark).lastOption.getOrElse(0L),
       baseMaxCommit(spark)).max
 
@@ -200,7 +159,7 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
     val seq0 = lastCommitSeq(spark)
     val seqs = Seq.tabulate(dfs.length)(i => seq0 + 1L + i)
     if (recordedSchema(spark).isEmpty)
-      writeSmallFile(spark, schemaPath, dfs.head
+      MarkerFile.write(spark, schemaPath, dfs.head
         .withColumn(CommitCol, lit(seqs.head).cast(LongType)).schema.json)
     dfs.foreach(validateSchema(spark, _))
     val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -237,7 +196,7 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
       require(f.rename(tmpDir(seq), new Path(f"$deltaPath/c$seq%09d")),
         s"rename failed publishing commit $seq")
     }
-    writeSmallFile(spark, seqPath, seqs.last.toString)
+    MarkerFile.write(spark, seqPath, seqs.last.toString)
     seqs
   }
 
@@ -378,7 +337,7 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
 
   /** Highest commit seq folded into the base (0 when no base). */
   private def baseMaxCommit(spark: SparkSession): Long =
-    readSmallLong(spark, s"$path/_base_max_commit").getOrElse(0L)
+    MarkerFile.readLong(spark, s"$path/_base_max_commit").getOrElse(0L)
 
   /** Incremental (CDC-style) read — Hudi's incremental query: the CURRENT
     * resolved record of every (partition, key) touched by a commit with
@@ -547,8 +506,8 @@ class UpsertTable(val path: String, val keyCols: Seq[String],
     // recovery is simply re-running compact(). The counter heal persists
     // max(counter, visible dirs) before those dirs are deleted, closing
     // the reissued-seq crash window lastCommitSeq documents.
-    writeSmallFile(spark, seqPath, lastCommitSeq(spark).toString)
-    writeSmallFile(spark, s"$path/_base_max_commit", seqs.max.toString)
+    MarkerFile.write(spark, seqPath, lastCommitSeq(spark).toString)
+    MarkerFile.write(spark, s"$path/_base_max_commit", seqs.max.toString)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {

@@ -226,7 +226,17 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("ContentMetricsJob rolls up metric columns per content and hour") {
-    val hourly = ContentMetricsJob.hourly(envelopes)
+    import graft.schema.{ActionType, CartContent}
+    // the generator's navigates and purchases, plus a two-item add-to-cart
+    // and a checkout with no cart
+    val gen = FakeLogGenerator.generate(opts)
+    val a0 = gen.head.actions.head
+    val env = (gen.head.copy(actions = gen.head.actions ++ Seq(
+        a0.copy(actionId = "a-add2", actionType = ActionType.AddToCart,
+          cart = Seq(CartContent("c-1", 1L, 5L), CartContent("c-2", 1L, 5L))),
+        a0.copy(actionId = "a-checkout", actionType = ActionType.Checkout))) +:
+      gen.tail).toDS().toDF()
+    val hourly = ContentMetricsJob.hourly(env)
     val total = hourly.agg(
       sum("view_count"), sum("impression_count"),
       sum("purchase_count"), sum("gmv_usd_micros"))
@@ -236,6 +246,15 @@ class PipelineSpec extends SparkSpec {
       opts.requestsPerView * opts.insertionsPerRequest)
     assert(total._3 > 0) // cart purchases exist
     assert(total._4 == total._3 * 2L * 1990000L) // qty 2 × unit price
+    // one per cart item, or one for an action with no cart
+    val acts = LogRequestSplit.actions(env).collect()
+    def expected(t: Int): Long =
+      acts.filter(_.actionType == t).map(_.cart.size max 1).sum.toLong
+    val counts = hourly.agg(sum("navigate_count"), sum("add_to_cart_count"),
+      sum("checkout_count")).as[(Long, Long, Long)].head()
+    assert(counts == ((expected(ActionType.Navigate),
+      expected(ActionType.AddToCart), expected(ActionType.Checkout))))
+    assert(counts._1 > 0 && counts._2 == 2 && counts._3 == 1)
     assert(hourly.columns.contains("dt") && hourly.columns.contains("hour"))
   }
 }

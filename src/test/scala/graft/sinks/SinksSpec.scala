@@ -53,28 +53,6 @@ class SinksSpec extends SparkSpec {
     assert(secs >= 1.0, s"30 cmds at 20/s should take >= 1s, took $secs")
   }
 
-  test("bucketed tables join without a shuffle (co-located join)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bkt").toString
-    val a = (1 to 1000).map(i => (i.toLong % 50, i.toLong)).toDF("k", "va")
-    val b = (1 to 1000).map(i => (i.toLong % 50, i.toLong * 2)).toDF("k", "vb")
-    Sinks.writeBucketed(a, "bkt_a", s"$dir/a", Seq("k"), 8, Seq("k"))
-    Sinks.writeBucketed(b, "bkt_b", s"$dir/b", Seq("k"), 8, Seq("k"))
-    // force the non-broadcast path: the point is the aligned-bucket join
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-        plan.take(1500))
-      assert(!plan.contains("Exchange"), plan.take(1500)) // buckets align
-      assert(joined.count() == 1000L * 1000L / 50L)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE bkt_a"); spark.sql("DROP TABLE bkt_b")
-    }
-  }
-
   test("CSV sink round-trips a frame") {
     val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
     val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
